@@ -37,10 +37,21 @@ object GraftSession {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
       .config("spark.ui.enabled", "false")
+      .config(localFsConf)
       .getOrCreate()
     muteExpectedWarnings()
     s
   }
+
+  /** Puts the session's `file:` filesystem on [[NioLocalFileSystem]] /
+    * [[NioLocalFs]], which write the same files, checksums and modes as
+    * Hadoop's stock classes without forking `chmod` and `readlink` for
+    * each checkpoint file. `spark.hadoop.*` keys reach Hadoop only when
+    * the builder creates the SparkContext: `getOrCreate` over a running
+    * context keeps that context's filesystem. */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
   /** Named suppression of log lines this codebase EXPECTS by design —
     * thousands of identical benign lines buried the per-query timing JSON

@@ -26,6 +26,17 @@ case class OrionSinkRecord(
   */
 object OrionSink {
 
+  // One HttpClient per JVM per connect timeout, shared by every writer:
+  // each client owns a selector thread, an executor and a connection
+  // pool, so building one per partition per batch leaked threads and
+  // never reused a connection.
+  private val clients =
+    new java.util.concurrent.ConcurrentHashMap[Int, HttpClient]()
+
+  private[ngsi] def client(connectTimeoutMs: Int): HttpClient =
+    clients.computeIfAbsent(connectTimeoutMs, ms =>
+      HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ms.toLong)).build())
+
   /** Rows must have columns (content, url, contentType, method) — the
     * shape produced by [[NgsiPipelines.toOrionUpdates]]. */
   class Writer(connectTimeoutMs: Int = 5000,
@@ -34,9 +45,7 @@ object OrionSink {
     @transient private var client: HttpClient = _
 
     override def open(partitionId: Long, epochId: Long): Boolean = {
-      client = HttpClient.newBuilder()
-        .connectTimeout(Duration.ofMillis(connectTimeoutMs.toLong))
-        .build()
+      client = OrionSink.client(connectTimeoutMs)
       true
     }
 

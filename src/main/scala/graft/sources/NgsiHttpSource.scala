@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReportsSourceMetrics}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,7 +64,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    512 MiB of estimated HEAP — 2 bytes per UTF-16 char plus
   *    per-record overhead) of accepted-but-uncommitted notifications.
   *    Admission is while-UNDER-the-cap (overshoot by at most one record,
-  *    so the hard bound is the cap + one payload, and an oversized
+  *    plus one more once the whole ring is planned so the next batch can
+  *    commit it: the hard bound is the cap + two payloads, and an oversized
   *    notification can never be starved by smaller traffic); at or over
   *    the cap the source answers 429 + Retry-After instead of acking —
   *    nothing is buffered or captured for a refused post. No ACKED event
@@ -225,7 +226,7 @@ private[sources] class NgsiHttpMicroBatchStream(
     historyChunkRecords: Long = NgsiHttpSource.DefaultHistoryChunkRecords,
     liveChunkBytes: Long = NgsiHttpSource.DefaultLiveChunkBytes,
     compactCommitted: Boolean = false)
-    extends MicroBatchStream {
+    extends MicroBatchStream with ReportsSourceMetrics {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -291,6 +292,8 @@ private[sources] class NgsiHttpMicroBatchStream(
   // continues after the durable history.
   private val buffer = new ArrayBuffer[BufferedNotification]()
   private var firstSeq = prevEnd
+  // highest end offset planned so far (guarded by the buffer lock)
+  private var plannedEnd = 0L
 
   // Back-pressure accounting for the live ring (guarded by the buffer
   // lock): estimated heap bytes of accepted-but-uncommitted
@@ -405,16 +408,23 @@ private[sources] class NgsiHttpMicroBatchStream(
           val cost = recBytes(rec)
           val accepted = buffer.synchronized {
             // admit while UNDER the cap (refuse at/over it): the ring can
-            // overshoot by at most one record, so the bound is
-            // maxBufferBytes + one payload — and admission never depends
-            // on the arriving record's size, so an oversized notification
+            // overshoot by at most one record (two, see below), so the
+            // bound is maxBufferBytes + two payloads — and admission never
+            // depends on the arriving record's size, so an oversized notification
             // cannot be starved by a stream of small ones: the moment
             // commits drain the ring below the cap, the next arrival
             // lands whatever its size. A 429'd notification is refused
             // BEFORE capture — never acked, so redelivery (if any) is the
             // broker's: Orion does not retry by default, hence the
             // refusal counter + log below.
-            if (bufferedBytes >= maxBufferBytes) false
+            // Spark commits a batch's offsets to the source only when it
+            // constructs the NEXT batch, and constructs one only for new
+            // data. So once every ring record is planned, one more record
+            // is admitted over the cap: without it a full ring planned in
+            // a single batch would never be committed, and every later
+            // post would be refused forever.
+            if (bufferedBytes >= maxBufferBytes &&
+                plannedEnd < firstSeq + buffer.size) false
             else {
               capture(rec) // durable first: 200 must imply on-disk when teeing
               buffer += rec
@@ -533,6 +543,7 @@ private[sources] class NgsiHttpMicroBatchStream(
         else Nil
       } else Nil
     val liveRows = buffer.synchronized {
+      plannedEnd = math.max(plannedEnd, e)
       val from = math.max(0L, s - firstSeq).toInt
       val until = math.max(0L, e - firstSeq).toInt
       buffer.slice(from, until).toArray
@@ -561,6 +572,16 @@ private[sources] class NgsiHttpMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     NgsiHttpReaderFactory
+
+  /** The ring's state in each `StreamingQueryProgress` source entry:
+    * records and estimated bytes buffered but not yet committed, and
+    * posts refused with 429 since this source started. */
+  override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] = {
+    val ringRecords = buffer.synchronized(buffer.size)
+    util.Map.of("ringRecords", ringRecords.toString,
+      "bufferedBytes", bufferedBytes.toString,
+      "refusedCount", refusedCount.toString)
+  }
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[SeqOffset].n

@@ -85,6 +85,7 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .getOrCreate()
     val clustered =
       try {
@@ -148,6 +149,7 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .config(Pinned.ModeConf, "reliable")
       .config(Pinned.DirConf, ckptDir.toString)
       .getOrCreate()
@@ -299,6 +301,7 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .getOrCreate()
     val (killedMidBatch, clustered) =
       try {
@@ -357,6 +360,7 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .config(Pinned.ModeConf, "reliable")
       .config(Pinned.DirConf, ckptDir.toString)
       .getOrCreate()

@@ -54,6 +54,7 @@ class ReliableCheckpointGcSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config(Pinned.ModeConf, "reliable")
       .config(Pinned.DirConf, ckptDir.toString)

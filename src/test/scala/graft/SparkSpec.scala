@@ -48,6 +48,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(s)

@@ -760,6 +760,45 @@ class NgsiHttpSourceSpec extends SparkSpec {
     intercept[IllegalArgumentException](load("liveChunkBytes" -> "0"))
   }
 
+  test("progress reports the ring's source metrics; refusedCount counts the 429s") {
+    import org.apache.spark.sql.streaming.Trigger
+    val port = freePort()
+    val q = spark.readStream.format("graft.sources.NgsiHttpSource")
+      .option("port", port)
+      // 88 bytes per 12-char headerless body: the ring refuses its 4th
+      .option("maxBufferBytes", 200L)
+      .load()
+      .writeStream.format("noop")
+      .trigger(Trigger.ProcessingTime("2 seconds"))
+      .start()
+    try {
+      waitListening(port)
+      def body(i: Int) = f"""{"n":"$i%04d"}"""
+      val burst = (0 until 20).map(i => post(port, body(i), Map.empty))
+      // a last post retried until it lands, so a batch (and its
+      // progress) follows the last refusal; it lands only because the
+      // source admits one record over the cap once the full ring is
+      // planned, else the ring would never be committed
+      var retries = 0
+      while (post(port, body(20), Map.empty) == 429 && retries < 300) {
+        retries += 1; Thread.sleep(100)
+      }
+      assert(retries < 300, "the ring never drained")
+      val refused = burst.count(_ == 429) + retries
+      assert(refused > 0, s"a 200-byte ring must refuse part of a burst: $burst")
+      q.processAllAvailable()
+      def reported: Option[java.util.Map[String, String]] =
+        Option(q.lastProgress).map(_.sources(0).metrics)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!reported.exists(_.get("refusedCount") == refused.toString) &&
+        System.nanoTime() < deadline) Thread.sleep(100)
+      val m = reported.getOrElse(fail("no progress reported"))
+      assert(m.get("refusedCount") == refused.toString, s"metrics $m")
+      assert(m.get("ringRecords").toLong >= 0L && m.get("bufferedBytes").toLong >= 0L,
+        s"metrics $m")
+    } finally q.stop()
+  }
+
   test("slow consumer: ingest ring is byte-bounded, 429s past the cap, " +
     "drains and recovers with every ACKED post delivered exactly once") {
     import org.apache.spark.sql.connector.read.InputPartition
