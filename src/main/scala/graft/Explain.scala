@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time one or more queries (warm, N reps) and optionally dump
   * the formatted physical plan — to stdout (`-p`) or one file per query
   * (`-o <dir>`, written as `<dir>/<name>.txt`). Usage:

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time a subset of SparkEntry.queries (same harness shape as
   * [[Bench]] — warm-up at sf0.001, then min-of-3 at the target SF) without

@@ -49,7 +49,6 @@ object Dedup {
   val BigramBandSize = 3
   val BigramTNum = 4
   val BigramTDen = 5
-  val BigramThreshold: Double = BigramTNum.toDouble / BigramTDen
   val CosineThreshold = 0.4 // embedding near-dup threshold (q45)
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
@@ -172,124 +171,91 @@ object Dedup {
 
   /** Connected components over an undirected edge list `(i, j)`.
     *
-    * Two interchangeable propagation strategies (identical results, both
-    * deterministic fixpoints), plus an adaptive default:
-    *  - `"label-prop"`: iterative min-label propagation (the Pregel/GraphX
+    * Two propagation loops with identical results (both deterministic
+    * fixpoints, both run through [[graft.Fixpoint]]):
+    *  - [[ccLabelProp]]: iterative min-label propagation (the Pregel/GraphX
     *    formulation) — every node starts labeled with itself, each round
     *    pushes labels across edges and keeps the min. Converges in
     *    O(component diameter) rounds: the cheapest per round, and the
     *    near-dup graphs this pipeline feeds it are dense and shallow
     *    (clones of one template), so diameters are small — but a long
     *    chain of pairwise-similar docs needs O(n) rounds.
-    *  - `"star"`: alternating large-star/small-star (Kiveris et al.,
-    *    "Connected Components in MapReduce and Beyond", SoCC'14) — each
-    *    round rewires strictly-larger neighbors (large-star) then smaller
-    *    neighbors (small-star) to the minimum of the closed neighborhood,
-    *    doubling the "pointer-jump" distance per round. Converges in
-    *    O(log n) rounds regardless of graph shape, at ~2x label-prop's
-    *    per-round cost.
-    *  - `"auto"` (default): label-prop for up to maxIters/2 rounds — the
-    *    fast path for the cluster shapes dedup actually produces — then,
-    *    if still moving (the diameter signature), switches to star for the
-    *    O(log n) bound instead of grinding out diameter rounds. Worst case
-    *    is maxIters/2 cheap wasted rounds; the cap can never be blown by
-    *    graph shape.
+    *  - [[ccAlternatingStars]]: alternating large-star/small-star (Kiveris
+    *    et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
+    *    each round rewires strictly-larger neighbors (large-star) then
+    *    smaller neighbors (small-star) to the minimum of the closed
+    *    neighborhood, doubling the "pointer-jump" distance per round.
+    *    Converges in O(log n) rounds regardless of graph shape, at ~2x
+    *    label-prop's per-round cost.
+    *
+    * This entry point runs label-prop for up to maxIters/2 rounds — the
+    * fast path for the cluster shapes dedup actually produces — then, if
+    * still moving (the diameter signature), switches to star for the
+    * O(log n) bound instead of grinding out diameter rounds. Worst case is
+    * maxIters/2 cheap wasted rounds; the cap can never be blown by graph
+    * shape. Callers that know their graphs are long-diameter (grid DBSCAN's
+    * density blobs) call [[ccAlternatingStars]] directly.
     *
     * Scale notes: the edge list is near-dup PAIRS — a tiny fraction of the
     * corpus — and is materialized once (eager localCheckpoint) so the
     * upstream LSH pipeline is not re-run per round; each round is a couple
     * of equi-joins + hash aggs on pair-sized data, and the per-round
-    * convergence check is a count (no data to the driver). Both variants
-    * run to fixpoint and fail loudly if the iteration cap is hit.
+    * convergence check is a count (no data to the driver).
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 25,
-                          algorithm: String = "auto"): DataFrame =
-    algorithm match {
-      case "auto" =>
-        // Materialize the pair set before trying label-prop so a fallback
-        // to star re-reads checkpointed pairs instead of re-running the
-        // (typically expensive) upstream LSH pipeline.
-        val p = pairs.pin(true)
-        val res = ccLabelProp(p, maxIters / 2, failOnCap = false)
-          .getOrElse(ccAlternatingStars(p, maxIters)._1)
-        // both variants return frames backed by their own (eager)
-        // checkpoints, so the pair snapshot's blocks are dead
-        graft.FrameBlocks.release(p)
-        res
-      case "label-prop" =>
-        ccLabelProp(pairs, maxIters, failOnCap = true).get
-      case "star"       => ccAlternatingStars(pairs, maxIters)._1
-      case other => throw new IllegalArgumentException(
-        s"unknown connectedComponents algorithm '$other' (auto | label-prop | star)")
-    }
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
+    // Materialize the pair set before trying label-prop so a fallback to
+    // star re-reads checkpointed pairs instead of re-running the
+    // (typically expensive) upstream LSH pipeline.
+    val p = pairs.pin(true)
+    val res =
+      try ccLabelProp(p, maxIters / 2)._1
+      catch { case _: graft.Fixpoint.NotConverged => ccAlternatingStars(p, maxIters)._1 }
+    // both loops return frames backed by their own (eager) checkpoints, so
+    // the pair snapshot's blocks are dead
+    graft.FrameBlocks.release(p)
+    res
+  }
 
-  /** Min-label propagation to fixpoint. Returns None if the round cap is
-    * hit with labels still moving (so `"auto"` can switch strategy) — or
-    * throws when `failOnCap`: a silent partially-merged return would
-    * under-merge q46/q47 with no signal. */
-  private def ccLabelProp(pairs: DataFrame, maxIters: Int,
-                          failOnCap: Boolean): Option[DataFrame] = {
+  /** Min-label propagation to fixpoint; returns (labels, rounds). Throws
+    * [[graft.Fixpoint.NotConverged]] if labels are still moving after
+    * `maxIters` rounds (so [[connectedComponents]] can switch loops): a
+    * silent partially-merged return would under-merge q46/q47 with no
+    * signal. */
+  private[graft] def ccLabelProp(pairs: DataFrame, maxIters: Int): (DataFrame, Int) = {
     // Both lazy: round 1's convergence count is the materializing action
     // for edges, the initial labels AND round 1's output in ONE job (the
-    // eager pins paid three). Every release below happens only after a
-    // count that has already materialized the released frame's successor.
+    // eager pins paid three).
     val edges = pairs
       .select(col("i").as("src"), col("j").as("dst"))
       .union(pairs.select(col("j").as("src"), col("i").as("dst")))
       .pin(false)
-    var pinned = edges.select(col("src").as("id")).distinct()
+    val initial = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
       .pin(false)
-    var labels = pinned
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      it += 1
-      val pushed = edges.join(labels, col("src") === col("id"))
-        .select(col("dst").as("id"), col("lbl"), lit(false).as("own"))
-      // carry each node's PREVIOUS label through the round aggregate
-      // (labels contributes exactly one `own` row per id, so
-      // min(when(own)) IS the old label): the convergence check below
-      // becomes a filter scan of the freshly-pinned round output instead
-      // of a node-sized join+shuffle against the previous table — one
-      // shuffle less per round (measured q70: 40 → 31 jobs)
-      val next = labels.select(col("id"), col("lbl"), lit(true).as("own"))
-        .union(pushed)
-        .groupBy(col("id")).agg(min(col("lbl")).as("lbl"),
-          min(when(col("own"), col("lbl"))).as("old"))
-        .pin(false)
-      // the count IS the materializing action for the lazy pin (one job
-      // per round instead of two); the release below only runs after it
-      changed = next.filter(col("lbl") < col("old")).count()
-      // superseded round: drop its checkpoint blocks eagerly (see the
-      // matching note in ccAlternatingStars)
-      graft.FrameBlocks.release(pinned)
-      pinned = next
-      labels = next.select(col("id"), col("lbl"))
-    }
-    // the result (if any) is itself checkpointed, so the edge blocks are
-    // dead either way
-    graft.FrameBlocks.release(edges)
-    if (changed > 0) {
-      graft.FrameBlocks.release(pinned)
-      if (failOnCap)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters rounds " +
-            "(component diameter exceeds the cap); raise maxIters or switch " +
-            "the propagation step to large-star/small-star")
-      None
-    } else {
-      // Re-checkpoint AFTER the rename so the returned frame is rooted at
-      // its own LogicalRDD — FrameBlocks.release is deliberately shallow,
-      // and callers that retire superseded label tables (LineageStream)
-      // must be able to free this frame's storage directly. Returning the
-      // Project over the loop checkpoint would pin that checkpoint forever.
-      val out = labels
-        .select(col("id").as("doc_id"), col("lbl").as("component"))
-        .pin(true)
-      graft.FrameBlocks.release(pinned)
-      Some(out)
-    }
+    graft.Fixpoint.run("ccLabelProp", maxIters, window = 1,
+        initial, 1L, inputs = Seq(edges))(
+      step = { g =>
+        val labels = g.df.select(col("id"), col("lbl"))
+        val pushed = edges.join(labels, col("src") === col("id"))
+          .select(col("dst").as("id"), col("lbl"), lit(false).as("own"))
+        // carry each node's PREVIOUS label through the round aggregate
+        // (labels contributes exactly one `own` row per id, so
+        // min(when(own)) IS the old label): the convergence check becomes a
+        // filter scan of the freshly-pinned round output instead of a
+        // node-sized join+shuffle against the previous table — one shuffle
+        // less per round (measured q70: 40 → 31 jobs)
+        labels.select(col("id"), col("lbl"), lit(true).as("own"))
+          .union(pushed)
+          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"),
+            min(when(col("own"), col("lbl"))).as("old"))
+      },
+      measure = _.filter(col("lbl") < col("old")).count(),
+      converged = (_, next) => next.value == 0,
+      // rename INSIDE the eager result pin so the returned frame is rooted
+      // at its own LogicalRDD — FrameBlocks.release is deliberately
+      // shallow, and callers that retire superseded label tables
+      // (LineageStream) must be able to free this frame's storage directly
+      result = w => w.last.df.select(col("id").as("doc_id"), col("lbl").as("component")))
   }
 
   /** Partition-local union-find contraction — the map-side combine of
@@ -375,85 +341,70 @@ object Dedup {
     * per-round job overhead; at 100 TB it is the per-round edge-sized
     * shuffle — contraction cuts both (measured on q225: 6 → 3 rounds,
     * 4.1 s → see SCALE.md). */
-  private[operators] def ccAlternatingStars(pairs: DataFrame,
-                                            maxIters: Int = 25,
-                                            contract: Boolean = true): (DataFrame, Int) = {
+  private[graft] def ccAlternatingStars(pairs: DataFrame,
+                                        maxIters: Int = 25,
+                                        contract: Boolean = true): (DataFrame, Int) = {
     val canonical = pairs
       .select(greatest(col("i"), col("j")).as("src"),
         least(col("i"), col("j")).as("dst"))
       .filter(col("src") =!= col("dst"))
-    // lazy pin + count: the count below is the materializing action (one
-    // job instead of eager-pin + count's two); blocks are complete before
-    // any later release
-    var edges = (if (contract) ccLocalContract(canonical) else canonical)
+    // lazy pin + count: the count is the materializing action (one job
+    // instead of eager-pin + count's two), and round 1's fixpoint test
+    // compares against it
+    val edges = (if (contract) ccLocalContract(canonical) else canonical)
       .distinct().pin(false)
-    var edgeCount = edges.count()
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      it += 1
-      // large-star: for each node u, m = min(closed neighborhood); every
-      // neighbor v > u is rewired to (v, m). Output keeps src > dst because
-      // the emitted src is a strictly-larger neighbor of u and m <= u.
-      val nbrs = edges
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      val lmins = nbrs.groupBy(col("src"))
-        .agg(least(min(col("dst")), col("src")).as("m"))
-      // NO dedup of the large-star output (r17): duplicates cannot change
-      // smins' per-src min, and the round's small-star output is distinct'd
-      // below, so the round is SET-identical with or without it — while the
-      // removed `.distinct()` was a full exchange of the round's LARGEST
-      // relation (the rewired edge multiset). Duplicate volume is bounded:
-      // |large| <= |nbrs| = 2|edges| either way. Measured on q225:
-      // exchanges/round 4 -> 3, jobs 45 -> see OPTIMIZATION_r17.md.
-      val large = nbrs.join(lmins, "src")
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      // small-star: src > dst everywhere, so per src the closed-neighborhood
-      // min is just min(dst); rewire every smaller neighbor AND src itself
-      // to it.
-      val smins = large.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      val joined = large.join(smins, "src")
-      val small = joined.select(col("dst").as("src"), col("m").as("dst"))
-        .union(joined.select(col("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-        .pin(false)
-      // Fixpoint test on the materialized round output: both sides are
-      // distinct sets, so equal counts + empty one-way difference = equal.
-      // The pin is LAZY and this count is the action that materializes it —
-      // one job per round where the eager pin + count pair was two (the
-      // blocks are complete before any release below, so the replay
-      // invariant holds exactly as with the eager pin).
-      val smallCount = small.count()
-      converged = smallCount == edgeCount && small.except(edges).isEmpty
-      edgeCount = smallCount
-      // The superseded round's checkpoint blocks are dead from here on;
-      // drop them NOW instead of waiting for a driver full-GC to trigger
-      // the ContextCleaner — in a long session (or the bench's repeated
-      // runs) the pinned blocks otherwise accumulate until memory
-      // pressure shows up as monotonically slowing CC queries.
-      graft.FrameBlocks.release(edges)
-      edges = small
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"ccAlternatingStars did not converge in $maxIters rounds")
-    // The fixpoint IS the complete star forest: every non-root node of the
-    // input appears exactly once as a member src (pointing at its
-    // component min) and every root as a dst — self-pair-only nodes were
-    // filtered identically under the old nodes-frame framing, and
-    // singleton components cannot arise from a pair list. So the labeling
-    // reads straight off the edge list (members ∪ roots), skipping the
-    // corpus-node-sized distinct + left join a separate nodes frame cost.
-    val labels = edges
-      .select(col("src").as("doc_id"), col("dst").as("component"))
-      .union(edges.select(col("dst")).distinct()
-        .select(col("dst").as("doc_id"), col("dst").as("component")))
-      .pin(true)
-    graft.FrameBlocks.release(edges)
-    (labels, it)
+    graft.Fixpoint.run("ccAlternatingStars", maxIters, window = 1,
+        edges, edges.count())(
+      step = { g =>
+        val edges = g.df
+        // large-star: for each node u, m = min(closed neighborhood); every
+        // neighbor v > u is rewired to (v, m). Output keeps src > dst
+        // because the emitted src is a strictly-larger neighbor of u and
+        // m <= u.
+        val nbrs = edges
+          .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        val lmins = nbrs.groupBy(col("src"))
+          .agg(least(min(col("dst")), col("src")).as("m"))
+        // NO dedup of the large-star output (r17): duplicates cannot change
+        // smins' per-src min, and the round's small-star output is
+        // distinct'd below, so the round is SET-identical with or without
+        // it — while the removed `.distinct()` was a full exchange of the
+        // round's LARGEST relation (the rewired edge multiset). Duplicate
+        // volume is bounded: |large| <= |nbrs| = 2|edges| either way.
+        // Measured on q225: exchanges/round 4 -> 3, jobs 45 -> see
+        // OPTIMIZATION_r17.md.
+        val large = nbrs.join(lmins, "src")
+          .filter(col("dst") > col("src"))
+          .select(col("dst").as("src"), col("m").as("dst"))
+          .filter(col("src") =!= col("dst"))
+        // small-star: src > dst everywhere, so per src the
+        // closed-neighborhood min is just min(dst); rewire every smaller
+        // neighbor AND src itself to it.
+        val smins = large.groupBy(col("src")).agg(min(col("dst")).as("m"))
+        val joined = large.join(smins, "src")
+        joined.select(col("dst").as("src"), col("m").as("dst"))
+          .union(joined.select(col("src"), col("m").as("dst")))
+          .filter(col("src") =!= col("dst"))
+          .distinct()
+      },
+      measure = _.count(),
+      // both sides are distinct sets, so equal counts + empty one-way
+      // difference = equal
+      converged = (prev, next) =>
+        next.value == prev.value && next.df.except(prev.df).isEmpty,
+      // The fixpoint IS the complete star forest: every non-root node of the
+      // input appears exactly once as a member src (pointing at its
+      // component min) and every root as a dst — self-pair-only nodes were
+      // filtered identically under the old nodes-frame framing, and
+      // singleton components cannot arise from a pair list. So the labeling
+      // reads straight off the edge list (members ∪ roots), skipping the
+      // corpus-node-sized distinct + left join a separate nodes frame cost.
+      result = { w =>
+        val edges = w.last.df
+        edges.select(col("src").as("doc_id"), col("dst").as("component"))
+          .union(edges.select(col("dst")).distinct()
+            .select(col("dst").as("doc_id"), col("dst").as("component")))
+      })
   }
 
   /** Incremental connected-components refresh — the operator behind the
@@ -921,9 +872,6 @@ object Dedup {
           size(col("sha"))).as("containment"))
       .filter(col("containment") >= 0.8)
   }
-
-  private def containmentFromDigests(base: DataFrame): DataFrame =
-    containmentFromDigests(base, 1)
 
   private def containmentFromDigests(
       base: DataFrame, verifyShards: Int): DataFrame = {

@@ -261,72 +261,62 @@ object Graph {
     * edge frame — factored out like [[pagerankOn]] so the streaming twin
     * can answer HITS over its incrementally-maintained pair table. */
   private[graft] def hitsOn(e: DataFrame): DataFrame = {
-      var h = e.select(col("src").as("node")).distinct()
-        .select(col("node"), lit(Scale).as("h"))
-      var a: DataFrame = null
-      // Round discipline (the CC-loop rule): each sweep's RAW aggregate is
-      // checkpointed — both its consumers read one materialized node-sized
-      // frame instead of re-running the edge join — and the PREVIOUS
-      // round's checkpoints are released as soon as the frame that
-      // supersedes them materializes. Without the release, every hitsOn
-      // call (one per micro-batch in GraphRankStream.hits) pinned
-      // 2×HitsIters node-sized RDDs until session end.
-      //
-      // The normalization max is FOLDED into the pin materialization
-      // (r17): the pin is lazy and the 1-row max aggregate is the action
-      // that materializes it, so the sweep's scalar arrives on the driver
-      // from the SAME job that stores the blocks and rides back into the
-      // rescale as a literal — where the eager pin + agg + broadcast
-      // exchange paid three scheduling round-trips per side per sweep
-      // (measured q208: 26 jobs -> see OPTIMIZATION_r17.md). A 1-row max
-      // fetch is the same driver traffic the broadcast exchange's collect
-      // paid; the arithmetic is unchanged (same decimal(38) product, same
-      // integer div by the same exact max).
-      var prevARaw: DataFrame = null
-      var prevHRaw: DataFrame = null
-      def maxOf(raw: DataFrame): Long = {
+    // Round discipline ([[graft.Fixpoint]], window 2): a generation is one
+    // half-sweep's RAW aggregate — both its consumers read one materialized
+    // node-sized frame instead of re-running the edge join — and the
+    // window keeps the newest authority and hub sweeps alive (the final
+    // top-N reads both). Without the release, every hitsOn call (one per
+    // micro-batch in GraphRankStream.hits) pinned 2×HitsIters node-sized
+    // RDDs until session end.
+    //
+    // The normalization max is FOLDED into the pin materialization (r17):
+    // the 1-row max aggregate is the action that materializes the lazy pin,
+    // so the sweep's scalar arrives on the driver from the SAME job that
+    // stores the blocks and rides back into the rescale as a literal —
+    // where the eager pin + agg + broadcast exchange paid three scheduling
+    // round-trips per side per sweep (measured q208: 26 jobs -> see
+    // OPTIMIZATION_r17.md). A 1-row max fetch is the same driver traffic
+    // the broadcast exchange's collect paid; the arithmetic is unchanged
+    // (same decimal(38) product, same integer div by the same exact max).
+    def rescaled(g: graft.Fixpoint.Gen, key: String, score: String) =
+      g.df.select(col(key).as("node"),
+        expr(s"(cast(raw as decimal(38,0)) * $Scale) div ${g.value}L").as(score))
+    def authorities(araw: graft.Fixpoint.Gen) = rescaled(araw, "dst", "a")
+    def hubs(hraw: graft.Fixpoint.Gen) = rescaled(hraw, "src", "h")
+    val h0 = e.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(Scale).as("h"))
+    graft.Fixpoint.run("hitsOn", 2 * HitsIters, window = 2, h0, 1L)(
+      // odd rounds sweep hubs into authorities, even rounds back
+      step = { g =>
+        if (g.round % 2 == 0) {
+          val h = if (g.round == 0) g.df else hubs(g)
+          h.hint("shuffle_hash").join(e, col("node") === col("src"))
+            .groupBy(col("dst")).agg(sum(col("h")).as("raw"))
+        } else
+          authorities(g).hint("shuffle_hash")
+            .join(e.select(col("src"), col("dst").as("node")), "node")
+            .groupBy(col("src")).agg(sum(col("a")).as("raw"))
+      },
+      measure = { raw =>
         val r = raw.agg(max(col("raw")).as("mx")).head()
         if (r.isNullAt(0)) 1L else r.getLong(0) // empty side: no rows to rescale anyway
-      }
-      (1 to HitsIters).foreach { _ =>
-        val araw = h.hint("shuffle_hash").join(e, col("node") === col("src"))
-          .groupBy(col("dst")).agg(sum(col("h")).as("raw"))
-          .pin(false)
-        val amax = maxOf(araw) // materializes araw's checkpoint
-        // araw materialized ⇒ h (rooted at the previous hraw) is dead
-        if (prevHRaw ne null) graft.FrameBlocks.release(prevHRaw)
-        a = araw.select(col("dst").as("node"),
-          expr(s"(cast(raw as decimal(38,0)) * $Scale) div ${amax}L").as("a"))
-        val hraw = a.hint("shuffle_hash")
-          .join(e.select(col("src"), col("dst").as("node")), "node")
-          .groupBy(col("src")).agg(sum(col("a")).as("raw"))
-          .pin(false)
-        val hmax = maxOf(hraw) // materializes hraw's checkpoint
-        // hraw materialized ⇒ the previous round's araw is dead (the
-        // current araw still backs `a`, read by the final top-N)
-        if (prevARaw ne null) graft.FrameBlocks.release(prevARaw)
-        h = hraw.select(col("src").as("node"),
-          expr(s"(cast(raw as decimal(38,0)) * $Scale) div ${hmax}L").as("h"))
-        prevARaw = araw
-        prevHRaw = hraw
-      }
-      val topAuth = a.orderBy(col("a").desc, col("node"))
-        .limit(HitsTopN)
-        .select(col("node").as("node_id"), lit("authority").as("role"),
-          col("a").as("score"))
-      val topHub = h.orderBy(col("h").desc, col("node"))
-        .limit(HitsTopN)
-        .select(col("node").as("node_id"), lit("hub").as("role"),
-          col("h").as("score"))
-      // Materialize the (≤ 2·HitsTopN row) answer as its OWN checkpoint so
-      // the final round's node-sized frames release too; the returned
-      // frame is LogicalRDD-rooted, so stream callers can retire it
-      // through FrameBlocks like any other.
-      val out = topAuth.unionByName(topHub).pin(true)
-      graft.FrameBlocks.release(prevARaw)
-      graft.FrameBlocks.release(prevHRaw)
-      out
-      }
+      },
+      converged = (_, next) => next.round == 2 * HitsIters,
+      // the (≤ 2·HitsTopN row) answer is the eagerly pinned result, so the
+      // final sweeps' node-sized frames release too and stream callers can
+      // retire the LogicalRDD-rooted answer through FrameBlocks
+      result = { case Seq(araw, hraw) =>
+        val topAuth = authorities(araw).orderBy(col("a").desc, col("node"))
+          .limit(HitsTopN)
+          .select(col("node").as("node_id"), lit("authority").as("role"),
+            col("a").as("score"))
+        val topHub = hubs(hraw).orderBy(col("h").desc, col("node"))
+          .limit(HitsTopN)
+          .select(col("node").as("node_id"), lit("hub").as("role"),
+            col("h").as("score"))
+        topAuth.unionByName(topHub)
+      })._1
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -1004,7 +1004,7 @@ object Similarity {
       // density blobs are long-diameter by construction (chains of
       // eps-balls), so min-label propagation would burn its round cap
       // before converging — go straight to the O(log n)-round star CC
-      val comp = Dedup.connectedComponents(corePairs, algorithm = "star")
+      val comp = Dedup.ccAlternatingStars(corePairs)._1
         .select(col("doc_id").as("id"), col("component"))
       // a core with no core neighbor is its own singleton cluster
       val coreLbl = cores.join(comp, Seq("id"), "left")
@@ -1035,7 +1035,7 @@ object Similarity {
           coalesce(col("role"), lit("noise")).as("role"),
           coalesce(col("cluster"), lit(-1L)).as("cluster"))
         // re-root the result so the intermediate checkpoints can be freed
-        // NOW (the ccLabelProp discipline — returning a plan over them
+        // NOW (the graft.Fixpoint discipline — returning a plan over them
         // would pin their blocks for the session)
         .pin(true)
       graft.FrameBlocks.release(pts)

@@ -267,11 +267,6 @@ object TextAnalysis {
           concat(lit(" "), col("ml"), lit("  "), col("mr"), lit(" ")),
           concat(lit(" "), col("ml"), col("mr"), lit(" "))).as("seq"))
 
-  /** Freq-weighted corpus symbol total of a (w, freq, seq) frame — 1 row. */
-  private def bpeTotal(df: DataFrame): DataFrame =
-    df.agg(sum(col("freq") * size(split(trim(col("seq")), "  ")))
-      .as("total"))
-
   // The merge ladder is shared by THREE queries (q178 discovery, q184
   // compression audit, q185 encoding) and is identical across them — the
   // [[graft.operators.Dedup]] memo discipline applies: compute the
@@ -414,7 +409,7 @@ object TextAnalysis {
       val (tops, seqs) = bpeLadder(s, d)
       // Stage totals as ONE tall aggregate instead of two 1-row broadcast
       // aggs per round: the per-round crossJoin form planned 2·R separate
-      // bpeTotal subtrees and broadcast builds (R=24 → 52 jobs measured on
+      // per-stage total subtrees and broadcast builds (R=24 → 52 jobs measured on
       // the warm ladder); tagging the pinned stage frames with their index
       // and aggregating once yields the identical 25 integers in a single
       // vocabulary-sized pass, met by two broadcast joins on the round key.

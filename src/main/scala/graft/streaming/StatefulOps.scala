@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Custom streaming state operators (`flatMapGroupsWithState` /
   * `mapGroupsWithState`) — the extension point the reference's keyed window

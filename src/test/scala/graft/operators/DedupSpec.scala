@@ -94,7 +94,7 @@ class DedupSpec extends SparkSpec {
   test("star CC matches label-prop on chain, cycle, and disjoint pair") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("i", "j")
-    val got = Dedup.connectedComponents(pairs, algorithm = "star").collect()
+    val got = Dedup.ccAlternatingStars(pairs)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
@@ -103,13 +103,10 @@ class DedupSpec extends SparkSpec {
   test("star CC converges in O(log n) rounds on an adversarial 10k-node path") {
     // A 10k-node path graph has diameter 10k: min-label propagation needs
     // ~10k rounds (it exhausts any sane cap), while alternating large/small
-    // star — the DEFAULT — halves the remaining depth every round.
+    // star — the default's fallback — halves the remaining depth every round.
     val n = 10000
     val path = spark.range(n - 1)
       .select(col("id").as("i"), (col("id") + 1).as("j"))
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(path, maxIters = 10, algorithm = "label-prop")
-    }
     // contract = false pins the distributed loop itself: the union-find
     // pre-pass would collapse the whole path inside one partition.
     val (labels, rounds) =
@@ -161,9 +158,10 @@ class DedupSpec extends SparkSpec {
   test("star CC matches label-prop on the real q42 pair set") {
     val pairs = Dedup.queries("q42_dedup_lsh_pairs")(spark, sfDir)
       .select(col("i"), col("j"))
-    val lp = Dedup.connectedComponents(pairs, algorithm = "label-prop").collect()
+    // the default entry point (label-prop, star only on its fallback)
+    val lp = Dedup.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val st = Dedup.connectedComponents(pairs, algorithm = "star").collect()
+    val st = Dedup.ccAlternatingStars(pairs)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lp == st && lp.nonEmpty)
   }

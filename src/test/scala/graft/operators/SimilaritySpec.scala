@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SimilaritySpec extends SparkSpec {
-  import spark.implicits._
 
   test("q221: PCA model is orthonormal with descending eigenvalues; " +
       "projections exact; component variance equals the eigenvalue") {

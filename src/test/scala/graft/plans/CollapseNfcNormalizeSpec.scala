@@ -6,7 +6,6 @@ import graft.SparkSpec
 import graft.functions.GraftFunctions
 
 class CollapseNfcNormalizeSpec extends SparkSpec {
-  import spark.implicits._
 
   private def nfc(c: org.apache.spark.sql.Column) =
     call_function("graft_nfc", c)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
@@ -75,17 +76,31 @@ class RetiredFramesSpec extends SparkSpec {
     // round-release discipline each call pinned 2×HitsIters node-sized
     // RDDs until session end. Now the only surviving registration is the
     // (≤ 2·topN row) result frame itself, which is checkpoint-rooted so
-    // the caller can retire it like any other.
+    // the caller can retire it like any other. The CC loops share that
+    // discipline (graft.Fixpoint): the default entry point when label-prop
+    // converges and when it falls back to star, and the direct star call.
     val e = Seq((0L, 1L), (0L, 3L), (2L, 1L)).toDF("src", "dst")
       .localCheckpoint(true)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = graft.operators.Graph.hitsOn(e)
-    assert(out.count() > 0)
-    val outId = rddId(out)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before - outId
-    assert(leaked.isEmpty, s"hitsOn pinned extra checkpoint RDDs: $leaked")
-    graft.FrameBlocks.release(out)
-    assert(!registered(outId))
+    def path(n: Int) = spark.range(n - 1)
+      .select(col("id").as("i"), (col("id") + 1).as("j"))
+    val D = graft.operators.Dedup
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "hitsOn" -> (() => graft.operators.Graph.hitsOn(e)),
+      // diameter 3: label-prop converges well inside its maxIters/2 rounds
+      "connectedComponents (label-prop)" -> (() => D.connectedComponents(path(4))),
+      // diameter 39 > 25/2: label-prop hits its cap, star finishes
+      "connectedComponents (star fallback)" -> (() => D.connectedComponents(path(40))),
+      "ccAlternatingStars" -> (() => D.ccAlternatingStars(path(40))._1))
+    calls.foreach { case (name, call) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = call()
+      assert(out.count() > 0, name)
+      val outId = rddId(out)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before - outId
+      assert(leaked.isEmpty, s"$name pinned extra checkpoint RDDs: $leaked")
+      graft.FrameBlocks.release(out)
+      assert(!registered(outId), name)
+    }
     graft.FrameBlocks.release(e)
   }
 }

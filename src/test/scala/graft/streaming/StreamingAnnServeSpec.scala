@@ -67,7 +67,6 @@ class StreamingAnnServeSpec extends SparkSpec {
 
   test("a query batch disjoint from the corpus queries is answered from the same frozen index") {
     val s = spark
-    import s.implicits._
 
     // synthetic probes: corpus vectors re-labeled with fresh ids — the
     // serve path must answer ANY vector, not just the replayed corpus side
