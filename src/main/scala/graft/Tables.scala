@@ -27,21 +27,22 @@ object Tables {
     * (fresh sessions) legitimately share table METADATA the way any two
     * sessions of one metastore do.
     *
-    * Staleness guard (r17): the key carries the file set's (total length,
-    * max mtime) alongside the path — a parquet rewritten at the same path
-    * within one JVM (test fixtures, regenerated testdata) re-infers
-    * instead of serving a stale schema. One directory stat per load,
-    * orders of magnitude cheaper than the footer read it replaces. */
+    * Staleness guard (r17): the key carries the file set's (total length
+    * of the files, max mtime over every entry) alongside the path, walked
+    * recursively — a parquet rewritten at the same path within one JVM
+    * (test fixtures, regenerated testdata), even one file deep inside a
+    * partition directory, re-infers instead of serving a stale schema.
+    * One stat per entry per load, orders of magnitude cheaper than the
+    * footer read it replaces. */
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   private def memoKey(path: String): String = {
-    val f = new java.io.File(path)
-    val parts: Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-      else Seq(f)
-    val len = parts.map(_.length()).sum
-    val mtime = (f +: parts).map(_.lastModified()).foldLeft(0L)(math.max)
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).map(_.toSeq.flatMap(walk)).getOrElse(Seq.empty)
+    val entries = walk(new java.io.File(path))
+    val len = entries.filter(_.isFile).map(_.length()).sum
+    val mtime = entries.map(_.lastModified()).foldLeft(0L)(math.max)
     s"$path|$len|$mtime"
   }
 

@@ -32,7 +32,11 @@ object GraftFunctions {
       args => SortedIntersectCount(args(0), args(1))),
     ("graft_hilbert", classOf[HilbertIndex].getName,
       args => HilbertIndex(args(0), args(1),
-        args(2).eval().asInstanceOf[Int])))
+        args(2).eval().asInstanceOf[Int])),
+    ("graft_shingles", classOf[Shingles].getName,
+      args => Shingles(args(0), args(1).eval().asInstanceOf[Int])),
+    ("graft_top_count", classOf[TopCount].getName,
+      args => TopCount(args(0))))
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

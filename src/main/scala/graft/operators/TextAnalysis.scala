@@ -1028,25 +1028,20 @@ object TextAnalysis {
     // tokens, mass of the single most frequent token, and mass of the most
     // frequent bigram — the signals Rae et al. (Gopher, 2021) threshold to
     // drop boilerplate/template pages. Everything is computed per row from
-    // the token array (O(distinct·n) per doc, bounded by doc length), so
+    // the token array (O(n) per doc: native shingles and top counts), so
     // the pass is NARROW: zero shuffles, scales with bytes scanned. All
     // ratios are exact-rational int/int divisions.
     "q72_repetition_ratio" -> ((s, d) => {
       val tk = toks(col("text"))
       val bg = shingles(tk, 2)
-      val topTok = array_max(transform(array_distinct(tk),
-        x => size(filter(tk, y => y === x))))
-      val topBg = when(size(bg) > 0,
-        array_max(transform(array_distinct(bg),
-          x => size(filter(bg, y => y === x))))).otherwise(lit(0))
       TextFns.fanCpu(t(s, d), col("doc_id"))
         .select(
           col("doc_id"),
           size(tk).cast("long").as("n_tok"),
           (lit(1.0) - size(array_distinct(tk)).cast("double") / size(tk))
             .as("dup_tok_frac"),
-          (topTok.cast("double") / size(tk)).as("top_tok_frac"),
-          when(size(bg) > 0, topBg.cast("double") / size(bg))
+          (topCount(tk).cast("double") / size(tk)).as("top_tok_frac"),
+          when(size(bg) > 0, topCount(bg).cast("double") / size(bg))
             .otherwise(lit(0.0)).as("top_bigram_frac"))
         .withColumn("pass_repetition",
           col("dup_tok_frac") <= 0.8 && col("top_tok_frac") < 0.2 &&

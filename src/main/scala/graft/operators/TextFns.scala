@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+
+import graft.functions.{Shingles, TopCount}
 
 /** Shared, engine-portable text/vector primitives for the LLM-pipeline
   * operators (dedup, similarity, text analysis, multimodal).
@@ -43,13 +46,18 @@ object TextFns {
     *
     * The gate prices splits from plan STATISTICS (size ÷
     * `files.maxPartitionBytes`), the [[dataPartitions]] discipline —
-    * metadata only, safe on ANY input plan. (An exact
+    * metadata only, it runs no job on any input plan. (An exact
     * `rdd.getNumPartitions` probe would be wrong here: under AQE,
     * executing `.rdd` on a frame that already contains an exchange
     * materializes its query stages — running jobs at construction time.)
-    * Estimate errors are conservative both ways: width-scaled projected
-    * stats underestimate splits and merely KEEP the fan (never wrong,
-    * just local-shaped), and a size-unknown source keeps it too. */
+    * Precondition: the gate is conservative only for scans and left-semi
+    * inputs (a left-semi join reports its left side's statistics). Their
+    * projected estimates can only err low, which merely KEEPS the fan
+    * (never wrong, just local-shaped), and a size-unknown source keeps it
+    * too. Join statistics can OVERestimate — inner and cross joins
+    * multiply — and an overestimate reads as splits >= cores and silently
+    * drops the fan on an input that really scans as one split. Every
+    * current call site passes a scan or a left-semi join. */
   def fanCpu(df: org.apache.spark.sql.DataFrame, key: Column): org.apache.spark.sql.DataFrame = {
     val conf = org.apache.spark.sql.internal.SQLConf.get
     val unknown = BigInt(conf.defaultSizeInBytes)
@@ -103,14 +111,16 @@ object TextFns {
   /** Whitespace tokenization (documents.text is single-space separated). */
   def toks(c: Column): Column = split(c, " ")
 
-  /** n-token shingles: ["a","b","c","d"], n=3 -> ["a b c", "b c d"].
-    * Guarded so short docs yield an empty array rather than a negative
-    * `sequence` range. */
+  /** n-token shingles: ["a","b","c","d"], n=3 -> ["a b c", "b c d"], via
+    * the native one-pass [[graft.functions.Shingles]]. Short or null token
+    * arrays yield an empty array. */
   def shingles(tk: Column, n: Int): Column =
-    when(size(tk) >= n,
-      transform(sequence(lit(1), size(tk) - (n - 1)),
-        i => concat_ws(" ", slice(tk, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    Bridge.column(Shingles(Bridge.expression(tk), n))
+
+  /** Highest count of any non-null element of a string array (null for an
+    * empty array), via the native one-hash-pass [[graft.functions.TopCount]]. */
+  def topCount(a: Column): Column =
+    Bridge.column(TopCount(Bridge.expression(a)))
 
   /** Evaluate `c` ONCE per row and hand it to `f` as a bound lambda
     * variable — manual common-subexpression elimination for expensive

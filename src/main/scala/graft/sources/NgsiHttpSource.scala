@@ -211,7 +211,12 @@ private[sources] class NgsiHttpTable(port: Int, captureDir: Option[String],
   * racing into the restore window minted past the checkpoint and the
   * rebase was skipped, trimming acked-but-never-delivered ring entries at
   * the first commit. Legacy bare-long json still parses (old checkpoints
-  * restore fine); self-minted offsets always serialize with the nonce. */
+  * restore fine); self-minted offsets always serialize with the nonce.
+  *
+  * The format change is ONE-WAY: a binary older than the nonce stamp
+  * parses offsets with `json.toLong` and throws on `{"n":...,"inc":...}`.
+  * Upgrading onto an old checkpoint works; rolling back to an older binary
+  * after this one has checkpointed does not — do not roll back. */
 private[sources] case class SeqOffset(n: Long, inc: String = "") extends Offset {
   override def json(): String =
     if (inc.isEmpty) n.toString else s"""{"n":$n,"inc":"$inc"}"""

@@ -16,7 +16,8 @@ class GraftExtensionsSpec extends SparkSpec {
     new GraftExtensions().apply(ext) // throws on malformed injection
     assert(GraftFunctions.functions.map(_._1).toSet ==
       Set("graft_dot", "graft_l2norm", "graft_minhash_sig", "graft_rolling_hash",
-        "graft_nfc", "graft_sorted_intersect_count", "graft_hilbert"))
+        "graft_nfc", "graft_sorted_intersect_count", "graft_hilbert",
+        "graft_shingles", "graft_top_count"))
   }
 
   test("imperative register is idempotent and recovers a dropped function") {

@@ -91,14 +91,8 @@ class CatalogPlanSpec extends SparkSpec {
   // depend on suite EXECUTION ORDER. A virgin session pins the memo state,
   // so every query plans from its full lineage in sorted-name order and the
   // manifest signatures are order-independent (suite-alone == full-suite).
-  private lazy val catalogPlans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
-    val fresh = spark.newSession()
-    graft.functions.GraftFunctions.register(fresh)
-    fresh.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(fresh, sfDir).queryExecution.executedPlan
-    }
-  }
+  private lazy val catalogPlans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
+    CatalogPlanSpec.queryExecutions(sfDir).map { case (name, qe) => name -> qe.executedPlan }
 
   /** Aggregation-boundedness walk shared by the BNL and global-window
     * rules: true when every path from this node reaches an aggregate (or
@@ -219,4 +213,23 @@ class CatalogPlanSpec extends SparkSpec {
     assert(drifted.isEmpty,
       s"plan shape drift (intentional? update the manifest):\n${drifted.mkString("\n")}")
   }
+}
+
+object CatalogPlanSpec {
+  private val built = scala.collection.concurrent.TrieMap
+    .empty[String, Seq[(String, org.apache.spark.sql.execution.QueryExecution)]]
+
+  /** Every catalog query's execution over `sfDir`, built once per test JVM
+    * in one fresh session (see above) and shared with [[LambdaSplitLintSpec]]. */
+  def queryExecutions(sfDir: String): Seq[(String, org.apache.spark.sql.execution.QueryExecution)] =
+    built.getOrElseUpdate(sfDir, {
+      val fresh = graft.SparkSpec.session.newSession()
+      graft.functions.GraftFunctions.register(fresh)
+      fresh.conf.set("spark.sql.adaptive.enabled", "false")
+      graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val qe = fn(fresh, sfDir).queryExecution
+        qe.executedPlan // planned now, while this session's context is live
+        name -> qe
+      }
+    })
 }

@@ -423,6 +423,31 @@ class RepetitionNoveltySpec extends SparkSpec {
     assert(pass.getBoolean(5), "diverse doc must pass the repetition gate")
   }
 
+  test("q72: degenerate documents (empty, one token, double spaces, non-ASCII, null)") {
+    val out = runOn("q72_repetition_ratio", docsOf(
+      1L -> "",                   // one empty token, no bigram
+      2L -> "solo",               // one token, no bigram
+      3L -> "x x",                // all-identical tokens
+      4L -> "a  b",               // double space: tokens a, "", b
+      5L -> "日本 日本 語",        // non-ASCII tokens
+      6L -> null))                // null text
+      .collect()
+      .map(r => r.getLong(0) -> (0 until 5).map(i => Option(r.get(i + 1)))).toMap
+    def row(nTok: Long, dup: Double, top: Double, topBg: Double, pass: Boolean) =
+      Seq(Some(nTok), Some(dup), Some(top), Some(topBg), Some(pass))
+
+    assert(out(1L) == row(1L, 0.0, 1.0, 0.0, false))
+    assert(out(2L) == row(1L, 0.0, 1.0, 0.0, false))
+    // one bigram "x x": it is the whole bigram mass
+    assert(out(3L) == row(2L, 0.5, 1.0, 1.0, false))
+    // bigrams "a " and " b": the empty token joins like any other
+    assert(out(4L) == row(3L, 0.0, 1.0 / 3, 0.5, false))
+    // bigrams "日本 日本" and "日本 語"
+    assert(out(5L) == row(3L, 1.0 - 2.0 / 3, 2.0 / 3, 0.5, false))
+    // null text: no tokens to count, and an empty bigram array
+    assert(out(6L) == Seq(None, None, None, Some(0.0), None))
+  }
+
   test("q73: novelty is 1.0 for a unique doc, 0.0 for a clone pair") {
     val base = (0 until 12).map(i => s"t$i").mkString(" ")
     val out = runOn("q73_ngram_novelty", docsOf(
