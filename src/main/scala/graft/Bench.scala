@@ -179,13 +179,16 @@ object Bench {
     * production warm path, artifacts load from disk) and one with
     * persistence disabled (`ModelStore.root = None`, the exact semantics of
     * `SPARK_GRAFT_MODEL_DIR=""`), which forces a full retrain from the
-    * parquet inputs. Same warm-up discipline as [[isolatedFloors]]. Default
-    * behavior of every other leg is unchanged; SPARK_GRAFT_BENCH_RETRAIN=0
-    * skips. Failures report -1. */
+    * parquet inputs. Same warm-up discipline as [[isolatedFloors]]. Each
+    * run also reports the artifacts its timed execution trained and
+    * loaded (`warm_serve_models` / `retrain_models`), so a cold store that
+    * trained during the "warm" run shows as trained, not as warm serve.
+    * Default behavior of every other leg is unchanged;
+    * SPARK_GRAFT_BENCH_RETRAIN=0 skips. Failures report -1. */
   private[graft] def retrainLeg(cpus: String, sfDir: String): String =
     LearnedTier.map { name =>
       val warmDir = "/root/testdata/sf0.001"
-      def once(disableStore: Boolean): Double = {
+      def once(disableStore: Boolean): (Double, Long, Long) = {
         val saved = ModelStore.root
         try {
           if (disableStore) ModelStore.root = None
@@ -199,15 +202,19 @@ object Bench {
               try { SparkEntry.queries(name)(s, warmDir).count(); () }
               catch { case _: Throwable => }
             val t0 = System.nanoTime()
-            SparkEntry.queries(name)(s, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
+            val (_, trained, loaded) =
+              ModelStore.counted(SparkEntry.queries(name)(s, sfDir).count())
+            ((System.nanoTime() - t0) / 1e9, trained, loaded)
           } finally s.stop()
-        } catch { case _: Throwable => -1.0 }
+        } catch { case _: Throwable => (-1.0, -1L, -1L) }
         finally ModelStore.root = saved
       }
+      def models(run: (Double, Long, Long)) =
+        s"""{"trained":${run._2},"loaded":${run._3}}"""
       val warm = once(disableStore = false)
       val retrain = once(disableStore = true)
-      s""""$name":{"warm_serve":$warm,"retrain":$retrain}"""
+      s""""$name":{"warm_serve":${warm._1},"retrain":${retrain._1},""" +
+        s""""warm_serve_models":${models(warm)},"retrain_models":${models(retrain)}}"""
     }.mkString("{", ",", "}")
 
   /** Informational streaming micro-bench: notifications/s through the

@@ -81,6 +81,14 @@ object ModelStore {
   val trains = new java.util.concurrent.atomic.AtomicLong(0L)
   val loads = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** `body`'s result with the artifacts this JVM trained and loaded while
+    * it ran — (result, trained, loaded). */
+  def counted[A](body: => A): (A, Long, Long) = {
+    val (t0, l0) = (trains.get, loads.get)
+    val a = body
+    (a, trains.get - t0, loads.get - l0)
+  }
+
   /** Load-or-train: if the artifact exists at its content address, read it
     * (bit-exact); otherwise run `train`, persist, and return the trained
     * rows. With persistence disabled (empty root) this is just `train`. */

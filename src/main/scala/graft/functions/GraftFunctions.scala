@@ -36,7 +36,9 @@ object GraftFunctions {
     ("graft_shingles", classOf[Shingles].getName,
       args => Shingles(args(0), args(1).eval().asInstanceOf[Int])),
     ("graft_top_count", classOf[TopCount].getName,
-      args => TopCount(args(0))))
+      args => TopCount(args(0))),
+    ("graft_nearest_centroid", classOf[NearestCentroid].getName,
+      args => NearestCentroid(args(0), args(1))))
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

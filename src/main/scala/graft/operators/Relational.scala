@@ -2127,9 +2127,12 @@ object Relational {
           when(not(lag(col("event_type"), 1).over(w) <=> col("event_type")), 1L)
             .otherwise(0L))
         .withColumn("run_id", sum(col("chg")).over(w))
-      runs.groupBy(col("user_id"), col("run_id"))
-        .agg(min(col("event_type")).as("event_type"),
-          min(col("ts")).as("valid_from"),
+      // event_type is a grouping key, not min(event_type): a run is by
+      // construction a maximal stretch of null-safe-equal states, so the
+      // key adds no group, and a string in the buffer would force a
+      // sort-based aggregate where a hash aggregate does
+      runs.groupBy(col("user_id"), col("run_id"), col("event_type"))
+        .agg(min(col("ts")).as("valid_from"),
           count(lit(1)).as("n_events"))
         .select(col("user_id"), col("event_type"), col("valid_from"),
           lead(col("valid_from"), 1)
@@ -2415,14 +2418,20 @@ object Relational {
     // The Deequ/Great-Expectations read: per column of lineitem, exact
     // completeness (null count), exact distinct cardinality, and typed
     // min/max — emitted as one long-format frame so a validation harness
-    // consumes ONE schema regardless of table width. Shape: a SINGLE
-    // aggregation pass over the corpus computes every metric (count/min/
-    // max collapse map-side; the 11 exact distinct aggregates ride
-    // Spark's Expand — an 11-way row replication that is the honest cost
-    // of EXACT cardinality; the 100 TB relaxation is swapping
-    // countDistinct for approx_count_distinct/HLL (the q24/q109 tier)
-    // with zero structural change), then the 1-row result explodes into
-    // per-column rows driver-free. min/max of doubles are comparisons,
+    // consumes ONE schema regardless of table width. Shape: one hash
+    // aggregation pass computes every count, distinct count and numeric/
+    // timestamp extreme (count/min/max collapse map-side; the 11 exact
+    // distinct aggregates ride Spark's Expand — an 11-way row replication
+    // that is the honest cost of EXACT cardinality; the 100 TB relaxation
+    // is swapping countDistinct for approx_count_distinct/HLL (the
+    // q24/q109 tier) with zero structural change). The string extrema run
+    // in their own no-key aggregate over the two string columns: a string
+    // min/max cannot live in a hash-aggregate buffer, and inside the
+    // distinct aggregate it turned the whole Expand into a sort-based
+    // aggregate (the 11×-replicated rows sorted on 12 keys, twice). Both
+    // global aggregates return exactly one row, empty input included, so
+    // their cross join is one row; it explodes into per-column rows
+    // driver-free. min/max of doubles are comparisons,
     // not arithmetic — they return an input value bit-for-bit, so the
     // oracle matches exactly with no cents/decimal detour; integer
     // extremes cast to double are exact below 2^53 (TPC-H keys at 100 TB
@@ -2434,15 +2443,18 @@ object Relational {
       val strCols = Seq("l_returnflag", "l_linestatus")
       val tsCols = Seq("l_shipdate")
       val all = numCols ++ strCols ++ tsCols
+      def extrema(cs: Seq[String]) =
+        cs.flatMap(c => Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c")))
       val aggs: Seq[Column] =
         Seq(count(lit(1)).as("n_rows")) ++
           all.flatMap(c => Seq(count(col(c)).as(s"nn_$c"),
             countDistinct(col(c)).as(s"nd_$c"))) ++
           numCols.flatMap(c => Seq(min(col(c)).cast("double").as(s"mn_$c"),
             max(col(c)).cast("double").as(s"mx_$c"))) ++
-          (strCols ++ tsCols).flatMap(c => Seq(min(col(c)).as(s"mn_$c"),
-            max(col(c)).as(s"mx_$c")))
+          extrema(tsCols)
+      val strAggs = extrema(strCols)
       val a = li.agg(aggs.head, aggs.tail: _*)
+        .crossJoin(li.agg(strAggs.head, strAggs.tail: _*))
       val nullD = lit(null).cast("double")
       val nullS = lit(null).cast("string")
       val nullT = lit(null).cast("timestamp")

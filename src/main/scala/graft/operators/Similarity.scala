@@ -5,8 +5,10 @@ import graft.Pinned._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.Tables
+import graft.functions.{CentroidTable, NearestCentroid}
 import TextFns._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -1253,7 +1255,7 @@ object Similarity {
   /** SemDeDup (Abbas et al. 2023): cluster-then-dedup semantic
     * deduplication — the embedding-space analog of the MinHash pipeline.
     * Stage 1 clusters the corpus with the IVF coarse quantizer (ONE
-    * broadcast-assignment pass, the q52 shape); stage 2 ranks each
+    * nearest-centroid map, the q52 shape); stage 2 ranks each
     * cluster's members by keep-priority — ascending cosine to the centroid
     * (the paper's default: prototypical points are the redundant ones,
     * edge points carry the information) with vec_id as the total-order tie
@@ -1266,20 +1268,12 @@ object Similarity {
     * the equi self-join on the list id is Σ|c|²-sized, dialed by
     * [[SemDedupLists]] (production: k grows with N so |c| stays ~constant
     * and the stage is near-linear), never corpus². The corpus itself makes
-    * exactly one pass (broadcast assignment + one hash agg); ranking is a
-    * per-cluster window, embarrassingly parallel across lists. */
+    * exactly one pass (a per-row nearest-centroid map, no join and no
+    * aggregate); ranking is a per-cluster window, embarrassingly parallel
+    * across lists. */
   def semDeDup(e: DataFrame, cent: DataFrame, tau: Double): DataFrame = {
     graft.functions.GraftFunctions.register(e.sparkSession)
-    // assignment: argmax cosine over the broadcast centroid table via one
-    // hash agg (max(struct) keeps the winning csim; tie → smaller cid)
-    val lists = e.join(broadcast(cent))
-      .select(col("vec_id"), col("v"),
-        struct(cosine(col("v"), col("cv")).as("csim"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy(col("vec_id"))
-      .agg(first(col("v")).as("v"), max(col("sc")).as("best"))
-      .select(col("vec_id"), col("v"), (-col("best.ncid")).as("cid"),
-        col("best.csim").as("csim"))
+    val lists = assigned(e, cent)
     val w = Window.partitionBy(col("cid"))
       .orderBy(col("csim").asc, col("vec_id"))
     val ranked = lists.withColumn("krank", row_number().over(w).cast("long"))
@@ -1316,20 +1310,22 @@ object Similarity {
   private val resCodesFrameCache = graft.SessionMemo.ofFrames()
 
   /** Corpus IVF assignment under the default trained 8-list centroids —
-    * (vec_id, v, cid), one broadcast argmax-cosine hash agg, memoized. */
+    * (vec_id, v, cid), one per-row nearest-centroid map, memoized. */
   private def ivfAssigned(s: SparkSession, d: String): DataFrame =
     ivfAssignCache.getOrCompute(s, d) {
       val e = embs(s, d)
-      val cent = trainCentroids(e)
-      e.join(broadcast(cent))
-        .select(col("vec_id"), col("v"),
-          struct(cosine(col("v"), col("cv")).as("csim"),
-            (-col("cid")).as("ncid")).as("sc"))
-        .groupBy(col("vec_id"))
-        .agg(first(col("v")).as("v"), max(col("sc")).as("best"))
-        .select(col("vec_id"), col("v"), (-col("best.ncid")).as("cid"))
-        .pin(false)
+      assigned(e, trainCentroids(e)).drop("csim").pin(false)
     }
+
+  /** (vec_id, v, cid, csim): each vector's nearest centroid by cosine, tie
+    * to the smaller cid, through [[TextFns.nearestCentroid]]. A vector
+    * keeps its own row (vec_id is the corpus key); with no centroid at all
+    * there is no row, as the inner join with the table gave none. */
+  private def assigned(e: DataFrame, cent: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("v"), nearestCentroid(col("v"), cent).as("nc"))
+      .filter(col("nc").isNotNull)
+      .select(col("vec_id"), col("v"), col("nc.cid").as("cid"),
+        col("nc.csim").as("csim"))
 
   /** Raw-codebook PQ codes of the full corpus — (vec_id, s0..s{M−1}
     * struct(code, d2)) — memoized. */
@@ -1437,8 +1433,9 @@ object Similarity {
           graft.ModelStore.codebooksToRows {
             val cents = trainCentroidArrays(e)
             val byId = cents.toMap
+            val table = CentroidTable(cents.toSeq)
             val residuals = pqTrainSample(e).map { v =>
-              val c = byId(nearest(cents, v))
+              val c = byId(nearest(table, v))
               Array.tabulate(v.length)(i => v(i) - c(i))
             }
             lloydSubspaceCodebooks(residuals)
@@ -1842,8 +1839,9 @@ object Similarity {
     *    data path; cost is independent of corpus size and of `iters`.
     *    Fixed sample order makes every centroid bit-deterministic —
     *    floating sums in shuffle order would make recall flap run to run.
-    *  - assign: broadcast the (tiny) centroid table, argmax-cosine per
-    *    vector via ONE hash aggregation — the corpus is scanned once and
+    *  - assign: the (tiny) centroid table rides the plan as a literal and
+    *    each vector maps to its argmax-cosine list in one pass
+    *    ([[TextFns.nearestCentroid]]) — the corpus is scanned once and
     *    never shuffles for assignment.
     *  - probe/search: broadcast centroids to rank lists per query, then ONE
     *    equi-join on the probed list id; only ~nProbe/nLists of the corpus
@@ -1921,7 +1919,8 @@ object Similarity {
       sample.take(nLists).map { case (so, v) => (cidOf(so), v.clone()) }
 
     for (_ <- 1 to iters) {
-      val byList = sample.map { case (_, v) => (nearest(centers, v), v) }
+      val table = CentroidTable(centers.toSeq)
+      val byList = sample.map { case (_, v) => (nearest(table, v), v) }
         .groupBy(_._1)
       // empty lists drop (standard Lloyd's); sample order is fixed, so the
       // mean's summation order — and therefore every centroid bit — is too.
@@ -1939,17 +1938,13 @@ object Similarity {
     centers
   }
 
-  /** Driver-side cosine + argmax-centroid, the in-memory twins of the
-    * distributed assignment (tie → smaller cid, matching max(struct(csim,
-    * -cid))). Used by Lloyd's rounds and by residual-sample construction. */
-  private def cos(a: Array[Double], b: Array[Double]): Double = {
-    var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-    d / (math.sqrt(na) * math.sqrt(nb))
-  }
-  private def nearest(cs: Array[(Long, Array[Double])], v: Array[Double]): Long =
-    cs.map { case (cid, cv) => (cos(v, cv), cid) }
-      .reduceLeft((x, y) => if (y._1 > x._1 || (y._1 == x._1 && y._2 < x._2)) y else x)._2
+  /** Driver-side argmax-centroid, used by Lloyd's rounds and by
+    * residual-sample construction: the assignment kernel's own `compute`,
+    * so training and the distributed assignment share one argmax rule
+    * (NaN highest, tie → smaller cid, a zero norm fails as Spark's
+    * division does). */
+  private def nearest(t: CentroidTable, v: Array[Double]): Long =
+    NearestCentroid.compute(v, t, SQLConf.get.ansiEnabled).getLong(0)
 
   /** Stage 2 — assignment + probe + search under FIXED centroids. Fully
     * deterministic given `cent`, so (unlike training) it has an exact SQL
@@ -1959,19 +1954,13 @@ object Similarity {
                     nProbe: Int = IvfNProbe,
                     listsOpt: Option[DataFrame] = None): DataFrame = {
     graft.functions.GraftFunctions.register(e.sparkSession)
-    // the one corpus-wide pass: final inverted-list assignment — broadcast
-    // the (tiny) centroid table, argmax-cosine per vector via one hash
-    // aggregation (the max(struct) trick; no per-vector window), the corpus
-    // itself never shuffles beyond that single agg. Callers on the standard
-    // corpus pass the MEMOIZED [[ivfAssigned]] frame instead (the index
-    // store's assignment column), skipping the pass entirely.
-    val lists = listsOpt.getOrElse(e.join(broadcast(cent))
-      .select(col("vec_id"), col("v"),
-        struct(cosine(col("v"), col("cv")).as("csim"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy(col("vec_id"))
-      .agg(first(col("v")).as("v"), max(col("sc")).as("best"))
-      .select(col("vec_id"), col("v"), (-col("best.ncid")).as("cid")))
+    // the one corpus-wide pass: final inverted-list assignment — the
+    // (tiny) centroid table rides the plan as a literal and each vector
+    // maps to its argmax-cosine list in place, so the corpus does not
+    // shuffle for assignment. Callers on the standard corpus pass the
+    // MEMOIZED [[ivfAssigned]] frame instead (the index store's assignment
+    // column), skipping the pass entirely.
+    val lists = listsOpt.getOrElse(assigned(e, cent).drop("csim"))
 
     val q = e.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -2428,8 +2417,8 @@ object Similarity {
     // not ANSI-expressible. Stage 2 (assignment + probe + search) is fully
     // deterministic under fixed centroids, so the oracle reads the centroid
     // parquet Verify exported and recomputes the whole stage: per-vector
-    // argmax-cosine list assignment (tie -> smaller cid, mirroring Spark's
-    // max(struct(csim, -cid))), per-query nProbe nearest lists, then top-k
+    // argmax-cosine list assignment (tie -> smaller cid, the rule of
+    // graft.functions.NearestCentroid), per-query nProbe nearest lists, then top-k
     // within the probed lists.
     "q52_knn_ivf" -> oQ52,
 

@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
-import graft.functions.{Shingles, TopCount}
+import graft.functions.{NearestCentroid, Shingles, TopCount}
 
 /** Shared, engine-portable text/vector primitives for the LLM-pipeline
   * operators (dedup, similarity, text analysis, multimodal).
@@ -195,6 +198,24 @@ object TextFns {
 
   /** Cosine similarity of two double arrays. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  /** Each `v`'s nearest centroid by [[cosine]] under the centroid table
+    * `cent` (cid, cv) — `struct<cid, csim>`, ties to the smaller cid, null
+    * only when `cent` is empty — via the native one-pass
+    * [[graft.functions.NearestCentroid]]. `cent` is model-scale (a trained
+    * coarse quantizer, a local relation), so it is collected here and rides
+    * the plan as a literal: assignment is a per-row map, with no join and
+    * no aggregate. */
+  def nearestCentroid(v: Column, cent: DataFrame): Column = {
+    val rows = cent.select(col("cid").cast("long"), col("cv").cast("array<double>"))
+      .collect().map { r =>
+        InternalRow(if (r.isNullAt(0)) null else r.getLong(0),
+          if (r.isNullAt(1)) null
+          else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray))
+      }
+    Bridge.column(NearestCentroid(Bridge.expression(v),
+      Literal(new GenericArrayData(rows.toArray[Any]), NearestCentroid.CentroidsType)))
+  }
 
   // ---------------------------------------------------------------------
   // Random-hyperplane LSH for embeddings. The planes are pseudo-random but

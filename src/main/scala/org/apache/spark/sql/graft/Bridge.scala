@@ -5,13 +5,15 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** The one `private[sql]` doorway graft needs, for two conversions
-  * Spark keeps package-private to `org.apache.spark.sql`:
+/** The one `private[sql]` doorway graft needs, for what Spark keeps
+  * package-private to `org.apache.spark.sql`:
   *  - a hand-built [[LogicalPlan]] (the [[graft.plans.AsOfJoinPlan]] node)
   *    back into a user-facing DataFrame (`Dataset.ofRows`);
   *  - a native Catalyst [[Expression]] (the `graft.functions` kernels) to
   *    and from a user-facing [[Column]] (`ExpressionUtils`), so a Column
   *    helper can build a kernel directly, with no function-registry lookup.
+  *  - Spark's DIVIDE_BY_ZERO error, so a kernel that folds a division
+  *    ([[graft.functions.NearestCentroid]]) fails the way `Divide` does.
   * This object lives in a subpackage — the standard pattern Spark
   * extension libraries use for custom-operator entry points. Nothing else
   * in the repo reaches into Spark internals' private surface. */
@@ -22,4 +24,7 @@ object Bridge {
   def column(expr: Expression): Column = classic.ExpressionUtils.column(expr)
 
   def expression(col: Column): Expression = classic.ExpressionUtils.expression(col)
+
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

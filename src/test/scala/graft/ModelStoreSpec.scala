@@ -52,6 +52,17 @@ class ModelStoreSpec extends SparkSpec {
     }
   }
 
+  test("counted reports the artifacts a call trained and loaded") {
+    withStore { _ =>
+      def model: ModelStore.Rows = Seq(("x", 0L, 0L, Array(1.0)))
+      val train = ModelStore.counted(ModelStore.getOrTrain(spark, "c", "d", "k=1")(model))
+      assert((train._2, train._3) == ((1L, 0L)))
+      val load = ModelStore.counted(ModelStore.getOrTrain(spark, "c", "d", "k=1")(model))
+      assert((load._2, load._3) == ((0L, 1L)))
+      assert(bits(train._1) == bits(load._1))
+    }
+  }
+
   test("disabled store always retrains") {
     val saved = ModelStore.root
     ModelStore.root = None

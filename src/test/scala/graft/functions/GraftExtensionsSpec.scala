@@ -17,7 +17,7 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(GraftFunctions.functions.map(_._1).toSet ==
       Set("graft_dot", "graft_l2norm", "graft_minhash_sig", "graft_rolling_hash",
         "graft_nfc", "graft_sorted_intersect_count", "graft_hilbert",
-        "graft_shingles", "graft_top_count"))
+        "graft_shingles", "graft_top_count", "graft_nearest_centroid"))
   }
 
   test("imperative register is idempotent and recovers a dropped function") {

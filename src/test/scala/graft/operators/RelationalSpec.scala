@@ -812,6 +812,47 @@ class RelationalSpec extends SparkSpec {
     assert(sd.isNullAt(4) && sd.isNullAt(5) && sd.isNullAt(6) && sd.isNullAt(7))
   }
 
+  test("q153: empty, one-row and all-null-string lineitem profile to one row per column") {
+    val li = graft.Tables.load(spark, sfDir, "lineitem")
+    val root = java.nio.file.Files.createTempDirectory("graft-q153").toString
+    def profile(fixture: String, rows: org.apache.spark.sql.DataFrame): Seq[String] = {
+      rows.write.parquet(s"$root/$fixture/lineitem.parquet")
+      Relational.queries("q153_data_profile")(spark, s"$root/$fixture").collect().toSeq
+        .map(_.toSeq.map {
+          case ts: java.sql.Timestamp => ts.getTime.toString
+          case v => String.valueOf(v)
+        }.mkString("|"))
+    }
+    val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+      "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus", "l_shipdate")
+    // a global aggregate returns one row on empty input, so every column still
+    // reports, in order, with zero counts and null extremes
+    assert(profile("empty", li.limit(0)) ==
+      cols.map(c => s"$c|0|0|0|null|null|null|null|null|null"))
+    assert(profile("one", li.orderBy("l_orderkey", "l_linenumber").limit(1)) == Seq(
+      "l_orderkey|1|0|1|0.0|0.0|null|null|null|null",
+      "l_partkey|1|0|1|170.0|170.0|null|null|null|null",
+      "l_suppkey|1|0|1|3.0|3.0|null|null|null|null",
+      "l_linenumber|1|0|1|3.0|3.0|null|null|null|null",
+      "l_quantity|1|0|1|36.0|36.0|null|null|null|null",
+      "l_extendedprice|1|0|1|56712.15|56712.15|null|null|null|null",
+      "l_discount|1|0|1|0.05|0.05|null|null|null|null",
+      "l_tax|1|0|1|0.04|0.04|null|null|null|null",
+      "l_returnflag|1|0|1|null|null|A|A|null|null",
+      "l_linestatus|1|0|1|null|null|F|F|null|null",
+      "l_shipdate|1|0|1|null|null|null|null|888883200000|888883200000"))
+    val n = li.count()
+    val nulled = profile("nullstr", li
+      .withColumn("l_returnflag", lit(null).cast("string"))
+      .withColumn("l_linestatus", lit(null).cast("string")))
+    assert(nulled.length == 11 && nulled.map(_.split('|').head) == cols)
+    assert(nulled.slice(8, 10) == Seq(
+      s"l_returnflag|$n|$n|0|null|null|null|null|null|null",
+      s"l_linestatus|$n|$n|0|null|null|null|null|null|null"))
+    assert(nulled.filterNot(r => r.startsWith("l_returnflag") || r.startsWith("l_linestatus")) ==
+      profile("full", li).filterNot(r => r.startsWith("l_returnflag") || r.startsWith("l_linestatus")))
+  }
+
   test("q154: clean FK graph audits to zero orphans; injected corruption is detected and counted") {
     import spark.implicits._
     val out = Relational.queries("q154_fk_orphans")(spark, sfDir).collect()
