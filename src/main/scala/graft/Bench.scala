@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 object Bench {
 
   /** Per-query repetitions. Min-of-3: this host shows 3-5x run-to-run noise
@@ -12,18 +13,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.muteExpectedWarnings() // setLogLevel re-applies root config; re-mute after it
-    // Warm-up: run every query once at the smallest SF. Generated code is
-    // identical across SF dirs (only file paths differ), so this JIT-compiles
-    // and janino-caches each plan's codegen classes for ~free; the timed run
-    // below then measures data processing, not one-time compilation.
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try { fn(spark, warmDir).count(); () } catch { case _: Throwable => }
-      }
+    val spark = session(cpus)
+    warmUp(spark, SparkEntry.queries.keys)
     // A query that throws reports -1 (NOT its time-to-exception, which would
     // read as a speedup). Raw per-run times are emitted alongside the min so
     // a noisy host window is self-evident in the artifact: a real regression
@@ -64,19 +55,11 @@ object Bench {
     // Isolated floors for the heavy tier: the in-board numbers above share
     // one JVM-long session with every other query's pinned memo blocks and
     // cache pressure — measured to overstate a plan up to 2.4× (q78 at
-    // sf10: 35.4 s in-board vs 14.9 s isolated). Each heavy-tier query
-    // re-runs in a FRESH SparkContext (fresh session memos, zero foreign
-    // blocks; ModelStore artifacts still load from disk — that IS the
-    // production warm-serve path), min-of-2 inside its own context so the
-    // floor excludes first-run codegen. Emitted NEXT TO the in-board
-    // numbers, never replacing them. SPARK_GRAFT_BENCH_ISOLATED=0 skips.
+    // sf10: 35.4 s in-board vs 14.9 s isolated). Emitted NEXT TO the
+    // in-board numbers, never replacing them.
     spark.stop()
-    val (isolatedJson, isolatedRunsJson) =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED", "1") == "0") ("{}", "{}")
-      else isolatedFloors(cpus, sfDir)
-    val retrainJson =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRAIN", "1") == "0") "{}"
-      else retrainLeg(cpus, sfDir)
+    val (isolatedJson, isolatedRunsJson) = isolatedFloors(cpus, sfDir)
+    val retrainJson = retrainLeg(cpus, sfDir)
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson,"isolated":$isolatedJson,"isolated_runs":$isolatedRunsJson,"retrain":$retrainJson,"streaming":[$streamingJson,$httpJson],"sf":"$sfDir"}"""
     // The driver captures only the TAIL of stdout, and any line that embeds
@@ -84,29 +67,89 @@ object Bench {
     // get head-truncated out of the artifact. Persist the full JSON to a
     // file, print it, then print a SHORT final line — total only, NO
     // per-query map — so the last stdout line is always complete and
-    // parseable regardless of tail-capture size.
-    val out = java.nio.file.Paths.get("bench_out.json")
-    java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))
+    // parseable regardless of tail-capture size. build.sbt hands the forked
+    // JVM sbt's raw stdout and drops the trailing "[success]" banner, so
+    // the compact line IS the last bare stdout line of
+    // `sbt "runMain graft.Bench"`; `bench_summary.json` holds it too.
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_out.json"), fullJson.getBytes("UTF-8"))
     println(fullJson)
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir"}"""
-    // The driver parses the LAST stdout line. Since r17 build.sbt sets
-    // `run / outputStrategy := StdoutOutput` (the forked JVM inherits sbt's
-    // raw stdout — no "[info]" framing) and `Global / showSuccess := false`
-    // (no trailing "[success] Total time" banner), so the compact line
-    // below genuinely IS the last bare stdout line of
-    // `sbt "runMain graft.Bench"`. The belt-and-braces escapes from r7
-    // stay: (1) fixed sidecar files the driver can always pick up,
-    // (2) compact line on stdout + stderr + raw fd 1 so whichever stream
-    // the driver tails contains it.
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_summary.json"), compact.getBytes("UTF-8"))
     println(compact)
-    System.err.println(compact)
-    val rawOut = new java.io.FileOutputStream(java.io.FileDescriptor.out)
-    rawOut.write((compact + "\n").getBytes("UTF-8"))
-    rawOut.flush()
   }
+
+  /** A graft session at WARN. `setLogLevel` re-applies the root config, so
+    * the expected warnings are muted again after it. */
+  private def session(cpus: String): SparkSession = {
+    val s = GraftSession.local(cpus)
+    s.sparkContext.setLogLevel("WARN")
+    GraftSession.muteExpectedWarnings()
+    s
+  }
+
+  private val WarmDir = "/root/testdata/sf0.001"
+
+  /** Runs each named query once at the smallest SF, when that dir exists.
+    * Generated code is identical across SF dirs (only file paths differ),
+    * so this JIT-compiles and janino-caches each plan's codegen classes
+    * for ~free; a timed run after it measures data processing, not
+    * one-time compilation. Session memos are keyed per sf dir, so the
+    * warm-up does not warm the timed dir's memos. Failures are ignored:
+    * the timed run reports them. */
+  private def warmUp(spark: SparkSession, names: Iterable[String]): Unit =
+    if (new java.io.File(WarmDir).isDirectory)
+      names.foreach { n =>
+        try { SparkEntry.queries(n)(spark, WarmDir).count(); () }
+        catch { case _: Throwable => }
+      }
+
+  /** One cold run: its seconds, the model artifacts it trained and loaded,
+    * and its [[Shape]]. A failed run reads -1 in every field, never a
+    * plausible time or count. */
+  private[graft] final case class Cold(sec: Double, trained: Long,
+                                       loaded: Long, shape: Shape)
+
+  private val Failed = Cold(-1.0, -1L, -1L, Shape(-1L, -1L, -1L, -1L, -1L, -1L, -1L))
+
+  /** Times query `name` at `sfDir` cold: in a fresh session (fresh session
+    * memos, zero foreign blocks), after [[warmUp]], one timed `count()`
+    * metered by [[Shape.of]]. A second run inside one context would hit
+    * the session memos (q41's signature memo measured 0.07 s where the
+    * cold plan costs ~1 s), so a min over these runs is a min of COLD
+    * runs. Stopping the session frees the run's blocks, so peak disk is
+    * one query's own footprint (a shared session at sf100 filled the disk
+    * with 36 GB of other queries' pinned blocks). ModelStore artifacts
+    * still load from disk — that IS the production warm-serve path.
+    * `after` sees the query's frame once the timed run is done, in the
+    * still-live session. */
+  private[graft] def coldRun(cpus: String, name: String, sfDir: String,
+                             after: DataFrame => Unit = _ => ()): Cold =
+    try {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      val s = session(cpus)
+      try {
+        warmUp(s, Seq(name))
+        val ((df, sec, trained, loaded), shape) = Shape.of(s) {
+          val t0 = System.nanoTime()
+          val (df, trained, loaded) = ModelStore.counted {
+            val df = SparkEntry.queries(name)(s, sfDir)
+            df.count()
+            df
+          }
+          (df, (System.nanoTime() - t0) / 1e9, trained, loaded)
+        }
+        after(df)
+        Cold(sec, trained, loaded, shape)
+      } finally s.stop()
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name@$sfDir failed: $e")
+        Failed
+    }
 
   /** The 26-query heavy tier (the BENCH_sf10 second-decade set): the
     * queries whose in-board/isolated gap is worth the extra contexts. */
@@ -121,43 +164,16 @@ object Bench {
     "q46_dedup_components", "q70_curation_pipeline", "q73_ngram_novelty",
     "q78_containment_dedup", "q97_time_gridfill")
 
-  /** One fresh SparkContext per heavy-tier query RUN → per-query floor
-    * with zero cross-query state AND zero same-query memo state: a second
-    * run inside one context hits the session memos (q41's signature memo
-    * measured 0.07 s where the cold plan costs ~1 s), so each run gets its
-    * own context and the min is a min of COLD runs. Min-of-3 with the raw
-    * per-run vector emitted alongside (r17; was min-of-2): this VM's drift
-    * put single cold contexts up to 3.5× off same-binary cross-checks
-    * (r16's q46 read 0.28× from one bad context), and a visible vector
-    * makes a noise spike self-evident — a real regression shows all runs
-    * slow. Codegen is still excluded the same way the main bench excludes
-    * it — a warm-up execution at sf0.001 inside each context (memos are
-    * keyed per sf dir, so the warm-up compiles the generated classes
-    * without warming the timed dir's memos). ModelStore artifacts still
-    * load from disk — that IS the production warm-serve path (the retrain
-    * leg below prices the alternative). Failures report -1 (never a
-    * speedup). */
+  /** Min-of-[[Runs]] [[coldRun]]s per heavy-tier query, with the raw
+    * per-run vector emitted alongside: this VM's drift put single cold
+    * contexts up to 3.5× off same-binary cross-checks (r16's q46 read
+    * 0.28× from one bad context), and a visible vector makes a noise spike
+    * self-evident — a real regression shows all runs slow. The retrain
+    * leg below prices the alternative to warm serve. Failures report -1
+    * (never a speedup). */
   private[graft] def isolatedFloors(cpus: String, sfDir: String): (String, String) = {
     val rows = HeavyTier.map { name =>
-      val warmDir = "/root/testdata/sf0.001"
-      val ts =
-        try
-          (1 to 3).map { _ =>
-            SparkSession.clearActiveSession()
-            SparkSession.clearDefaultSession()
-            val s = GraftSession.local(cpus)
-            s.sparkContext.setLogLevel("WARN")
-            GraftSession.muteExpectedWarnings()
-            try {
-              if (new java.io.File(warmDir).isDirectory)
-                try { SparkEntry.queries(name)(s, warmDir).count(); () }
-                catch { case _: Throwable => }
-              val t0 = System.nanoTime()
-              SparkEntry.queries(name)(s, sfDir).count()
-              (System.nanoTime() - t0) / 1e9
-            } finally s.stop()
-          }
-        catch { case _: Throwable => Seq(-1.0) }
+      val ts = (1 to Runs).map(_ => coldRun(cpus, name, sfDir).sec)
       val t = if (ts.contains(-1.0)) -1.0 else ts.min
       (s""""$name":$t""", s""""$name":${ts.mkString("[", ",", "]")}""")
     }
@@ -174,94 +190,97 @@ object Bench {
     "q52_knn_ivf", "q115_pq_encode", "q117_ivf_pq",
     "q137_ivfpq_residual", "q140_ivfpq_rerank")
 
-  /** Warm-serve vs pure-retrain A/B for the learned tier (r17): each query
-    * runs in TWO fresh contexts — one with the ModelStore enabled (the
-    * production warm path, artifacts load from disk) and one with
-    * persistence disabled (`ModelStore.root = None`, the exact semantics of
+  /** Warm-serve vs pure-retrain A/B for the learned tier: each query gets
+    * two [[coldRun]]s — one with the ModelStore enabled (the production
+    * warm path, artifacts load from disk) and one with persistence
+    * disabled (`ModelStore.root = None`, the exact semantics of
     * `SPARK_GRAFT_MODEL_DIR=""`), which forces a full retrain from the
-    * parquet inputs. Same warm-up discipline as [[isolatedFloors]]. Each
+    * parquet inputs, since trained models are memoized per session. Each
     * run also reports the artifacts its timed execution trained and
     * loaded (`warm_serve_models` / `retrain_models`), so a cold store that
     * trained during the "warm" run shows as trained, not as warm serve.
-    * Default behavior of every other leg is unchanged;
-    * SPARK_GRAFT_BENCH_RETRAIN=0 skips. Failures report -1. */
+    * Failures report -1. */
   private[graft] def retrainLeg(cpus: String, sfDir: String): String =
     LearnedTier.map { name =>
-      val warmDir = "/root/testdata/sf0.001"
-      def once(disableStore: Boolean): (Double, Long, Long) = {
+      def once(disableStore: Boolean): Cold = {
         val saved = ModelStore.root
-        try {
-          if (disableStore) ModelStore.root = None
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          val s = GraftSession.local(cpus)
-          s.sparkContext.setLogLevel("WARN")
-          GraftSession.muteExpectedWarnings()
-          try {
-            if (new java.io.File(warmDir).isDirectory)
-              try { SparkEntry.queries(name)(s, warmDir).count(); () }
-              catch { case _: Throwable => }
-            val t0 = System.nanoTime()
-            val (_, trained, loaded) =
-              ModelStore.counted(SparkEntry.queries(name)(s, sfDir).count())
-            ((System.nanoTime() - t0) / 1e9, trained, loaded)
-          } finally s.stop()
-        } catch { case _: Throwable => (-1.0, -1L, -1L) }
-        finally ModelStore.root = saved
+        if (disableStore) ModelStore.root = None
+        try coldRun(cpus, name, sfDir) finally ModelStore.root = saved
       }
-      def models(run: (Double, Long, Long)) =
-        s"""{"trained":${run._2},"loaded":${run._3}}"""
+      def models(run: Cold) = s"""{"trained":${run.trained},"loaded":${run.loaded}}"""
       val warm = once(disableStore = false)
       val retrain = once(disableStore = true)
-      s""""$name":{"warm_serve":${warm._1},"retrain":${retrain._1},""" +
+      s""""$name":{"warm_serve":${warm.sec},"retrain":${retrain.sec},""" +
         s""""warm_serve_models":${models(warm)},"retrain_models":${models(retrain)}}"""
     }.mkString("{", ",", "}")
+
+  /** Runs `body` with the streaming legs' per-job knobs set on `spark` and
+    * hands it `start`, which starts a stream into the `noop` sink in update
+    * mode. Afterwards the started query is stopped and both knobs are
+    * restored, whatever `body` did: a failed leg must not leave the
+    * session, which the caller keeps using, with streaming-leg tuning.
+    *  - `spark.sql.shuffle.partitions`: a 2k-row micro-batch against 32
+    *    state-store partitions is pure task/commit overhead. The stream's
+    *    stateful exchange picks its partition count at query START from
+    *    this conf — the same knob a real deployment sets per streaming
+    *    job. 2 measured best for these batch sizes (1/2/4 within noise,
+    *    32 was 2×).
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` off: no-data
+    *    micro-batches exist to advance the watermark when no rows arrive.
+    *    Both legs drain after every add, so each data batch would drag an
+    *    empty watermark-advance batch behind it — pure per-batch overhead
+    *    that halves measured throughput (measured 2.4k -> 5.3k/s) while
+    *    changing nothing the noop sink can observe. State still evicts on
+    *    the next data batch's watermark. */
+  private def withStreamingConf[A](spark: SparkSession, partitions: String)(
+      body: (DataFrame => StreamingQuery) => A): A = {
+    val knobs = Seq("spark.sql.shuffle.partitions" -> partitions,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val saved = knobs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    var q: StreamingQuery = null
+    try {
+      knobs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body { agg =>
+        q = agg.writeStream.format("noop").outputMode("update").start()
+        q
+      }
+    } finally {
+      // stop() can itself throw (hung micro-batch, terminal query error);
+      // the conf restores below must run regardless
+      if (q != null) { try { q.stop() } catch { case _: Throwable => () } }
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  /** A streaming leg's JSON, or an "err" field when it failed, so a
+    * streaming failure does not sink the batch bench. */
+  private def leg(pipeline: String)(body: => String): String =
+    try body
+    catch {
+      case e: Throwable =>
+        val msg = String.valueOf(e.getMessage).replaceAll("[\"\\\\\\n\\r\\t]", " ")
+        s"""{"pipeline":"$pipeline","err":"$msg"}"""
+    }
 
   /** Informational streaming micro-bench: notifications/s through the
     * Example1 pipeline (MemoryStream -> NGSI parse -> flatten -> sliding
     * window min -> noop sink), a fixed number of micro-batches. Tracked next
-    * to the batch numbers so streaming throughput has a per-round figure;
-    * failures degrade to an "err" field rather than sinking the batch bench. */
+    * to the batch numbers so streaming throughput has a per-round figure. */
   private[graft] def streamingBench(spark: SparkSession,
                                     batches: Int = 5,
                                     perBatch: Int = 2000,
-                                    partitions: String = "2"): String = {
-    try {
-      import spark.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      // A 2k-row micro-batch against 32 state-store partitions is pure
-      // task/commit overhead: the stream's stateful exchange picks its
-      // partition count at query START from this conf, so drop it for the
-      // streaming leg only (the timed batch queries above already ran) —
-      // the same knob a real deployment sets per streaming job. 2 measured
-      // best for this micro-batch size (1/2/4 within noise, 32 was 2×).
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      // No-data micro-batches exist to advance the watermark when no rows
-      // arrive (eager state eviction). This harness calls
-      // processAllAvailable after every ADD, so each data batch drags an
-      // empty watermark-advance batch behind it — pure per-batch overhead
-      // that halves measured throughput (measured 2.4k -> 5.3k/s) while
-      // changing nothing the noop sink can observe. Same knob a real
-      // low-latency deployment sets; state still evicts on the next data
-      // batch's watermark.
-      val savedNoData = spark.conf
-        .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-      // conf mutation and query start live INSIDE the restore scope: a
-      // failure anywhere after the first set (stream build, sink init)
-      // must not leave the session with streaming-leg tuning — the outer
-      // catch reports an err string and the caller keeps using the session
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+                                    partitions: String = "2"): String =
+    leg("example1_min_temperature") {
+      withStreamingConf(spark, partitions) { start =>
+        import spark.implicits._
+        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
         val stream = MemoryStream[String]
-        val agg = graft.streaming.NgsiStreams.minTemperatureStream(
-          stream.toDF().select(col("value")))
-        q = agg.writeStream
-          .format("noop")
-          .outputMode("update")
-          .start()
+        val q = start(graft.streaming.NgsiStreams.minTemperatureStream(
+          stream.toDF().select(col("value"))))
         val bodies = (0 until perBatch).map { i =>
           s"""{"subscriptionId":"bench","data":[{"id":"R${i % 50}","type":"Room","temperature":{"type":"Float","value":${20.0 + (i % 15)},"metadata":{}}}]}"""
         }
@@ -273,24 +292,8 @@ object Bench {
         val sec = (System.nanoTime() - t0) / 1e9
         val n = batches.toLong * perBatch
         s"""{"pipeline":"example1_min_temperature","notifications":$n,"batches":$batches,"elapsed_sec":$sec,"notifications_per_sec":${n / sec}}"""
-      } finally {
-        // stop() can itself throw (hung micro-batch, terminal query error);
-        // the conf restores below must run regardless
-        if (q != null) { try { q.stop() } catch { case _: Throwable => () } }
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        savedNoData match {
-          case Some(v) => spark.conf
-            .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-          case None => spark.conf
-            .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-        }
       }
-    } catch {
-      case e: Throwable =>
-        val msg = String.valueOf(e.getMessage).replaceAll("[\"\\\\\\n\\r\\t]", " ")
-        s"""{"pipeline":"example1_min_temperature","err":"$msg"}"""
     }
-  }
 
   /** End-to-end throughput through the REAL HTTP push source — the
     * reference's operating mode (`Example1.scala:17` listens for Orion
@@ -300,29 +303,19 @@ object Bench {
     * next to the MemoryStream figure so the artifact separates pipeline
     * cost (memory leg) from ingest cost (this leg); the elapsed clock
     * covers first POST to fully-drained sink. Same per-job knobs as the
-    * memory leg (small stateful shuffle, no-data batches off). */
+    * memory leg. */
   private[graft] def httpSourceBench(spark: SparkSession,
                                      total: Int = 10000,
                                      threads: Int = 8,
-                                     partitions: String = "2"): String = {
-    try {
+                                     partitions: String = "2"): String =
+    leg("http_source_min_temperature") {
       val port = {
         val ss = new java.net.ServerSocket(0)
         try ss.getLocalPort finally ss.close()
       }
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val savedNoData = spark.conf
-        .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        val agg = graft.streaming.NgsiStreams.minTemperatureStream(
-          graft.streaming.NgsiStreams.fromHttp(spark, port))
-        q = agg.writeStream
-          .format("noop")
-          .outputMode("update")
-          .start()
+      withStreamingConf(spark, partitions) { start =>
+        val q = start(graft.streaming.NgsiStreams.minTemperatureStream(
+          graft.streaming.NgsiStreams.fromHttp(spark, port)))
         // wait for the listener to accept
         var up = false
         val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
@@ -364,20 +357,6 @@ object Bench {
         val sec = (System.nanoTime() - t0) / 1e9
         val n = threads.toLong * per - failures.get()
         s"""{"pipeline":"http_source_min_temperature","notifications":$n,"post_failures":${failures.get()},"post_sec":$postSec,"elapsed_sec":$sec,"notifications_per_sec":${n / sec}}"""
-      } finally {
-        if (q != null) { try { q.stop() } catch { case _: Throwable => () } }
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        savedNoData match {
-          case Some(v) => spark.conf
-            .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-          case None => spark.conf
-            .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-        }
       }
-    } catch {
-      case e: Throwable =>
-        val msg = String.valueOf(e.getMessage).replaceAll("[\"\\\\\\n\\r\\t]", " ")
-        s"""{"pipeline":"http_source_min_temperature","err":"$msg"}"""
     }
-  }
 }

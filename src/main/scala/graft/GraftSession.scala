@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * Centralized so the invariant [[Tables.normalizeTimestamps]] relies on —
   * `spark.sql.session.timeZone=UTC`, which makes the NTZ→TIMESTAMP cast
   * preserve naive wall-clock values as the same epoch instants DuckDB's
-  * oracle computes — holds in EVERY main (Bench, TimeQ, Smoke, Verify,
-  * Explain), not just the ones that remembered the config line. A session
+  * oracle computes — holds in EVERY main (Bench, Profile, Smoke, Verify),
+  * not just the ones that remembered the config line. A session
   * built elsewhere with a different zone would silently time/verify a
   * different workload on a non-UTC host.
   */

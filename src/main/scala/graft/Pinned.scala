@@ -23,7 +23,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    consumption and the result still matches local[4] bit-for-bit.
   *
   * Lazy vs eager carries over unchanged: `pin(false)` stays plan-only at
-  * construction (no job until the first action — the Explain dev loop
+  * construction (no job until the first action — Profile's plan dump
   * relies on this), `pin(true)` materializes immediately.
   *
   * Cleanup: local mode frees blocks through [[FrameBlocks.release]] /

@@ -69,4 +69,7 @@ final class SessionMemo[V](framesOf: V => Seq[DataFrame]) {
 object SessionMemo {
   /** The common single-frame case. */
   def ofFrames(): SessionMemo[DataFrame] = new SessionMemo[DataFrame](Seq(_))
+
+  /** Driver-side values that hold no frames (trained model arrays). */
+  def ofValues[V](): SessionMemo[V] = new SessionMemo[V](_ => Nil)
 }

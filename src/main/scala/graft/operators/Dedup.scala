@@ -562,15 +562,6 @@ object Dedup {
     * hasn't changed since the write). */
   val BucketedPairsConf = "spark.graft.dedup.bucketedPairs"
 
-  /** Bucket count for [[writeBucketedPairs]] (conf-overridable): pairs
-    * are pair-sized — orders of magnitude below corpus bytes — so the
-    * default is the CPU floor, not corpus-bytes pricing; a deployment
-    * whose pair list is itself huge dials this up at write time. */
-  val PairBucketsConf = "spark.graft.dedup.pairBuckets"
-  private def pairBuckets(s: SparkSession): Int =
-    s.conf.getOption(PairBucketsConf).map(_.toInt)
-      .getOrElse(TextFns.cpuPartitions)
-
   /** Deterministic catalog name for dir `d`'s trigram pair table
     * ([[BucketedMemo.tableName]]). */
   def bucketedPairTable(d: String): String =
@@ -588,7 +579,9 @@ object Dedup {
     * bit-equal to a cold derivation) in `GraphBucketedXjvmSpec`. */
   def writeBucketedPairs(s: SparkSession, d: String): String = {
     val t = bucketedPairTable(d)
-    val n = pairBuckets(s)
+    // pairs are pair-sized, orders of magnitude below corpus bytes, so
+    // the bucket count is the CPU floor, not corpus-bytes pricing
+    val n = TextFns.cpuPartitions
     lshPairsFromSigs(sigBase(s, d), numHashes = NumHashes,
       bandSize = BandSize, tNum = TrigramTNum, tDen = TrigramTDen)
       .repartition(n, col("i"))
@@ -733,11 +726,10 @@ object Dedup {
     * shared corpus-wide that the df cap must refuse as block keys). */
   private val sharedContainmentDigests = graft.SessionMemo.ofFrames()
 
-  private[graft] def containmentFromShingles(shingled: DataFrame): DataFrame =
+  private[graft] def containmentFromShingles(shingled: DataFrame,
+      verifyShards: Int = 1): DataFrame =
     containmentFromDigests(
-      containmentDigests(shingled.filter(size(col("sh")) > 0)),
-      shingled.sparkSession.conf.getOption(VerifyShardsConf)
-        .map(_.toInt).getOrElse(1))
+      containmentDigests(shingled.filter(size(col("sh")) > 0)), verifyShards)
 
   /** The digest projection (md5 per shingle, truncated to a 60-bit int64,
     * deduped + sorted per doc) — the CPU cost center, with FOUR consumers
@@ -799,11 +791,6 @@ object Dedup {
     * tf-idf, CCNet buckets — where df divides rather than joins.) */
   val ContainmentDfCap = 256
 
-  /** Session-conf override for the containment VERIFY shard count
-    * (specs force >1 on small fixtures; ops can pin it). Unset → priced
-    * from corpus bytes by [[containmentVerifyShards]]. */
-  val VerifyShardsConf = "spark.graft.containment.verifyShards"
-
   /** Session-conf switch for the containment pipeline's two broadcast
     * plan dials (default on): the heavy-digest anti-join in the rarity
     * gate, and the block-key join's small (≤2-rows-per-doc) side. Off →
@@ -825,28 +812,26 @@ object Dedup {
     * the in-board plan is unchanged. */
   val VerifyShardBytes: Long = 128L << 20
 
-  /** Verify shard count for q78: conf override first, else whole-file
-    * pricing off the UNPROJECTED documents scan (the round-13
-    * `dataPartitions` lesson: projected plan stats are width-scaled far
-    * below file bytes, and the amplification math above is calibrated
-    * against compressed file bytes). */
+  /** Verify shard count for q78: whole-file pricing off the UNPROJECTED
+    * documents scan (the round-13 `dataPartitions` lesson: projected plan
+    * stats are width-scaled far below file bytes, and the amplification
+    * math above is calibrated against compressed file bytes). */
   private[operators] def containmentVerifyShards(
-      s: SparkSession, d: String): Int =
-    s.conf.getOption(VerifyShardsConf).map(_.toInt).getOrElse {
-      val bytes = graft.Tables.load(s, d, "documents")
-        .queryExecution.optimizedPlan.stats.sizeInBytes
-      // a stat-less source reports EXACTLY the defaultSizeInBytes
-      // sentinel — trusting it would price to the 64-shard cap and force
-      // 64 sequential verify jobs over possibly tiny data. Equality, not
-      // >=, on purpose: a deployment that LOWERS the conf (a standard
-      // stat-less-join knob) must not have real large-corpus stats
-      // misread as unknown and collapse the sharding the scratch bound
-      // depends on. Size-unknown degrades to one shard.
-      val unknown = BigInt(
-        org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes)
-      if (bytes == unknown) 1
-      else (bytes / VerifyShardBytes).min(BigInt(64)).toInt.max(1)
-    }
+      s: SparkSession, d: String): Int = {
+    val bytes = graft.Tables.load(s, d, "documents")
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    // a stat-less source reports EXACTLY the defaultSizeInBytes
+    // sentinel — trusting it would price to the 64-shard cap and force
+    // 64 sequential verify jobs over possibly tiny data. Equality, not
+    // >=, on purpose: a deployment that LOWERS the conf (a standard
+    // stat-less-join knob) must not have real large-corpus stats
+    // misread as unknown and collapse the sharding the scratch bound
+    // depends on. Size-unknown degrades to one shard.
+    val unknown = BigInt(
+      org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes)
+    if (bytes == unknown) 1
+    else (bytes / VerifyShardBytes).min(BigInt(64)).toInt.max(1)
+  }
 
   /** The containment verify pass over a candidate-pair frame: join both
     * sides' digest arrays in and keep pairs with |A∩B|/|A| >= 0.8. With

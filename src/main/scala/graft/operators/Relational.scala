@@ -1041,7 +1041,7 @@ object Relational {
       // materialized once: both the span derivation and the left join read
       // it, and recomputing it means scanning events twice. LAZY checkpoint
       // (eager=false): building the DataFrame stays plan-only (no job at
-      // construction — the Explain dev loop would otherwise execute the
+      // construction — Profile's plan dump would otherwise execute the
       // full upstream); the first action materializes, later reads reuse.
       // Fault tolerance is the pin-mode dial (graft.Pinned): default-mode
       // blocks die with an executor; a production run at scale sets

@@ -1157,15 +1157,13 @@ object Similarity {
     * L2 distance (PQ quantizes raw subvectors; cosine has no meaning on a
     * slice) and DENSE code ids: an empty cluster keeps its previous center
     * rather than dropping, because codes must stay exactly 0..K−1.
-    * Memoized per sf dir — q115, q116, and the Verify export all read the
-    * same training run (it is deterministic anyway; the cache just saves
-    * the repeated sample collect). */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]
+    * Memoized per (session, sf dir) — q115, q116, and the Verify export all
+    * read the same training run (it is deterministic anyway; the memo just
+    * saves the repeated sample collect). A new session goes back through
+    * [[graft.ModelStore]], which makes the artifact survive the session. */
+  private val pqCache = graft.SessionMemo.ofValues[Array[Array[Array[Double]]]]()
   def trainPqCodebooks(e: DataFrame, key: String): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent(key, _ =>
-      // per-JVM memo stays (saves the repeated digest scan inside a
-      // session); the store behind it makes the artifact survive the JVM
+    pqCache.getOrCompute(e.sparkSession, key)(
       graft.ModelStore.rowsToCodebooks(
         graft.ModelStore.getOrTrain(e.sparkSession, "pq_codebook",
           graft.ModelStore.digestOf(e, Seq("vec_id", "v")),
@@ -1277,18 +1275,23 @@ object Similarity {
     val w = Window.partitionBy(col("cid"))
       .orderBy(col("csim").asc, col("vec_id"))
     val ranked = lists.withColumn("krank", row_number().over(w).cast("long"))
-    val dropped = ranked
-      .select(col("cid"), col("krank").as("ka"), col("v").as("va"))
-      .join(ranked.select(col("cid"), col("vec_id").as("vb"),
-        col("krank").as("kb"), col("v").as("vb_v")), Seq("cid"))
-      .filter(col("ka") < col("kb") &&
-        cosine(col("va"), col("vb_v")) >= tau)
-      .select(col("vb").as("vec_id")).distinct()
+    // Both sides of the one self-join read the window, so the output rows
+    // come from the same cid exchange as the pairs: a member is kept when
+    // no earlier-ranked member of its cluster dominates it. A separate
+    // dropped-set join back onto the members would not reference krank,
+    // and column pruning would give it its own scan and assignment.
     ranked
-      .join(dropped.withColumn("dup", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid").as("list_id"),
-        col("csim").as("centroid_sim"),
-        col("dup").isNull.as("kept"))
+      .select(col("cid"), col("vec_id"), col("csim"), col("krank").as("kb"),
+        col("v").as("vb"))
+      .join(ranked.select(col("cid").as("ca"), col("krank").as("ka"),
+          col("v").as("va")),
+        col("ca") === col("cid") && col("ka") < col("kb") &&
+          cosine(col("va"), col("vb")) >= tau, "left")
+      .groupBy(col("vec_id"), col("cid")) // vec_id is the key: one csim
+      .agg(first(col("csim")).as("centroid_sim"),
+        (count(col("ka")) === 0).as("kept"))
+      .select(col("vec_id"), col("cid").as("list_id"), col("centroid_sim"),
+        col("kept"))
   }
 
   /** The residual IVF-PQ scored frame — (query_id, vec_id, list_id, adc),
@@ -1409,8 +1412,7 @@ object Similarity {
 
   // --------------- residual IVF-PQ (q137): PQ over v − c(list) ------------
 
-  private val pqResCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]
+  private val pqResCache = graft.SessionMemo.ofValues[Array[Array[Array[Double]]]]()
 
   /** Per-subspace codebooks trained over coarse-quantization RESIDUALS —
     * v minus the centroid of the vector's nearest list — the FAISS IVFPQ
@@ -1425,7 +1427,7 @@ object Similarity {
     * oracle (training only shapes codebook QUALITY — the oracle rechecks
     * encode/search under the exported tables, whatever they contain). */
   def trainResidualCodebooks(e: DataFrame, key: String): Array[Array[Array[Double]]] =
-    pqResCache.computeIfAbsent(key, _ =>
+    pqResCache.getOrCompute(e.sparkSession, key)(
       graft.ModelStore.rowsToCodebooks(
         graft.ModelStore.getOrTrain(e.sparkSession, "pq_residual",
           graft.ModelStore.digestOf(e, Seq("vec_id", "v")),
@@ -1448,8 +1450,8 @@ object Similarity {
     * [[trainOpqModel]]) and the bulk of the gain lands in the first two. */
   val OpqIters = 4
 
-  private val opqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], Array[Array[Array[Double]]])]
+  private val opqCache =
+    graft.SessionMemo.ofValues[(Array[Array[Double]], Array[Array[Array[Double]]])]()
 
   /** Learned OPQ model — an orthonormal rotation R plus per-subspace
     * codebooks over R-rotated vectors, trained by the OPQ non-parametric
@@ -1475,7 +1477,7 @@ object Similarity {
     * exits. Model-scale cost (≤ ~20M flops), corpus-independent. */
   def trainOpqModel(e: DataFrame, key: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    opqCache.computeIfAbsent(key, _ => {
+    opqCache.getOrCompute(e.sparkSession, key) {
       val rows = graft.ModelStore.getOrTrain(e.sparkSession, "opq",
         graft.ModelStore.digestOf(e, Seq("vec_id", "v")),
         s"iters=$OpqIters,M=$PqM,K=$PqK,n=$PqSample") {
@@ -1485,7 +1487,7 @@ object Similarity {
       }
       (graft.ModelStore.rowsToMatrix(rows),
         graft.ModelStore.rowsToCodebooks(rows))
-    })
+    }
 
   private def trainOpqModelUncached(e: DataFrame)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
@@ -1691,8 +1693,8 @@ object Similarity {
     * q81's random 64 → 16 JL sketch). */
   val PcaK = 8
 
-  private val pcaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Double], Array[Array[Double]], Array[Double])]
+  private val pcaCache =
+    graft.SessionMemo.ofValues[(Array[Double], Array[Array[Double]], Array[Double])]()
 
   /** Learned PCA model (mean, top-[[PcaK]] components as rows, their
     * eigenvalues) — the LEARNED projection tier above q81's fixed random
@@ -1709,7 +1711,7 @@ object Similarity {
     * [[graft.ModelStore]] like every other trained artifact. */
   def trainPcaModel(e: DataFrame, key: String)
       : (Array[Double], Array[Array[Double]], Array[Double]) =
-    pcaCache.computeIfAbsent(key, _ => {
+    pcaCache.getOrCompute(e.sparkSession, key) {
       val rows = graft.ModelStore.getOrTrain(e.sparkSession, "pca",
         graft.ModelStore.digestOf(e, Seq("vec_id", "v")),
         s"k=$PcaK,n=$PqSample,dim=$EmbDim") {
@@ -1721,7 +1723,7 @@ object Similarity {
       (graft.ModelStore.rowsToMatrix(rows, "mu")(0),
         graft.ModelStore.rowsToMatrix(rows, "w"),
         graft.ModelStore.rowsToMatrix(rows, "ev")(0))
-    })
+    }
 
   private def trainPcaUncached(e: DataFrame)
       : (Array[Double], Array[Array[Double]], Array[Double]) = {

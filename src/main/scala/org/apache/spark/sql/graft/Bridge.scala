@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -14,6 +15,8 @@ import org.apache.spark.sql.classic
   *    helper can build a kernel directly, with no function-registry lookup.
   *  - Spark's DIVIDE_BY_ZERO error, so a kernel that folds a division
   *    ([[graft.functions.NearestCentroid]]) fails the way `Divide` does.
+  *  - the `private[spark]` listener bus, drained so [[graft.Shape]] reads
+  *    its totals after every event of the metered body was delivered.
   * This object lives in a subpackage — the standard pattern Spark
   * extension libraries use for custom-operator entry points. Nothing else
   * in the repo reaches into Spark internals' private surface. */
@@ -27,4 +30,6 @@ object Bridge {
 
   def divideByZero(): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

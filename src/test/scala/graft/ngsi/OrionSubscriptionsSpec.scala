@@ -100,7 +100,6 @@ class OrionSubscriptionsSpec extends AnyFunSuite {
     }
     // a broker that rejects (405 here) must raise, not return garbage
     withBroker { (port, _) =>
-      val client = new OrionSubscriptionClient(s"http://127.0.0.1:$port")
       val e = intercept[IllegalStateException] {
         // PUT-only stub answers 405 to nothing but POST/DELETE; force a
         // non-201 by posting to a path the stub rejects

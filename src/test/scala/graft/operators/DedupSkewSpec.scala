@@ -108,17 +108,13 @@ class DedupSkewSpec extends SparkSpec {
     val shingled = texts.toSeq.toDF("doc_id", "text")
       .select(col("doc_id"),
         TextFns.shingles(TextFns.toks(col("text")), 3).as("sh"))
-    def run(): Seq[String] =
-      Dedup.containmentFromShingles(shingled)
+    def run(verifyShards: Int = 1): Seq[String] =
+      Dedup.containmentFromShingles(shingled, verifyShards)
         .collect().map(_.toString).sorted.toSeq
     val single = run()
     assert(single.size == groups * per, s"planted truth: ${single.size}")
-    spark.conf.set(Dedup.VerifyShardsConf, "3")
-    try {
-      val sharded = run()
-      assert(sharded == single,
-        "sharded union diverged from the single-pass verify")
-    } finally spark.conf.unset(Dedup.VerifyShardsConf)
+    assert(run(verifyShards = 3) == single,
+      "sharded union diverged from the single-pass verify")
 
     // the broadcast plan dials (heavy-digest anti-join + block-key
     // broadcast) must be PLAN-only: flipping them off re-plans the

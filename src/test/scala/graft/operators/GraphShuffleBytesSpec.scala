@@ -1,16 +1,15 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Shape, SparkSpec}
 
 /** Measured proof of SCALE.md's graph-tier claim (the ShuffleBytesSpec
   * discipline applied to q201/q208/q202): each iteration moves EDGE-SIZED
   * volume — never edge×degree, never quadratic in nodes — and every
   * shuffled row is a constant-width numeric tuple (ids + int64/decimal
-  * partials; no strings, no adjacency lists). A stage-metrics listener
-  * totals real shuffle-write bytes/records with broadcast joins DISABLED,
+  * partials; no strings, no adjacency lists). [[graft.Shape]] totals
+  * real shuffle-write bytes/records with broadcast joins DISABLED,
   * so the node-sized sides shuffle exactly as they would on a
   * 1000-executor cluster; the checkpointed edge list is materialized
   * BEFORE the tally so the one-time input spread (orders⋈lineitem →
@@ -19,33 +18,6 @@ import graft.SparkSpec
 class GraphShuffleBytesSpec extends SparkSpec {
 
   private val dir = sfDirAt("0.01")
-
-  private class ShuffleTally extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        ()
-      }
-    }
-  }
-
-  private def measure(work: => Unit): (Long, Long) = {
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      work
-      var last = -1L
-      var spins = 0
-      while (tally.bytes.get() != last && spins < 50) {
-        last = tally.bytes.get(); spins += 1; Thread.sleep(100)
-      }
-    } finally spark.sparkContext.removeSparkListener(tally)
-    (tally.bytes.get(), tally.records.get())
-  }
 
   private def noBroadcast[A](work: => A): A = {
     val conf = spark.conf
@@ -64,7 +36,7 @@ class GraphShuffleBytesSpec extends SparkSpec {
   private lazy val nNodes = e.select(col("src")).distinct().count()
 
   test("q201 PageRank: per-iteration shuffle volume is edge-sized (measured)") {
-    val (bytes, records) = noBroadcast(measure {
+    val (_, Shape(_, _, _, _, bytes, records, _)) = noBroadcast(Shape.of(spark) {
       assert(Graph.pagerankOn(e).collect().length == Graph.PrTopN)
     })
     info(f"pagerank shuffled ${bytes}%,d B / ${records}%,d records " +
@@ -88,7 +60,7 @@ class GraphShuffleBytesSpec extends SparkSpec {
   test("q208 HITS: per-sweep shuffle volume is edge-sized (measured)") {
     val de = e.filter(col("src") % 2 === 0) // customer→supplier direction
     val nDirected = de.count()
-    val (bytes, records) = noBroadcast(measure {
+    val (_, Shape(_, _, _, _, bytes, records, _)) = noBroadcast(Shape.of(spark) {
       assert(Graph.hitsOn(de).collect().length == 2 * Graph.HitsTopN)
     })
     info(f"hits shuffled ${bytes}%,d B / ${records}%,d records " +
@@ -104,7 +76,7 @@ class GraphShuffleBytesSpec extends SparkSpec {
   }
 
   test("q202 BFS: per-hop shuffle volume is bounded by reached edges (measured)") {
-    val (bytes, records) = noBroadcast(measure {
+    val (_, Shape(_, _, _, _, bytes, records, _)) = noBroadcast(Shape.of(spark) {
       assert(Graph.queries("q202_bfs_khop")(spark, dir).collect().nonEmpty)
     })
     info(f"bfs shuffled ${bytes}%,d B / ${records}%,d records " +

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-import graft.SparkSpec
+import graft.{Shape, SparkSpec}
 
 /** Measured proof of the monitoring tier's shuffle-volume claims (the
   * ShuffleBytesSpec discipline applied to q223/q224): the Poisson
@@ -15,33 +14,6 @@ import graft.SparkSpec
   * what a 1000-executor run would pay per stage boundary. */
 class MonitoringShuffleBytesSpec extends SparkSpec {
 
-  private class ShuffleTally extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        ()
-      }
-    }
-  }
-
-  private def measure(work: => Unit): (Long, Long) = {
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      work
-      var last = -1L
-      var spins = 0
-      while (tally.bytes.get() != last && spins < 50) {
-        last = tally.bytes.get(); spins += 1; Thread.sleep(100)
-      }
-    } finally spark.sparkContext.removeSparkListener(tally)
-    (tally.bytes.get(), tally.records.get())
-  }
-
   test("q223: bootstrap shuffles (groups × B)-sized partials, not the ×B explode (measured)") {
     val dir = sfDirAt("0.01")
     val events = graft.Tables.load(spark, dir, "events")
@@ -52,7 +24,7 @@ class MonitoringShuffleBytesSpec extends SparkSpec {
     val (nRows, nTypes) = (shape.getLong(0), shape.getLong(1))
     val b = Relational.BootReplicas.toLong
     val exploded = nRows * b // what a combine-less plan would shuffle
-    val (bytes, records) = measure {
+    val (_, Shape(_, _, _, _, bytes, records, _)) = Shape.of(spark) {
       assert(Relational.queries("q223_bootstrap_ci")(spark, dir)
         .collect().nonEmpty)
     }
@@ -78,7 +50,7 @@ class MonitoringShuffleBytesSpec extends SparkSpec {
       "count(distinct cast(ts as date))").collect()(0)
     val nRows = shape.getLong(0)
     val cells = shape.getLong(1) * shape.getLong(2)
-    val (bytes, records) = measure {
+    val (_, Shape(_, _, _, _, bytes, records, _)) = Shape.of(spark) {
       assert(Relational.queries("q224_term_bursts")(spark, dir)
         .collect().nonEmpty)
     }

@@ -240,7 +240,7 @@ class RelationalSpec extends SparkSpec {
     val expected = events.groupBy(_._1).flatMap { case (uid, evs) =>
       val sorted = evs.sortBy(e => (e._2.getTime, e._3)).toList
       val runs = sorted.foldLeft(List.empty[(String, java.sql.Timestamp, Long)]) {
-        case (acc @ ((t0, from, n) :: rest), (_, ts, _, et)) if t0 == et =>
+        case ((t0, from, n) :: rest, (_, _, _, et)) if t0 == et =>
           (t0, from, n + 1) :: rest
         case (acc, (_, ts, _, et)) => (et, ts, 1L) :: acc
       }.reverse

@@ -67,4 +67,15 @@ class SemDedupSpec extends SparkSpec {
     assert(keptN > 0 && keptN < expected.size,
       s"degenerate outcome: $keptN kept of ${expected.size}")
   }
+
+  test("q144's executed plan assigns the corpus once") {
+    val df = graft.SparkEntry.queries("q144_semdedup")(spark, sfDir)
+    df.collect()
+    val assigning = graft.PlanCheck.walk(df.queryExecution.executedPlan)
+      .filter(_.expressions.exists(_.exists(
+        _.isInstanceOf[graft.functions.NearestCentroid])))
+    info(df.queryExecution.executedPlan.toString)
+    assert(assigning.size == 1,
+      s"graft_nearest_centroid evaluated in ${assigning.size} plan nodes")
+  }
 }

@@ -1,14 +1,13 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Shape, SparkSpec}
 
 /** Measured proof of SCALE.md's central dedup claim, stated precisely:
   * past the one-time input spread, the LSH pipeline's shuffle volume
-  * scales with DOCUMENT COUNT, not corpus bytes. A stage-metrics
-  * listener totals actual shuffle-write bytes for the full pipeline
+  * scales with DOCUMENT COUNT, not corpus bytes. [[graft.Shape]]
+  * totals actual shuffle-write bytes for the full pipeline
   * (shingle → sign → band → pair-join → verify) with broadcast joins
   * DISABLED so the banded self-join really shuffles like it would at
   * 100 TB. The keyed stages emit NumHashes/BandSize band rows per doc
@@ -21,34 +20,6 @@ import graft.SparkSpec
   * 4 KB+ documents the same constants are ~2% of corpus volume.) */
 class ShuffleBytesSpec extends SparkSpec {
 
-  private class ShuffleTally extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        ()
-      }
-    }
-  }
-
-  private def measure(work: => Unit): (Long, Long) = {
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      work
-      // listener events drain asynchronously — poll until the tally settles
-      var last = -1L
-      var spins = 0
-      while (tally.bytes.get() != last && spins < 50) {
-        last = tally.bytes.get(); spins += 1; Thread.sleep(100)
-      }
-    } finally spark.sparkContext.removeSparkListener(tally)
-    (tally.bytes.get(), tally.records.get())
-  }
-
   test("LSH keyed stages shuffle constant-width digest rows, never text (measured)") {
     val dir = sfDirAt("0.01") // enough docs for a clean signal
     val docs = graft.Tables.load(spark, dir, "documents")
@@ -59,8 +30,8 @@ class ShuffleBytesSpec extends SparkSpec {
     val conf = spark.conf
     val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (bytes, records) =
-      try measure {
+    val (_, Shape(_, _, _, _, bytes, records, _)) =
+      try Shape.of(spark) {
         val pairs = Dedup.lshNearDupPairs(docs, 3, Dedup.NumHashes,
           Dedup.BandSize, 0, 7, 10)
         assert(pairs.collect().nonEmpty, "expected near-dup pairs in testdata")

@@ -603,7 +603,7 @@ class SimilaritySpec extends SparkSpec {
       val got = byQuery(qid).sortBy(_._3).map(_._4).toSeq
       assert(got == expected, s"query $qid")
       // and none of the returned sims exceeds the unconstrained brute top-1
-      assert(byQuery(qid).forall { case (_, _, _, id, _, s) =>
+      assert(byQuery(qid).forall { case (_, _, _, _, _, s) =>
         s <= vecs.filter(v => v._1 != qid).map(v => cos(qv, v._3)).max + 1e-12 })
     }
   }

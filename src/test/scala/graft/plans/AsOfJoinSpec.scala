@@ -13,8 +13,6 @@ import graft.SparkSpec
 class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  private def ts(us: Long) = new java.sql.Timestamp(us / 1000)
-
   private def leftDf(rows: (Long, Long)*) =
     rows.toDF("k", "t_us").select(col("k"),
       timestamp_micros(col("t_us")).as("t"))
