@@ -550,74 +550,14 @@ object Dedup {
   private val sharedPairs = graft.SessionMemo.ofFrames()
   private val sharedLabels = graft.SessionMemo.ofFrames()
 
-  /** Opt-in cross-session amortization of the trigram LSH pair build —
-    * the [[Graph.BucketedEdgesConf]] pattern applied to the dedup
-    * family's costliest derived artifact. When this conf is `true` AND
-    * [[writeBucketedPairs]] has published the dir's pair table, the
-    * eight-consumer q42 family reads it instead of re-running
-    * shingle→minhash→band→verify over the corpus. OFF by default — the
-    * oracle-gated queries must never silently serve a table written
-    * against older files (same staleness-refusal discipline as the graph
-    * edge table: opting in is an operator's assertion that the corpus
-    * hasn't changed since the write). */
-  val BucketedPairsConf = "spark.graft.dedup.bucketedPairs"
-
-  /** Deterministic catalog name for dir `d`'s trigram pair table
-    * ([[BucketedMemo.tableName]]). */
-  def bucketedPairTable(d: String): String =
-    BucketedMemo.tableName("graft_pairs", d)
-
-  /** WRITE-ONCE side: materialize the verified trigram pair list
-    * (i, j, jac) as a parquet table BUCKETED AND SORTED BY i, so a later
-    * session's i-keyed consumers (the CC seed aggregate, q77/q96's pair
-    * joins) plan against the scan's HashPartitioning(i) with no exchange
-    * — and, more importantly at 100 TB, the corpus-scale LSH scan that
-    * DERIVES the pairs is paid once per corpus version, not once per
-    * session. Both halves are spec-pinned like the graph edge table's:
-    * within-JVM in `DedupBucketedPairsSpec`, cross-JVM (two forked
-    * driver processes over a Derby-backed Hive metastore, CC labels
-    * bit-equal to a cold derivation) in `GraphBucketedXjvmSpec`. */
-  def writeBucketedPairs(s: SparkSession, d: String): String = {
-    val t = bucketedPairTable(d)
-    // pairs are pair-sized, orders of magnitude below corpus bytes, so
-    // the bucket count is the CPU floor, not corpus-bytes pricing
-    val n = TextFns.cpuPartitions
-    lshPairsFromSigs(sigBase(s, d), numHashes = NumHashes,
-      bandSize = BandSize, tNum = TrigramTNum, tDen = TrigramTDen)
-      .repartition(n, col("i"))
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(n, "i").sortBy("i", "j")
-      .saveAsTable(t)
-    // stamp the corpus fingerprint so an opted-in read over files that
-    // changed since this write fails loudly instead of serving stale pairs
-    BucketedMemo.stampFingerprint(s, t, pairInputs(d))
-    t
-  }
-
-  /** The files the pair derivation reads — the fingerprint domain for
-    * the bucketed table's staleness check. */
-  private def pairInputs(d: String): Seq[String] =
-    Seq(s"$d/documents.parquet")
-
-  /** Read-or-build decision behind [[trigramPairs]], separated so the
-    * bucketed-table spec can pin it: catalog table when opted in and
-    * present, cold LSH derivation otherwise. The table read is NOT
-    * pinned — its scan already carries the layout, and re-reading
-    * bucketed parquet is exactly the storage-backed multi-session
-    * shape. */
-  private[operators] def pairSource(s: SparkSession, d: String): DataFrame =
-    BucketedMemo.readOrBuild(s, BucketedPairsConf, bucketedPairTable(d),
-      pairInputs(d))(
+  /** The q42 trigram near-dup pair list (i, j, jac) — computed once per
+    * (session, sf dir) from the shared signature stage, lazily
+    * materialized (checkpoint on first action). */
+  private def trigramPairs(s: SparkSession, d: String): DataFrame =
+    sharedPairs.getOrCompute(s, d)(
       lshPairsFromSigs(sigBase(s, d), numHashes = NumHashes,
         bandSize = BandSize, tNum = TrigramTNum, tDen = TrigramTDen)
         .pin(false))
-
-  /** The q42 trigram near-dup pair list (i, j, jac) — computed once per
-    * (session, sf dir) from the shared signature stage, lazily
-    * materialized (checkpoint on first action) — or, opted in, read from
-    * the cross-session bucketed table. */
-  private def trigramPairs(s: SparkSession, d: String): DataFrame =
-    sharedPairs.getOrCompute(s, d)(pairSource(s, d))
 
   /** Connected-component labels (doc_id, component) over [[trigramPairs]] —
     * the cluster-label table of the near-dup family, computed once per
@@ -791,14 +731,6 @@ object Dedup {
     * tf-idf, CCNet buckets — where df divides rather than joins.) */
   val ContainmentDfCap = 256
 
-  /** Session-conf switch for the containment pipeline's two broadcast
-    * plan dials (default on): the heavy-digest anti-join in the rarity
-    * gate, and the block-key join's small (≤2-rows-per-doc) side. Off →
-    * the pre-round-14 shuffle joins, for corpora whose over-cap
-    * vocabulary or doc count outgrows a broadcast. Same candidate set
-    * either way — the spec pins both branches bit-equal. */
-  val HeavyBroadcastConf = "spark.graft.containment.heavyBroadcast"
-
   /** One verify shard per this many bytes of COMPRESSED documents input.
     * The verify pass is the scratch-peak owner of the whole containment
     * pipeline: its second join duplicates the contained side's digest
@@ -880,22 +812,11 @@ object Dedup {
     // disk profile showed the climb to peak scratch was exactly these
     // candidate-gen shuffle files, not the verify tail. The df aggregate
     // feeding the broadcast is map-side combined (counts, not postings).
-    // 100 TB note: the heavy-set worst case grows as postings/Cap — a
-    // corpus whose boilerplate vocabulary outgrows a broadcast (billions
-    // of distinct over-cap digests) flips [[HeavyBroadcastConf]] off and
-    // pays the old shuffle semi-join instead; the switch changes the
-    // plan, never the candidate set (both express df <= Cap exactly).
     val dfc = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val rare =
-      if (base.sparkSession.conf
-          .getOption(HeavyBroadcastConf).forall(_.toBoolean))
-        ex.join(broadcast(dfc.filter(col("df") > ContainmentDfCap)
-            .select(col("h"))), Seq("h"), "left_anti")
-          .select(col("doc_id"), col("n"), col("h"))
-      else
-        ex.join(dfc.filter(col("df") <= ContainmentDfCap).select(col("h")),
-            "h")
-          .select(col("doc_id"), col("n"), col("h"))
+    val rare = ex
+      .join(broadcast(dfc.filter(col("df") > ContainmentDfCap)
+        .select(col("h"))), Seq("h"), "left_anti")
+      .select(col("doc_id"), col("n"), col("h"))
     // 2 smallest rare digests per doc via the bounded MinKLongs partial:
     // aggregation state is 2 slots regardless of how many rare digests a
     // long doc carries (collect_list would buffer them all)
@@ -916,15 +837,8 @@ object Dedup {
     // (~postings × 24 B, the second-largest scratch item in the sf100
     // disk profile). Broadcasting the small side leaves the postings in
     // place; only the (df-cap-bounded) candidate pairs move into the
-    // distinct. 100 TB note: bot grows with doc COUNT (2.5B docs ≈
-    // 60 GB), past broadcast range — the same [[HeavyBroadcastConf]]
-    // escape hatch flips this join back to shuffle; plan dial only, the
-    // pair set is identical.
-    val botSide =
-      if (base.sparkSession.conf
-          .getOption(HeavyBroadcastConf).forall(_.toBoolean)) broadcast(bot)
-      else bot
-    val cand = botSide
+    // distinct.
+    val cand = broadcast(bot)
       .join(rare.select(col("doc_id").as("b"), col("n").as("nb"), col("h")),
         "h")
       .filter(col("a") =!= col("b") && col("na") * 4 <= col("nb") * 5)

@@ -50,10 +50,9 @@ object Relational {
     * near. Total rows bound the largest group's domain from above, so the
     * switch is safe by construction; past the ceiling the bucketed shape
     * takes over and the 100 TB wide-domain argument (SCALE.md round 12 §4)
-    * applies unchanged. Overridable per session via
-    * `spark.graft.hist.adaptiveMax` (0 forces bucketed everywhere — the
-    * equivalence spec uses this; a huge value forces windowed). */
-  val HistAdaptiveConf = "spark.graft.hist.adaptiveMax"
+    * applies unchanged. [[histCumulative]]'s `adaptiveMax` parameter
+    * defaults to it; 0 forces the decomposition (the equivalence spec's
+    * setting). */
   val HistAdaptiveMax = 1L << 20
 
   /** Two-level cumulative counts over the DISTINCT values of each group —
@@ -86,7 +85,9 @@ object Relational {
     * shapes are spec-pinned equal (`HistCumulativeSpec`), so the switch can
     * never change a result, only a plan. */
   private[operators] def histCumulative(hist0: DataFrame, groupCol: String,
-                                        valueCol: String): DataFrame = {
+                                        valueCol: String,
+                                        adaptiveMax: Long = HistAdaptiveMax
+                                       ): DataFrame = {
     // an input the CALLER already pinned (LogicalRDD root — q169 shares
     // one materialized histogram across two walks and its final agg) must
     // not be re-checkpointed: a pin of a pin is a full row copy for
@@ -96,12 +97,10 @@ object Relational {
       case _ => hist0.pin(false)
     }
     val v = col(valueCol)
-    val adaptiveMax = hist0.sparkSession.conf.getOption(HistAdaptiveConf)
-      .map(_.toLong).getOrElse(HistAdaptiveMax)
     // adaptiveMax <= 0 is the absolute force-bucketed override: skip the
-    // probe count entirely (the dial's contract is "bucketed everywhere",
-    // which must not cost a count job per call — and an EMPTY histogram
-    // must not sneak into the windowed branch through 0 <= 0)
+    // probe count entirely ("bucketed everywhere" must not cost a count
+    // job per call — and an EMPTY histogram must not sneak into the
+    // windowed branch through 0 <= 0)
     if (adaptiveMax > 0 && hist.count() <= adaptiveMax) {
       // Small domain: one window pass, largest task ≤ total histogram rows.
       // Column order matches the bucketed branch (hist.*, n, cum).
@@ -175,8 +174,10 @@ object Relational {
     * null tail yields NULL in both (MIN skips nulls on each side). */
   private[operators] def histRankWalk(hist: DataFrame, groupCol: String,
                                       valueCol: String,
-                                      ranks: Seq[(String, String)]): DataFrame = {
-    val cum = histCumulative(hist, groupCol, valueCol)
+                                      ranks: Seq[(String, String)],
+                                      adaptiveMax: Long = HistAdaptiveMax
+                                     ): DataFrame = {
+    val cum = histCumulative(hist, groupCol, valueCol, adaptiveMax)
     val rankCols = ranks.map { case (name, rankExpr) =>
       min(when(col("cum") >= expr(rankExpr), col(valueCol))).as(name)
     }

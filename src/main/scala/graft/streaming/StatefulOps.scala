@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom streaming state operators (`flatMapGroupsWithState` /
   * `mapGroupsWithState`) — the extension point the reference's keyed window
@@ -19,6 +19,32 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   */
 object StatefulOps {
 
+  /** The one idle-timeout mechanism of the keyed operators below.
+    * `idleTimeout = Some(d)` retires a key after `d` of processing time
+    * without records: its state is removed and `expired` turns the last
+    * state into output (nothing, unless the operator says otherwise).
+    * Every live call re-arms the timeout before `live` runs. `None` keeps
+    * state forever and never triggers an empty batch. */
+  private implicit class IdleTimeoutGroups[K, V](
+      grouped: KeyValueGroupedDataset[K, V]) {
+    def flatMapWithIdleTimeout[S: Encoder, U: Encoder](mode: OutputMode,
+        idleTimeout: Option[String],
+        expired: (K, S) => Iterator[U] = (_: K, _: S) => Iterator.empty)(
+        live: (K, Iterator[V], GroupState[S]) => Iterator[U]): Dataset[U] =
+      grouped.flatMapGroupsWithState[S, U](mode,
+        if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
+        else GroupStateTimeout.NoTimeout()) { (key, values, state) =>
+        if (state.hasTimedOut) {
+          val last = state.get
+          state.remove()
+          expired(key, last)
+        } else {
+          idleTimeout.foreach(state.setTimeoutDuration)
+          live(key, values, state)
+        }
+      }
+  }
+
   /** A keyed record: `key` is the dedup identity (e.g. a content hash). */
   case class Keyed(key: String, payload: String)
 
@@ -33,16 +59,9 @@ object StatefulOps {
   def firstSeen(ds: Dataset[Keyed],
                 idleTimeout: Option[String] = Some("1 hour")): Dataset[Keyed] = {
     import ds.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     ds.groupByKey(_.key)
-      .flatMapGroupsWithState[Boolean, Keyed](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
+      .flatMapWithIdleTimeout[Boolean, Keyed](OutputMode.Append(), idleTimeout) {
         case (_, records, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           if (state.exists) Iterator.empty
           else { state.update(true); records.take(1) }
       }
@@ -72,14 +91,9 @@ object StatefulOps {
         md5(col("text"))))
       .select(col("sig"), col("doc_id"), col("text"))
       .as[(String, Long, String)]
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, Doc](OutputMode.Append(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove(); Iterator.empty
+      .flatMapWithIdleTimeout[Boolean, Doc](OutputMode.Append(), idleTimeout) {
         case (_, records, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           if (state.exists) Iterator.empty
           else { state.update(true); records.take(1).map(r => Doc(r._2, r._3)) }
       }
@@ -111,16 +125,9 @@ object StatefulOps {
   def funnelStream(events: Dataset[FunnelEvent],
                    idleTimeout: Option[String] = Some("1 hour")): Dataset[FunnelRow] = {
     import events.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelProgress, FunnelRow](
-        OutputMode.Update(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
+      .flatMapWithIdleTimeout[FunnelProgress, FunnelRow](OutputMode.Update(), idleTimeout) {
         case (uid, batch, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           val before = state.getOption.getOrElse(FunnelProgress(None, None, None))
           val st = advanceFunnel(before, batch.toSeq)
           if (st == before) Iterator.empty
@@ -230,16 +237,9 @@ object StatefulOps {
   def transitionStream(events: Dataset[TransEvent],
                        idleTimeout: Option[String] = Some("1 hour")): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, Transition](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
+      .flatMapWithIdleTimeout[LastEvent, Transition](OutputMode.Append(), idleTimeout) {
         case (uid, batch, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           val sorted = batch.toSeq.sortWith { (a, b) =>
             val c = a.ts.compareTo(b.ts)
             c < 0 || (c == 0 && a.event_id < b.event_id)
@@ -277,16 +277,9 @@ object StatefulOps {
   def scd2Stream(events: Dataset[Scd2Event],
                  idleTimeout: Option[String] = Some("1 hour")): Dataset[Scd2Interval] = {
     import events.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RunState, Scd2Interval](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
+      .flatMapWithIdleTimeout[RunState, Scd2Interval](OutputMode.Append(), idleTimeout) {
         case (uid, batch, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           val sorted = batch.toSeq.sortWith { (a, b) =>
             val c = a.ts.compareTo(b.ts)
             c < 0 || (c == 0 && a.event_id < b.event_id)
@@ -369,16 +362,9 @@ object StatefulOps {
                      horizonUs: Long = 60L * 1000000L,
                      idleTimeout: Option[String] = None): Dataset[CoverageRow] = {
     import events.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CoverageState, CoverageRow](
-        OutputMode.Update(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
+      .flatMapWithIdleTimeout[CoverageState, CoverageRow](OutputMode.Update(), idleTimeout) {
         case (uid, batch, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           val sorted = batch.toSeq.sortBy(e => (e.st_us, e.event_id))
           var st = state.getOption.getOrElse(CoverageState(Long.MinValue, 0L, 0L, 0L))
           sorted.foreach { e =>
@@ -431,15 +417,9 @@ object StatefulOps {
         .groupBy(identity).iterator
         .map { case (t, xs) => (t, d.doc_id, xs.length.toLong) }.toSeq
     }
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     td.groupByKey(_._1)
-      .flatMapGroupsWithState[PostingState, SharedTermPair](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove(); Iterator.empty
+      .flatMapWithIdleTimeout[PostingState, SharedTermPair](OutputMode.Append(), idleTimeout) {
         case (term, rows, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           var st = state.getOption.getOrElse(PostingState(Nil, saturated = false))
           val out = scala.collection.mutable.ListBuffer.empty[SharedTermPair]
           rows.foreach { case (_, did, tf) =>
@@ -489,15 +469,9 @@ object StatefulOps {
         .map(i => (graft.operators.TextFns.md5hex(
           tk.slice(i, i + w).mkString(" ")), d.doc_id)).toSeq.distinct
     }
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     sightings.groupByKey(_._1)
-      .flatMapGroupsWithState[SpanState, DupSpan](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove(); Iterator.empty
+      .flatMapWithIdleTimeout[SpanState, DupSpan](OutputMode.Append(), idleTimeout) {
         case (wh, rows, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           val out = scala.collection.mutable.ListBuffer.empty[DupSpan]
           var st = state.getOption.orNull
           rows.foreach { case (_, did) =>
@@ -535,16 +509,9 @@ object StatefulOps {
   def asofStream(rows: Dataset[AsofRow],
                  idleTimeout: Option[String] = Some("1 hour")): Dataset[AsofMatch] = {
     import rows.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     rows.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CalState, AsofMatch](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
+      .flatMapWithIdleTimeout[CalState, AsofMatch](OutputMode.Append(), idleTimeout) {
         case (uid, batch, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           val sorted = batch.toSeq.sortWith { (a, b) =>
             val c = a.ts.compareTo(b.ts)
             c < 0 || (c == 0 && (a.tag < b.tag ||
@@ -835,21 +802,15 @@ object StatefulOps {
   def runningMin(ds: Dataset[KeyedValue],
                  idleTimeout: Option[String] = Some("1 hour")): Dataset[RunningMin] = {
     import ds.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     ds.groupByKey(_.key)
-      .mapGroupsWithState[Float, RunningMin](timeoutConf) {
-        case (key, _, state) if state.hasTimedOut =>
-          val last = state.get
-          state.remove()
-          RunningMin(key, last)
+      .flatMapWithIdleTimeout[Float, RunningMin](OutputMode.Update(),
+        idleTimeout, expired = (key, last) => Iterator.single(RunningMin(key, last))) {
         case (key, records, state) =>
-          idleTimeout.foreach(state.setTimeoutDuration)
           val batchMin = records.map(_.value).min
           val newMin =
             if (state.exists) math.min(state.get, batchMin) else batchMin
           state.update(newMin)
-          RunningMin(key, newMin)
+          Iterator.single(RunningMin(key, newMin))
       }
   }
 }

@@ -6,10 +6,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Shared plan-inspection helpers for the layout/bucketing specs — one
-  * AQE-aware walker and one catalog-read matcher, so a Spark upgrade
-  * that changes `AdaptiveSparkPlanExec`/`QueryStageExec` shapes or the
-  * catalog relation classes is fixed in ONE place instead of silently
-  * weakening whichever copied spec was missed. */
+  * AQE-aware walker, so a Spark upgrade that changes
+  * `AdaptiveSparkPlanExec`/`QueryStageExec` shapes is fixed in ONE place
+  * instead of silently weakening whichever copied spec was missed. */
 object PlanCheck {
 
   /** Every physical node of an EXECUTED plan, descending through AQE
@@ -25,14 +24,4 @@ object PlanCheck {
   def shuffles(df: DataFrame): Int =
     walk(df.queryExecution.executedPlan)
       .count(_.isInstanceOf[ShuffleExchangeLike])
-
-  /** Whether `df`'s analyzed plan reads catalog table `table` (either
-    * relation shape Spark may resolve a saved table to). */
-  def isCatalogRead(df: DataFrame, table: String): Boolean =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.catalyst.catalog.HiveTableRelation
-        if r.tableMeta.identifier.table == table => r
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-        if l.catalogTable.exists(_.identifier.table == table) => l
-    }.nonEmpty
 }

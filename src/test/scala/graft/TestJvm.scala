@@ -1,10 +1,10 @@
 package graft
 
 /** The JDK17 `--add-opens` set Spark needs, shared by every spec that
-  * forks real JVMs (local-cluster executors, cross-JVM metastore legs)
-  * — one list to extend when a Spark/JDK upgrade needs another entry,
-  * instead of three hand-maintained copies failing one forked spec at a
-  * time with an opaque InaccessibleObjectException. Mirrors build.sbt's
+  * forks real JVMs (local-cluster executors) — one list to extend when a
+  * Spark/JDK upgrade needs another entry, instead of hand-maintained
+  * copies failing one forked spec at a time with an opaque
+  * InaccessibleObjectException. Mirrors build.sbt's
   * `jdk17AddOpens` (the sbt-forked test JVM's own options). */
 object TestJvm {
 
@@ -16,10 +16,6 @@ object TestJvm {
     "java.base/java.util.concurrent.atomic",
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar")
-
-  /** As discrete argv entries: `--add-opens pkg=ALL-UNNAMED …`. */
-  val addOpensArgs: Seq[String] =
-    openPackages.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** As one space-joined option string (executor extraJavaOptions). */
   val addOpensString: String =

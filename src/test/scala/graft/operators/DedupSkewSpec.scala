@@ -13,7 +13,9 @@ import graft.SparkSpec
   * corpus, and q78 with one mega-doc that swallows hundreds of small docs
   * plus corpus-wide boilerplate shingles the df cap must refuse as block
   * keys. Both must complete, return exactly the planted truth, and keep
-  * their equi-join plan shape (no nested-loop fallback under skew). */
+  * their equi-join plan shape (no nested-loop fallback under skew). The
+  * containment pass must also survive degenerate corpora — empty, one
+  * document, a null text — with no pairs and no exception. */
 class DedupSkewSpec extends SparkSpec {
 
   private def assertNoBnl(df: org.apache.spark.sql.DataFrame): Unit = {
@@ -115,15 +117,27 @@ class DedupSkewSpec extends SparkSpec {
     assert(single.size == groups * per, s"planted truth: ${single.size}")
     assert(run(verifyShards = 3) == single,
       "sharded union diverged from the single-pass verify")
+  }
 
-    // the broadcast plan dials (heavy-digest anti-join + block-key
-    // broadcast) must be PLAN-only: flipping them off re-plans the
-    // candidate pass as the old shuffle joins with an identical pair set
-    spark.conf.set(Dedup.HeavyBroadcastConf, "false")
-    try {
-      val shuffled = run()
-      assert(shuffled == single,
-        "shuffle-join branch diverged from the broadcast branch")
-    } finally spark.conf.unset(Dedup.HeavyBroadcastConf)
+  private def containmentPairs(docs: Seq[(Long, String)]): Long = {
+    import spark.implicits._
+    val shingled = docs.toDF("doc_id", "text").select(col("doc_id"),
+      TextFns.shingles(TextFns.toks(col("text")), 3).as("sh"))
+    Dedup.containmentFromShingles(shingled).count()
+  }
+
+  test("q78 degenerate: an empty corpus yields no pairs") {
+    assert(containmentPairs(Seq.empty) == 0L)
+  }
+
+  test("q78 degenerate: a single document contains nothing but itself") {
+    assert(containmentPairs(Seq(0L -> "one lone document with several tokens in it")) == 0L)
+  }
+
+  test("q78 degenerate: a null-text document yields no pairs") {
+    assert(containmentPairs(Seq(0L -> null)) == 0L)
+    // and does not disturb a corpus with no containment in it either
+    assert(containmentPairs(Seq(0L -> null,
+      1L -> "alpha beta gamma delta epsilon", 2L -> "zeta eta theta iota kappa")) == 0L)
   }
 }

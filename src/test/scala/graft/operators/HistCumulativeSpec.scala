@@ -28,16 +28,9 @@ class HistCumulativeSpec extends SparkSpec {
     * exercising the decomposition even though every spec-sized histogram
     * is far below the adaptive ceiling. */
   private def bucketed(hist: org.apache.spark.sql.DataFrame): Seq[String] =
-    withAdaptiveMax("0") {
-      Relational.histCumulative(hist, "g", "v")
-        .select(col("g"), col("v"), col("cnt"), col("cum"), col("n"))
-        .collect().map(_.toString).sorted.toSeq
-    }
-
-  private def withAdaptiveMax[A](max: String)(body: => A): A = {
-    spark.conf.set(Relational.HistAdaptiveConf, max)
-    try body finally spark.conf.unset(Relational.HistAdaptiveConf)
-  }
+    Relational.histCumulative(hist, "g", "v", adaptiveMax = 0)
+      .select(col("g"), col("v"), col("cnt"), col("cum"), col("n"))
+      .collect().map(_.toString).sorted.toSeq
 
   test("bucketed cumulative == windowed cumulative on a mixed-edge corpus") {
     import spark.implicits._
@@ -70,11 +63,9 @@ class HistCumulativeSpec extends SparkSpec {
     }
     val hist = rows.toDF("g", "v")
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-    val got = withAdaptiveMax("0") {
-      Relational.histRankWalk(hist, "g", "v",
-        (1 to 3).map(k => s"q$k" -> s"($k * n + 3) div 4"))
-        .collect().map(_.toString).sorted.toSeq
-    }
+    val got = Relational.histRankWalk(hist, "g", "v",
+        (1 to 3).map(k => s"q$k" -> s"($k * n + 3) div 4"), adaptiveMax = 0)
+      .collect().map(_.toString).sorted.toSeq
     // JVM oracle: sort each group's expanded values, pick ceil(k·n/4)-th
     val expected = rows.groupBy(_._1).toSeq.map { case (g, vs) =>
       val sorted = vs.map(_._2).sorted
@@ -97,14 +88,14 @@ class HistCumulativeSpec extends SparkSpec {
     }
     val hist = rows.toDF("g", "v")
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-    def plan(max: String): (String, Seq[String]) = withAdaptiveMax(max) {
-      val df = Relational.histCumulative(hist, "g", "v")
+    def plan(max: Long): (String, Seq[String]) = {
+      val df = Relational.histCumulative(hist, "g", "v", adaptiveMax = max)
       (df.queryExecution.optimizedPlan.toString,
         df.select(col("g"), col("v"), col("cnt"), col("cum"), col("n"))
           .collect().map(_.toString).sorted.toSeq)
     }
-    val (smallPlan, smallOut) = plan((1L << 20).toString) // under ceiling
-    val (bigPlan, bigOut) = plan("0")                     // over ceiling
+    val (smallPlan, smallOut) = plan(1L << 20) // under ceiling
+    val (bigPlan, bigOut) = plan(0)            // over ceiling
     // the decomposition is recognizable by its bucket column; the
     // one-window shape must not contain it
     assert(!smallPlan.contains("_bkt"), "small histogram took the bucketed branch")
@@ -118,18 +109,16 @@ class HistCumulativeSpec extends SparkSpec {
     import spark.implicits._
     val empty = Seq.empty[(String, Long)].toDF("g", "v")
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-    withAdaptiveMax("0") {
-      val sc = spark.sparkContext
-      val before = sc.statusTracker.getJobIdsForGroup(null).length
-      val df = Relational.histCumulative(empty, "g", "v")
-      // construction must not schedule the count() probe under the override
-      assert(sc.statusTracker.getJobIdsForGroup(null).length == before,
-        "force-bucketed override still paid a probe count job")
-      // 0 rows <= adaptiveMax 0 must NOT route the empty histogram into
-      // the windowed branch — the dial is absolute, not a size comparison
-      assert(df.queryExecution.optimizedPlan.toString.contains("_bkt"),
-        "empty histogram slipped into the windowed branch under the override")
-      assert(df.count() == 0)
-    }
+    val sc = spark.sparkContext
+    val before = sc.statusTracker.getJobIdsForGroup(null).length
+    val df = Relational.histCumulative(empty, "g", "v", adaptiveMax = 0)
+    // construction must not schedule the count() probe under the override
+    assert(sc.statusTracker.getJobIdsForGroup(null).length == before,
+      "force-bucketed override still paid a probe count job")
+    // 0 rows <= adaptiveMax 0 must NOT route the empty histogram into
+    // the windowed branch — the override is absolute, not a size comparison
+    assert(df.queryExecution.optimizedPlan.toString.contains("_bkt"),
+      "empty histogram slipped into the windowed branch under the override")
+    assert(df.count() == 0)
   }
 }
