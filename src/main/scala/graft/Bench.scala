@@ -249,15 +249,15 @@ object Bench {
       // stop() can itself throw (hung micro-batch, terminal query error);
       // the conf restores below must run regardless
       if (q != null) { try { q.stop() } catch { case _: Throwable => () } }
-      // unload the leg's state-store providers and stop Spark's JVM-wide
-      // maintenance task: left running, it outlives the session and logs
-      // a failed round per provider once the state-store coordinator is
-      // gone
-      StateStore.stop()
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
+      // unload the leg's state-store providers and stop Spark's JVM-wide
+      // maintenance task: left running, it outlives the session and logs
+      // a failed round per provider once the state-store coordinator is
+      // gone. A provider's close() can throw; the restores above are done
+      try StateStore.stop() catch { case _: Throwable => () }
     }
   }
 

@@ -22,7 +22,8 @@ object StatefulOps {
   /** The one idle-timeout mechanism of the keyed operators below.
     * `idleTimeout = Some(d)` retires a key after `d` of processing time
     * without records: its state is removed and `expired` turns the last
-    * state into output (nothing, unless the operator says otherwise).
+    * state, if any, into output (nothing, unless the operator says
+    * otherwise).
     * Every live call re-arms the timeout before `live` runs. `None` keeps
     * state forever and never triggers an empty batch. */
   private implicit class IdleTimeoutGroups[K, V](
@@ -35,9 +36,11 @@ object StatefulOps {
         if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
         else GroupStateTimeout.NoTimeout()) { (key, values, state) =>
         if (state.hasTimedOut) {
-          val last = state.get
+          // a key can time out with no state stored: the timeout is armed
+          // before `live` runs, and `live` need not call `update`
+          val last = state.getOption
           state.remove()
-          expired(key, last)
+          last.map(expired(key, _)).getOrElse(Iterator.empty)
         } else {
           idleTimeout.foreach(state.setTimeoutDuration)
           live(key, values, state)

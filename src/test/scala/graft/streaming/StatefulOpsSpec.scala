@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -67,5 +70,50 @@ class StatefulOpsSpec extends SparkSpec {
       val byBatchR2 = rows.filter(_.key == "R2").map(_.min).toSeq
       assert(byBatchR2 == Seq(30.0f, 25.5f))
     } finally q.stop()
+  }
+
+  /** Runs `op` with a 1 s idle timeout: feeds `first`, waits past the
+    * timeout, then feeds `second`, whose batch retires the idle keys of
+    * `first`. No-data batches are off so each add settles; the timeouts
+    * ride on the next data batch. Returns the state rows removed. */
+  private def retireIdleKeys[A: Encoder](op: Dataset[A] => Dataset[_],
+      mode: OutputMode, first: Seq[A], second: Seq[A]): Long = {
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val in = MemoryStream[A]
+    val q = op(in.toDS()).writeStream.format("noop").outputMode(mode).start()
+    try {
+      in.addData(first)
+      q.processAllAvailable()
+      Thread.sleep(1500)
+      in.addData(second)
+      q.processAllAvailable()
+      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
+    } finally {
+      q.stop()
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  private def ts(s: Long) = new Timestamp(s * 1000)
+
+  test("idle timeout retires a funnel key that never stored state") {
+    // a view with no signup does not advance the funnel: the key holds an
+    // armed timeout but no state
+    val removed = retireIdleKeys[FunnelEvent](funnelStream(_, Some("1 second")),
+      OutputMode.Update(),
+      first = Seq(FunnelEvent(1L, "view", ts(10))),
+      second = Seq(FunnelEvent(2L, "signup", ts(20))))
+    assert(removed == 1)
+  }
+
+  test("idle timeout retires an asof key that saw only events") {
+    val removed = retireIdleKeys[AsofRow](asofStream(_, Some("1 second")),
+      OutputMode.Append(),
+      first = Seq(AsofRow(1L, ts(10), 7L, tag = 1, value = 0.5)),
+      second = Seq(AsofRow(2L, ts(20), 8L, tag = 0, value = 1.5)))
+    assert(removed == 1)
   }
 }
