@@ -98,3 +98,20 @@ object NgsiParser extends Serializable {
       entities = entities)
   }
 }
+
+/** The JSON string escaper behind both hand-written JSON shapes: the HTTP
+  * source's capture lines and [[OrionSubscription.toJson]]. Quote,
+  * backslash and the three named controls get their short escapes, other
+  * control characters four-hex-digit unicode escapes; everything else,
+  * non-ASCII included, is written raw. */
+object NgsiJson {
+  def esc(s: String): String = s.flatMap {
+    case '"'          => "\\\""
+    case '\\'         => "\\\\"
+    case '\n'         => "\\n"
+    case '\r'         => "\\r"
+    case '\t'         => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c            => c.toString
+  }
+}

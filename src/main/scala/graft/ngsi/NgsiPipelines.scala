@@ -88,6 +88,12 @@ object NgsiPipelines {
   def attrValue(name: String): Column =
     element_at(col("attrs"), name).getField("value")
 
+  /** The `temperature` attribute as a float. `try_cast`: a value that is
+    * not a number (`"hot"`) reads as a missing attribute instead of failing
+    * the query under ANSI casts. */
+  private def temperature: Column =
+    attrValue("temperature").try_cast("float").as("temperature")
+
   /** Example1 (`Example1.scala:17-31`): per-entity temperature, keyed
     * sliding window, MIN. Emits (window, id, temperature_min) — the
     * deterministic projection of Flink's `min("temperature")` record
@@ -97,7 +103,7 @@ object NgsiPipelines {
                      slide: String = "2 seconds"): DataFrame =
     flattenEntities(events.toDF())
       .select(col("recvTime"), col("id"),
-              attrValue("temperature").cast("float").as("temperature"))
+              temperature)
       .groupBy(window(col("recvTime"), windowDur, slide), col("id"))
       .agg(min(col("temperature")).as("temperature_min"))
 
@@ -115,7 +121,7 @@ object NgsiPipelines {
                      slide: String = "2 seconds"): DataFrame =
     flattenEntities(events.toDF())
       .select(col("recvTime"), col("id"),
-              attrValue("temperature").cast("float").as("temperature"))
+              temperature)
       // Entities without the attribute must not reach the Aggregator: the
       // scala-Float encoder deserializes SQL null as 0.0f, which would be
       // COUNTED and corrupt the average (min() skips nulls natively; this

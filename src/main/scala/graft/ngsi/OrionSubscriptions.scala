@@ -1,8 +1,7 @@
 package graft.ngsi
 
 import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.time.Duration
+import java.net.http.{HttpRequest, HttpResponse}
 
 /** A typed NGSI v2 subscription — the request the reference drives with
   * `files/example2/curl_SubscribeToEntityNotifications.sh` (entity
@@ -22,15 +21,7 @@ object OrionSubscription {
     * idPattern-based selector would slot in the same place. */
   case class Entity(id: String, entityType: String)
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case '\n'         => "\\n"
-    case '\r'         => "\\r"
-    case '\t'         => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c            => c.toString
-  }
+  import NgsiJson.esc
 
   private def arr(xs: Seq[String]): String =
     xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
@@ -56,23 +47,19 @@ object OrionSubscription {
 /** Minimal typed client for the NGSI v2 subscription API — the last
   * operational step the reference leaves to curl. Same HTTP stack and
   * tenancy-header convention as [[OrionSink]] (`Fiware-Service` /
-  * `Fiware-ServicePath` ride as headers, never in the payload). This is
-  * DRIVER-side control-plane code: subscriptions are created once per
-  * pipeline, so there is nothing to distribute.
+  * `Fiware-ServicePath` ride as headers, never in the payload), and the
+  * sink's JVM-wide client and timeout. This is DRIVER-side control-plane
+  * code: subscriptions are created once per pipeline, so there is nothing
+  * to distribute.
   */
 class OrionSubscriptionClient(brokerBase: String,
                               service: Option[String] = None,
-                              servicePath: Option[String] = None,
-                              connectTimeoutMs: Int = 5000) {
-
-  private val client = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofMillis(connectTimeoutMs.toLong))
-    .build()
+                              servicePath: Option[String] = None) {
 
   private def builder(path: String): HttpRequest.Builder = {
     val b = HttpRequest.newBuilder()
       .uri(URI.create(brokerBase.stripSuffix("/") + path))
-      .timeout(Duration.ofMillis(connectTimeoutMs.toLong))
+      .timeout(OrionSink.Timeout)
     service.foreach(b.header("Fiware-Service", _))
     servicePath.foreach(b.header("Fiware-ServicePath", _))
     b
@@ -83,7 +70,7 @@ class OrionSubscriptionClient(brokerBase: String,
     * IllegalStateException with the status + body — a silent failed
     * subscribe would look exactly like a silent broker. */
   def create(sub: OrionSubscription): String = {
-    val resp = client.send(
+    val resp = OrionSink.client.send(
       builder("/v2/subscriptions")
         .header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(OrionSubscription.toJson(sub)))
@@ -101,6 +88,6 @@ class OrionSubscriptionClient(brokerBase: String,
   /** DELETE /v2/subscriptions/{id}; true iff the broker acknowledged
     * (204). */
   def delete(id: String): Boolean =
-    client.send(builder(s"/v2/subscriptions/$id").DELETE().build(),
+    OrionSink.client.send(builder(s"/v2/subscriptions/$id").DELETE().build(),
       HttpResponse.BodyHandlers.discarding()).statusCode() == 204
 }

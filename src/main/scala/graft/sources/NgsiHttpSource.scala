@@ -18,6 +18,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.ngsi.NgsiJson.esc
+
 /** Structured Streaming source for NGSI v2 notifications pushed over HTTP —
   * the Spark rebuild of the reference's `OrionSource(port)` (reference usage
   * `Example1.scala:17`; wire format `files/example1/curl_Notification.sh`,
@@ -32,11 +34,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   value STRING, service STRING, servicePath STRING, recvTime TIMESTAMP
   *
+  * Options: `port` (required) and `captureDir`. Any other key fails
+  * `load()` by name, so a retired dial is never silently ignored.
+  *
   * Semantics and scale notes:
   *  - Like the reference's Netty server, ingest is a single listener and,
-  *    without options, offsets are NOT replayable across driver restarts
-  *    (the reference has the same at-most-once property). The optional
-  *    `captureDir` option upgrades this to durable at-least-once: every
+  *    without `captureDir`, offsets are NOT replayable across driver
+  *    restarts (the reference has the same at-most-once property). The
+  *    optional `captureDir` upgrades this to durable at-least-once: every
   *    notification is appended (+fsync) to a JSON-lines capture log in that
   *    directory BEFORE it is acked, so an ack means durably-on-disk — and
   *    offsets become RESUMABLE: a restarted source numbers the prior
@@ -46,7 +51,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    every acked-but-unprocessed event transparently (a fresh query with
   *    no checkpoint replays the log from the start). The batch-side
   *    [[graft.ngsi.NgsiPipelines.replayCaptured]](dir, format="json")
-  *    remains for offline compaction. Restart edge contracts, all
+  *    reads the same files for batch backfill. Restart edge contracts, all
   *    spec-pinned (NgsiHttpSourceSpec): a crash between write and fsync
   *    can tear only the final line of the open capture file, and that
   *    event was never acked — the restarted source skips a torn TAIL but
@@ -60,9 +65,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    pattern as Spark's own socket source). Parsing/windowing downstream is
   *    fully distributed; the listener is only the accept path.
   *  - Slow-consumer bound: the in-driver ring is capped at
-  *    `maxBufferBytes` (default [[NgsiHttpSource.DefaultMaxBufferBytes]],
-  *    512 MiB of estimated HEAP — 2 bytes per UTF-16 char plus
-  *    per-record overhead) of accepted-but-uncommitted notifications.
+  *    [[NgsiHttpSource.MaxBufferBytes]] (512 MiB of estimated HEAP —
+  *    2 bytes per UTF-16 char plus per-record overhead) of
+  *    accepted-but-uncommitted notifications.
   *    Admission is while-UNDER-the-cap (overshoot by at most one record,
   *    plus one more once the whole ring is planned so the next batch can
   *    commit it: the hard bound is the cap + two payloads, and an oversized
@@ -80,14 +85,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    loss window is operator-visible; bounding driver memory remains
   *    the right trade-off versus an OOM that kills the whole query.
   *  - Task-payload bound: live rows ride inside serialized partitions,
-  *    so the planned live slice is chunked at `liveChunkBytes` (default
-  *    4 MiB) per partition — a drain-the-ring recovery batch plans many
-  *    bounded tasks across executors instead of one 512 MiB task.
-  *  - Capture-log reclamation: `compactCommitted=true` deletes prior
-  *    incarnations' capture files once their whole range is at or below
-  *    the committed watermark (commit runs after the offset is durably
-  *    checkpointed, and restart rebases past shortened history — the
-  *    same contract that makes manual compaction safe). Default off.
+  *    so the planned live slice is chunked at
+  *    [[NgsiHttpSource.LiveChunkBytes]] (4 MiB) per partition — a
+  *    drain-the-ring recovery batch plans many bounded tasks across
+  *    executors instead of one 512 MiB task.
+  *  - Capture-log reclamation is the operator's (the compaction contract
+  *    above): the source never deletes capture files, because
+  *    `replayCaptured` backfills read committed ones.
   *
   * Usage: `spark.readStream.format("graft.sources.NgsiHttpSource")
   *   .option("port", 9001).load()`
@@ -98,32 +102,17 @@ class NgsiHttpSource extends TableProvider {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     // properties arrive with original-case keys; DSv2 options are
-    // case-insensitive by contract, so normalize before lookup
+    // case-insensitive by contract, so compare and look up ignoring case
+    properties.keySet.forEach { k =>
+      if (!NgsiHttpSource.Options.exists(_.equalsIgnoreCase(k)))
+        throw new IllegalArgumentException(s"ngsi-http source: unknown option " +
+          s"'$k'; it accepts only ${NgsiHttpSource.Options.mkString(" and ")}")
+    }
     val opts = new CaseInsensitiveStringMap(properties)
-    // Validate dials HERE, not at first use: a zero historyChunkRecords
-    // would throw NumericRange-step-0 mid-replay, and a NEGATIVE one
-    // would make every per-file chunk range empty — history partitions
-    // silently omitted while the offset range still advances, i.e.
-    // acked captured events skipped on replay. Same loud-at-construction
-    // posture for the byte dials.
-    val maxBufferBytes = Option(opts.get("maxbufferbytes")).map(_.toLong)
-      .getOrElse(NgsiHttpSource.DefaultMaxBufferBytes)
-    val historyChunkRecords = Option(opts.get("historychunkrecords")).map(_.toLong)
-      .getOrElse(NgsiHttpSource.DefaultHistoryChunkRecords)
-    val liveChunkBytes = Option(opts.get("livechunkbytes")).map(_.toLong)
-      .getOrElse(NgsiHttpSource.DefaultLiveChunkBytes)
-    require(maxBufferBytes > 0, s"maxBufferBytes must be > 0, got $maxBufferBytes")
-    require(historyChunkRecords > 0,
-      s"historyChunkRecords must be > 0, got $historyChunkRecords")
-    require(liveChunkBytes > 0, s"liveChunkBytes must be > 0, got $liveChunkBytes")
     new NgsiHttpTable(
       Option(opts.get("port")).map(_.toInt)
         .getOrElse(throw new IllegalArgumentException("ngsi-http source requires a 'port' option")),
-      Option(opts.get("capturedir")),
-      maxBufferBytes,
-      historyChunkRecords,
-      liveChunkBytes,
-      Option(opts.get("compactcommitted")).exists(_.toBoolean))
+      Option(opts.get("capturedir")))
   }
 }
 
@@ -134,7 +123,10 @@ object NgsiHttpSource {
     StructField("servicePath", StringType),
     StructField("recvTime", TimestampType)))
 
-  /** Default ceiling for the driver-resident ingest ring (estimated
+  /** The only option keys the source accepts; `getTable` refuses others. */
+  private val Options: Seq[String] = Seq("port", "captureDir")
+
+  /** Ceiling for the driver-resident ingest ring (estimated
     * HEAP bytes of accepted-but-uncommitted notifications: 2 bytes per
     * UTF-16 char of payload + header strings, plus fixed per-record
     * overhead — JVM Strings store chars two bytes wide, so charging raw
@@ -155,17 +147,17 @@ object NgsiHttpSource {
     * 512 MiB ≈ a quarter million 1 KB notifications of headroom —
     * minutes of a stalled consumer at full ingest rate, far beyond any
     * micro-batch hiccup. */
-  val DefaultMaxBufferBytes: Long = 512L << 20
+  val MaxBufferBytes: Long = 512L << 20
 
   /** Per-partition byte budget when planning the LIVE ring slice: a
     * drain-the-ring batch (recovery after a stall) can hold up to
-    * `maxBufferBytes` of rows, and rows ride INSIDE the serialized
+    * [[MaxBufferBytes]] of rows, and rows ride INSIDE the serialized
     * partition to executors — one unchunked partition would ship up to
     * 512 MiB through a single task (task-binary warnings, single-task
     * parse). Chunking by bytes keeps every task payload bounded and
     * spreads the recovery parse across executors; steady-state batches
     * are far below one chunk and still plan a single partition. */
-  val DefaultLiveChunkBytes: Long = 4L << 20
+  val LiveChunkBytes: Long = 4L << 20
 
   /** Records per history-replay partition: one incarnation writes ONE
     * capture file, so a long-lived incarnation's file can be huge — and
@@ -174,14 +166,15 @@ object NgsiHttpSource {
     * across executors; the skip phase of a chunk is parse-free line
     * counting (construction already validated the file), so the re-walk
     * cost per chunk is line I/O, not JSON work. */
-  val DefaultHistoryChunkRecords: Long = 1L << 16
+  val HistoryChunkRecords: Long = 1L << 16
 }
 
+/** The three sizes are [[NgsiHttpSource]]'s constants; specs shrink them
+  * through these parameters. */
 private[sources] class NgsiHttpTable(port: Int, captureDir: Option[String],
-    maxBufferBytes: Long = NgsiHttpSource.DefaultMaxBufferBytes,
-    historyChunkRecords: Long = NgsiHttpSource.DefaultHistoryChunkRecords,
-    liveChunkBytes: Long = NgsiHttpSource.DefaultLiveChunkBytes,
-    compactCommitted: Boolean = false)
+    maxBufferBytes: Long = NgsiHttpSource.MaxBufferBytes,
+    historyChunkRecords: Long = NgsiHttpSource.HistoryChunkRecords,
+    liveChunkBytes: Long = NgsiHttpSource.LiveChunkBytes)
     extends Table with SupportsRead {
   override def name(): String = s"ngsi-http:$port"
   override def schema(): StructType = NgsiHttpSource.Schema
@@ -195,7 +188,7 @@ private[sources] class NgsiHttpTable(port: Int, captureDir: Option[String],
           throw new UnsupportedOperationException("ngsi-http is streaming-only")
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new NgsiHttpMicroBatchStream(port, captureDir, maxBufferBytes,
-            historyChunkRecords, liveChunkBytes, compactCommitted)
+            historyChunkRecords, liveChunkBytes)
       }
     }
 }
@@ -227,10 +220,9 @@ private[sources] final case class BufferedNotification(
 
 private[sources] class NgsiHttpMicroBatchStream(
     port: Int, captureDir: Option[String] = None,
-    maxBufferBytes: Long = NgsiHttpSource.DefaultMaxBufferBytes,
-    historyChunkRecords: Long = NgsiHttpSource.DefaultHistoryChunkRecords,
-    liveChunkBytes: Long = NgsiHttpSource.DefaultLiveChunkBytes,
-    compactCommitted: Boolean = false)
+    maxBufferBytes: Long = NgsiHttpSource.MaxBufferBytes,
+    historyChunkRecords: Long = NgsiHttpSource.HistoryChunkRecords,
+    liveChunkBytes: Long = NgsiHttpSource.LiveChunkBytes)
     extends MicroBatchStream with ReportsSourceMetrics {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -331,15 +323,6 @@ private[sources] class NgsiHttpMicroBatchStream(
   // (append-only, so restarts add a new file to the same directory and
   // replayCaptured reads them all). Opened lazily on the first notification.
   private var captureOut: java.io.FileOutputStream = null
-  private def jsonEsc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
 
   /** Append + fsync one accepted notification BEFORE it is acked: once the
     * poster sees 200, the event is on disk and survives any driver kill.
@@ -355,7 +338,7 @@ private[sources] class NgsiHttpMicroBatchStream(
       captureOut = new java.io.FileOutputStream(
         new java.io.File(dir, f"capture-${System.currentTimeMillis()}%015d-${System.nanoTime()}%019d.json"), true)
     }
-    val line = s"""{"value":"${jsonEsc(rec.body)}","service":"${jsonEsc(rec.service)}","servicePath":"${jsonEsc(rec.servicePath)}","recvTime":${rec.recvTimeMicros / 1000L}}""" + "\n"
+    val line = s"""{"value":"${esc(rec.body)}","service":"${esc(rec.service)}","servicePath":"${esc(rec.servicePath)}","recvTime":${rec.recvTimeMicros / 1000L}}""" + "\n"
     captureOut.write(line.getBytes(StandardCharsets.UTF_8))
     captureOut.flush()
     captureOut.getFD.sync()
@@ -600,31 +583,6 @@ private[sources] class NgsiHttpMicroBatchStream(
       buffer.remove(0, drop)
       firstSeq = math.max(firstSeq, e)
     }
-    // Opt-in capture-log reclamation: without it a long-lived deployment's
-    // captureDir grows without bound (the manual-compaction contract in
-    // NgsiHttpSourceSpec is the only other reclaim path). Spark calls
-    // commit AFTER the offset is durably in the checkpoint log, so a file
-    // whose whole range sits at or below the committed watermark can
-    // never be planned again (planInputPartitions lower-bounds at
-    // prevBase) and never be needed by a restart (the checkpoint offset
-    // rebases past the shortened history — the same spec-pinned contract
-    // manual deletion relies on). histFiles entries stay: they are plan
-    // metadata only, and prevBase already excludes their ranges. Only
-    // PRIOR incarnations' files are candidates — this incarnation's open
-    // capture file is not in histFiles.
-    if (compactCommitted) {
-      val base = prevBase // volatile read once
-      histFiles.foreach { hf =>
-        if (hf.start + hf.count <= base && hf.file.exists()) {
-          if (hf.file.delete())
-            log.info(s"ngsi-http:$port compacted committed capture file " +
-              s"${hf.file.getName} (records [${hf.start}, ${hf.start + hf.count}))")
-          else
-            log.warn(s"ngsi-http:$port failed to delete committed capture " +
-              s"file ${hf.file}")
-        }
-      }
-    }
   }
 
   override def stop(): Unit = {
@@ -740,7 +698,7 @@ private[sources] object NgsiCaptureLog {
     * but newline-terminated final line) is real corruption over ACKED
     * events — fail loudly rather than silently resume over a hole.
     * Decoding is lenient (InputStreamReader's default REPLACE action):
-    * jsonEsc writes non-ASCII raw, so a tear mid-multibyte-character
+    * NgsiJson.esc writes non-ASCII raw, so a tear mid-multibyte-character
     * must reach the JSON parse as U+FFFD and the torn-tail logic, not
     * kill the whole read with a charset exception. Memory is O(line) —
     * this walker must never buffer a file. */

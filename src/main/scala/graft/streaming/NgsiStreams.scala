@@ -119,12 +119,15 @@ object NgsiStreams {
         } finally { updates.unpersist(); () }
       }
 
-  /** HTTP-only sink via ForeachWriter (per-record, fully streaming). */
+  /** HTTP-only sink: each micro-batch of updates goes to
+    * [[graft.ngsi.OrionSink.writeBatch]], the one POST path. */
   def toOrion(updates: DataFrame,
               headers: Map[String, String] = Map.empty): DataStreamWriter[Row] =
     updates.writeStream
       .outputMode(OutputMode.Update())
-      .foreach(new OrionSink.Writer(headers = headers))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        OrionSink.writeBatch(batch, headers)
+      }
 
   def start(w: DataStreamWriter[Row], trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     w.trigger(trigger).start()

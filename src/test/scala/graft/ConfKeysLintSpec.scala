@@ -3,14 +3,19 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint for session options: every `"spark.graft.…"` string
-  * literal in `src/main` must name one of the two deployment settings of
-  * the pin mode ([[Pinned.ModeConf]], [[Pinned.DirConf]]). Each further
-  * option doubles the configurations the specs must cover, so a new one
-  * fails here until the allowed set is changed on purpose. */
+import graft.sources.NgsiHttpSource
+
+/** Lint for settable values. Every `"spark.graft.…"` string literal in
+  * `src/main` must name one of the two deployment settings of the pin
+  * mode ([[Pinned.ModeConf]], [[Pinned.DirConf]]), and the NGSI HTTP
+  * source must take exactly `port` and `captureDir`. Each further option
+  * doubles the configurations the specs must cover, so a new one fails
+  * here until the allowed set is changed on purpose. */
 class ConfKeysLintSpec extends AnyFunSuite {
 
   private val allowed = Set("spark.graft.checkpoint", "spark.graft.checkpoint.dir")
@@ -33,5 +38,24 @@ class ConfKeysLintSpec extends AnyFunSuite {
         .mkString("; "))
     assert(found.keySet == allowed,
       s"allowed options no longer named in src/main: ${allowed -- found.keySet}")
+  }
+
+  test("the NGSI source accepts exactly the options port and captureDir") {
+    val source = new NgsiHttpSource
+    def table(opts: (String, String)*) = source.getTable(
+      source.inferSchema(CaseInsensitiveStringMap.empty()), Array.empty,
+      opts.toMap.asJava)
+    // both accepted options together, in any case: DSv2 keys are
+    // case-insensitive
+    table("port" -> "0", "captureDir" -> "/nonexistent")
+    table("PORT" -> "0", "capturedir" -> "/nonexistent")
+    // the four retired dials and two keys other sources take: each must
+    // be refused by name, not fail on its value
+    def refused(k: String) = Try(table("port" -> "0", k -> "1")).failed.toOption
+      .exists(e => e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains(k))
+    val accepted = Seq("maxBufferBytes", "historyChunkRecords", "liveChunkBytes",
+      "compactCommitted", "path", "host").filterNot(refused)
+    assert(accepted.isEmpty,
+      s"NGSI source options outside {port, captureDir}: ${accepted.mkString(", ")}")
   }
 }

@@ -81,4 +81,72 @@ class OrionSinkSpec extends SparkSpec {
       } finally q.stop()
     }
   }
+
+  private def notification(entity: String) =
+    s"""{"subscriptionId":"sub1","data":[$entity]}"""
+
+  private def room(id: String, value: String) =
+    s"""{"id":"$id","type":"Room","temperature":{"type":"Float","value":$value,"metadata":{}}}"""
+
+  test("valid JSON with no entity id, a space in the id or a non-numeric value " +
+    "does not kill the example2 query") {
+    withReceiver { (port, got) =>
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(String, Long)]
+      val raw = mem.toDF()
+        .select(col("_1").as("value"), timestamp_millis(col("_2")).as("recvTime"))
+      val minDf = NgsiStreams.minTemperatureStream(raw, "10 seconds", "5 seconds", "5 seconds")
+      val updates = NgsiPipelines.toOrionUpdates(minDf,
+        s"http://127.0.0.1:$port/v2/entities/")
+      val q = NgsiStreams.start(NgsiStreams.toOrion(updates))
+      try {
+        val bodies = Seq(
+          notification(room("Room1", "21.5")),
+          // no id: the update URL is null
+          notification("""{"type":"Room","temperature":{"type":"Float","value":20.0}}"""),
+          // a space in the id: the update URL is not a URI
+          notification(room("R 1", "20.0")),
+          // a string value: not a float
+          notification(room("Room3", "\"hot\"")),
+          notification(room("Room1", "19.0")))
+        // one micro-batch per body, all in one 5 s window
+        bodies.zipWithIndex.foreach { case (b, i) =>
+          mem.addData(b -> (1700000000000L + i))
+          q.processAllAvailable()
+        }
+        assert(q.isActive && q.exception.isEmpty)
+        val room1 = got.synchronized(got.toList)
+          .filter(_.path == "/v2/entities/Room1/attrs").map(_.body)
+        assert(room1.exists(_.contains(""""value":21.5""")), room1)
+        assert(room1.exists(_.contains(""""value":19.0""")),
+          s"the valid update after the three bad ones never arrived: $room1")
+      } finally q.stop()
+    }
+  }
+
+  test("example2 fan-out: toOrionAndConsole posts the update and prints its content once") {
+    withReceiver { (port, got) =>
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(String, Long)]
+      val raw = mem.toDF()
+        .select(col("_1").as("value"), timestamp_millis(col("_2")).as("recvTime"))
+      // a tumbling window: one window, so one update row per notification
+      val minDf = NgsiStreams.minTemperatureStream(raw, "10 seconds", "5 seconds", "5 seconds")
+      val printed = new java.io.ByteArrayOutputStream()
+      // the stream thread inherits the redirected Console.out from here
+      Console.withOut(printed) {
+        val q = NgsiStreams.start(NgsiStreams.toOrionAndConsole(minDf,
+          s"http://127.0.0.1:$port/v2/entities/"))
+        try {
+          mem.addData(notification(room("Room1", "23.5")) -> 1700000000000L)
+          q.processAllAvailable()
+        } finally q.stop()
+      }
+      val content = """{"temperature_min":{"value":23.5,"type":"Float"}}"""
+      assert(got.synchronized(got.toList).map(r => (r.method, r.path, r.body)) ==
+        List(("POST", "/v2/entities/Room1/attrs", content)))
+      val out = printed.toString("UTF-8")
+      assert(out.split(java.util.regex.Pattern.quote(content), -1).length - 1 == 1, out)
+    }
+  }
 }

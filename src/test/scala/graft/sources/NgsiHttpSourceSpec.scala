@@ -3,8 +3,11 @@ package graft.sources
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.streaming.NgsiStreams
@@ -372,7 +375,7 @@ class NgsiHttpSourceSpec extends SparkSpec {
   }
 
   test("restart over a tail torn MID-MULTIBYTE-CHARACTER still recovers") {
-    // jsonEsc writes non-ASCII raw, so a crash can tear the tail inside a
+    // NgsiJson.esc writes non-ASCII raw, so a crash can tear the tail inside a
     // UTF-8 sequence; a strict decoder (Files.readAllLines) throws for the
     // whole file then — the restart must instead decode leniently and let
     // the torn line reach the ordinary last-line skip.
@@ -552,6 +555,50 @@ class NgsiHttpSourceSpec extends SparkSpec {
     } finally s2.stop()
   }
 
+  test("capture log round-trips JSON-escaped characters in the body and Fiware-Service") {
+    // A capture line is hand-written JSON (NgsiJson.esc); each character
+    // the escaper rewrites must come back unchanged from the history
+    // partition. JSON allows a raw newline or tab only between tokens and
+    // a quote or backslash only escaped inside a string; a header value
+    // holds no newline, and the JDK listener reads a tab in it as a space:
+    // the body carries quote, backslash, newline and tab, Fiware-Service
+    // quote, backslash and U+0001. The JDK HttpClient refuses control
+    // characters in headers, so the post is written to a bare socket.
+    val dir = java.nio.file.Files.createTempDirectory("ngsi_escape").toString
+    val body = "{\"s\":\"a\\\"b\\\\c è\",\n\t\"t\":1}"
+    val service = "q\"b\\c" + 1.toChar + "e"
+    def rawPost(port: Int): String = {
+      val sock = new java.net.Socket("127.0.0.1", port)
+      try {
+        val bytes = body.getBytes("UTF-8")
+        val head = "POST /notify HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          "Fiware-Service: " + service + "\r\n" +
+          s"Content-Length: ${bytes.length}\r\nConnection: close\r\n\r\n"
+        sock.getOutputStream.write(head.getBytes("ISO-8859-1") ++ bytes)
+        sock.getOutputStream.flush()
+        new java.io.BufferedReader(new java.io.InputStreamReader(
+          sock.getInputStream, "ISO-8859-1")).readLine()
+      } finally sock.close()
+    }
+    val port = freePort()
+    val s = new NgsiHttpMicroBatchStream(port, Some(dir))
+    try {
+      waitListening(port)
+      val status = rawPost(port)
+      assert(status.startsWith("HTTP/1.1 200"), status)
+    } finally s.stop()
+    val s2 = new NgsiHttpMicroBatchStream(freePort(), Some(dir))
+    try {
+      val parts = s2.planInputPartitions(SeqOffset(0), SeqOffset(1))
+      assert(parts.toSeq.map(_.getClass) == Seq(classOf[NgsiHistoryPartition]))
+      val r = s2.createReaderFactory().createReader(parts.head)
+      assert(r.next())
+      assert(r.get().getUTF8String(0).toString == body)
+      assert(r.get().getUTF8String(1).toString == service)
+      assert(!r.next())
+    } finally s2.stop()
+  }
+
   test("live-slice chunking: a drained ring plans multiple bounded partitions, " +
     "chunk boundaries invisible in the stream") {
     import org.apache.spark.sql.connector.read.InputPartition
@@ -587,81 +634,6 @@ class NgsiHttpSourceSpec extends SparkSpec {
       assert(post(port, body(10), Map.empty) == 200)
       assert(stream.planInputPartitions(SeqOffset(10), SeqOffset(11)).length == 1)
     } finally stream.stop()
-  }
-
-  test("auto-compaction: committed capture files are reclaimed, partially " +
-    "committed ones kept, restart stays exact") {
-    val dir = java.nio.file.Files.createTempDirectory("ngsi_autogc").toString
-    def body(i: Int) = s"""{"ev":"n$i"}"""
-    // three incarnations -> three capture files of 5, 4, and 3 records
-    // (global sequences [0,5), [5,9), [9,12))
-    var next = 0
-    Seq(5, 4, 3).foreach { k =>
-      val port = freePort()
-      val s = new NgsiHttpMicroBatchStream(port, Some(dir))
-      try {
-        waitListening(port)
-        (0 until k).foreach { _ =>
-          assert(post(port, body(next), Map.empty) == 200); next += 1
-        }
-      } finally s.stop()
-    }
-    def captureFiles(): Seq[String] =
-      Option(new java.io.File(dir).listFiles((_, n) => n.startsWith("capture-")))
-        .getOrElse(Array.empty).map(_.getName).sorted.toSeq
-    assert(captureFiles().length == 3)
-
-    val port = freePort()
-    val s = new NgsiHttpMicroBatchStream(port, Some(dir),
-      compactCommitted = true)
-    try {
-      assert(s.latestOffset().asInstanceOf[SeqOffset].n == 12L)
-      // commit mid-file-2: only file 1 ([0,5)) is FULLY committed — it
-      // alone may vanish; file 2 still holds uncommitted records [7,9)
-      s.commit(SeqOffset(7))
-      assert(captureFiles().length == 2,
-        s"only the fully-committed file may be reclaimed: ${captureFiles()}")
-      // remaining history still serves exactly
-      val served = s.planInputPartitions(SeqOffset(7), SeqOffset(12)).flatMap { p =>
-        val r = s.createReaderFactory().createReader(p)
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        while (r.next()) out += r.get().getUTF8String(0).toString
-        out
-      }.toSeq
-      assert(served == (7 until 12).map(body))
-      // full commit: everything reclaimable goes
-      s.commit(SeqOffset(12))
-      assert(captureFiles().isEmpty,
-        s"fully-committed history must be reclaimed: ${captureFiles()}")
-    } finally s.stop()
-
-    // restart over the compacted dir: shortened history + checkpoint
-    // rebase = nothing replayed, nothing lost (the manual-compaction
-    // contract, now exercised on the auto-compacted dir)
-    val port2 = freePort()
-    val s2 = new NgsiHttpMicroBatchStream(port2, Some(dir),
-      compactCommitted = true)
-    try {
-      // recovery order mirrors Spark's: the checkpoint offset is restored
-      // BEFORE any planning — the rebase path. With the whole history
-      // compacted away, prevEnd is 0 and the restored offset 12 simply
-      // renumbers the live ring past the checkpoint.
-      s2.deserializeOffset("12")
-      assert(s2.latestOffset().asInstanceOf[SeqOffset].n == 12L,
-        "compacted history must not be re-indexed, rebase must hold")
-      waitListening(port2)
-      assert(post(port2, body(12), Map.empty) == 200)
-      val latest = s2.latestOffset().asInstanceOf[SeqOffset]
-      assert(latest.n == 13L)
-      val rows = s2.planInputPartitions(SeqOffset(12), latest).flatMap { p =>
-        val r = s2.createReaderFactory().createReader(p)
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        while (r.next()) out += r.get().getUTF8String(0).toString
-        out
-      }.toSeq
-      assert(rows == Seq(body(12)),
-        "restart over the compacted log must serve only new events")
-    } finally s2.stop()
   }
 
   test("restart rebase is order-independent: latestOffset before the " +
@@ -746,27 +718,25 @@ class NgsiHttpSourceSpec extends SparkSpec {
     } finally s.stop()
   }
 
-  test("invalid dial options are refused at load time, not mid-replay") {
-    // historyChunkRecords = 0 would throw NumericRange-step-0 mid-replay;
-    // negative would silently SKIP acked history (empty chunk ranges while
-    // the offset advances) — both must die at construction instead
-    def load(opt: (String, String)): Unit =
-      spark.readStream.format("graft.sources.NgsiHttpSource")
-        .option("port", freePort()).option(opt._1, opt._2).load()
-    intercept[IllegalArgumentException](load("historyChunkRecords" -> "0"))
-    intercept[IllegalArgumentException](load("historyChunkRecords" -> "-5"))
-    intercept[IllegalArgumentException](load("maxBufferBytes" -> "0"))
-    intercept[IllegalArgumentException](load("maxBufferBytes" -> "-1"))
-    intercept[IllegalArgumentException](load("liveChunkBytes" -> "0"))
+  test("a retired or unknown option fails at load(), naming the key") {
+    // the four retired dials (now constants, or deleted) and a typo: a
+    // deployment that still sets one must fail, not be silently ignored
+    Seq("maxBufferBytes", "historyChunkRecords", "liveChunkBytes",
+        "compactCommitted", "captureDirectory").foreach { k =>
+      val e = intercept[IllegalArgumentException](
+        spark.readStream.format("graft.sources.NgsiHttpSource")
+          .option("port", freePort()).option(k, "1").load())
+      assert(e.getMessage.contains(s"'$k'") &&
+        e.getMessage.contains("port and captureDir"), e.getMessage)
+    }
   }
 
   test("progress reports the ring's source metrics; refusedCount counts the 429s") {
     import org.apache.spark.sql.streaming.Trigger
     val port = freePort()
-    val q = spark.readStream.format("graft.sources.NgsiHttpSource")
+    // 88 bytes per 12-char headerless body: a 200-byte ring refuses its 4th
+    val q = spark.readStream.format("graft.sources.TinyRingNgsiSource")
       .option("port", port)
-      // 88 bytes per 12-char headerless body: the ring refuses its 4th
-      .option("maxBufferBytes", 200L)
       .load()
       .writeStream.format("noop")
       .trigger(Trigger.ProcessingTime("2 seconds"))
@@ -874,4 +844,12 @@ class NgsiHttpSourceSpec extends SparkSpec {
         "oversized single record on an empty ring must not wedge")
     } finally stream.stop()
   }
+}
+
+/** The NGSI source with a 200-byte ring: the cap is a constant, not an
+  * option, so a `readStream` spec of the 429 path shrinks it here. */
+class TinyRingNgsiSource extends NgsiHttpSource {
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: java.util.Map[String, String]): Table =
+    new NgsiHttpTable(properties.get("port").toInt, None, maxBufferBytes = 200L)
 }

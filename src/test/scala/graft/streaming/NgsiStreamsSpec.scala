@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
-import graft.ngsi.NgsiFixtures
+import graft.ngsi.{NgsiFixtures, NgsiPipelines}
 
 /** Streaming e2e (SURVEY §5.3): MemoryStream of NGSI payloads -> pipeline
   * -> memory sink, deterministic via explicit event timestamps and
@@ -88,5 +88,28 @@ class NgsiStreamsSpec extends SparkSpec with Matchers {
         .filter(col("window.start") === new Timestamp(0L)).collect()
       closed.map(_.getAs[Float]("temperature_min")).toSeq shouldBe Seq(25.0f)
     } finally query.stop()
+  }
+
+  test("example1 console sink: toConsole prints one batch") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val mem = MemoryStream[(String, Long)]
+    val raw = mem.toDF()
+      .select(col("_1").as("value"), timestamp_millis(col("_2")).as("recvTime"))
+    val temps = NgsiPipelines.flattenEntities(NgsiPipelines.parseEvents(raw).toDF())
+      .select(col("id"), NgsiPipelines.attrValue("temperature").as("temperature"))
+    val printed = new java.io.ByteArrayOutputStream()
+    // the stream thread inherits the redirected Console.out from here
+    Console.withOut(printed) {
+      val q = NgsiStreams.start(NgsiStreams.toConsole(temps))
+      try {
+        mem.addData((NgsiFixtures.flatSensorAt("R1", 30.5), 0L))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val out = printed.toString("UTF-8")
+    assert(out.linesIterator.count(_.startsWith("Batch: ")) == 1, out)
+    assert(out.contains("Batch: 0") && out.contains("R1") && out.contains("30.5"), out)
   }
 }
