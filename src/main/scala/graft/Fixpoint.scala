@@ -19,8 +19,8 @@ import graft.Pinned._
   *    holds and throws [[Fixpoint.NotConverged]], naming the loop and the
   *    cap — a partially converged answer is never returned;
   *  - the result is pinned EAGERLY before the last window is released, so
-  *    the returned frame is rooted at its own checkpoint and a caller (a
-  *    stream retiring superseded answers) can free it like any other.
+  *    the returned frame is rooted at its own checkpoint and a caller can
+  *    free it like any other through [[FrameBlocks.release]].
   */
 object Fixpoint {
 

@@ -60,7 +60,7 @@ object GraftSession {
     * everything else stays at the session default:
     *  - MapPartitionsRDD WARN "lineage has been truncated": emitted once
     *    per FrameBlocks.release, which unpersists checkpoint RDDs on
-    *    purpose (RetiredFramesSpec pins the discipline).
+    *    purpose (FixpointSpec pins the discipline).
     *  - AccumulatorContext WARN + DAGScheduler ERROR "failed to update
     *    accumulator": late task-completion events updating SQL metrics of
     *    already-released query executions — the metrics are dead by

@@ -114,19 +114,11 @@ object ModelStore {
     * write as [[getOrTrain]]. */
   type KvRows = Seq[(Long, String, String, Long)]
 
-  def getOrTrainKv(spark: SparkSession, kind: String, digest: String,
-                   hyper: String)(train: => KvRows): KvRows =
-    lookupKv(spark, kind, digest, hyper).getOrElse {
-      trains.incrementAndGet()
-      val rows = train
-      putKv(spark, kind, digest, hyper, rows)
-      rows
-    }
-
-  /** Split form of [[getOrTrainKv]] for trainers whose training pass also
-    * produces expensive by-products they'd rather not recompute (the BPE
-    * ladder trains merges AND materializes the per-stage frames in one
-    * sweep; on a store hit it REPLAYS the frames from the merges instead). */
+  /** Symbol-table lookup, split from [[putKv]] for trainers whose training
+    * pass also produces expensive by-products they'd rather not recompute
+    * (the BPE ladder trains merges AND materializes the per-stage frames in
+    * one sweep; on a store hit it REPLAYS the frames from the merges
+    * instead). */
   def lookupKv(spark: SparkSession, kind: String, digest: String,
                hyper: String): Option[KvRows] =
     root.flatMap { rootDir =>

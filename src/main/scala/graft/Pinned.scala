@@ -5,10 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The ONE switch between fast-but-fragile and fault-tolerant frame
   * pinning. Every memoized / iterative path in this codebase (signature
   * and CC memos in Dedup, the BPE ladder, the graph fixpoint rounds run by
-  * [[Fixpoint]], q97's shared hourly counts, the streaming cross-batch
-  * accumulators)
-  * materializes intermediate frames through [[PinOps.pin]] instead of
-  * calling `localCheckpoint` directly:
+  * [[Fixpoint]], q97's shared hourly counts) materializes intermediate
+  * frames through [[PinOps.pin]] instead of calling `localCheckpoint`
+  * directly:
   *
   *  - default (`spark.graft.checkpoint` unset or `local`):
   *    `localCheckpoint(eager)` — blocks live in executor block managers.

@@ -160,11 +160,16 @@ object NgsiPipelines {
     * URL — `{"temperature_min": {"value": <v>, "type": "Float"}}` POSTed
     * to `<base>/v2/entities/<id>/attrs`. Example3 is the same job with a
     * different base URL (`Example3.scala:13`), so the URL is a parameter.
+    *
+    * A window whose minimum is null (every reading missing or non-numeric)
+    * sends nothing: `to_json` drops the null value, and the payload
+    * `{"temperature_min":{"type":"Float"}}` would null the broker's stored
+    * attribute.
     */
   def toOrionUpdates(minDf: DataFrame,
                      urlBase: String = "http://localhost:1026/v2/entities/",
                      method: String = "POST"): DataFrame =
-    minDf.select(
+    minDf.filter(col("temperature_min").isNotNull).select(
       to_json(struct(
         struct(col("temperature_min").as("value"),
                lit("Float").as("type")).as("temperature_min"))).as("content"),

@@ -253,8 +253,8 @@ object Dedup {
       converged = (_, next) => next.value == 0,
       // rename INSIDE the eager result pin so the returned frame is rooted
       // at its own LogicalRDD — FrameBlocks.release is deliberately
-      // shallow, and callers that retire superseded label tables
-      // (LineageStream) must be able to free this frame's storage directly
+      // shallow, and callers that release the label table must be able to
+      // free this frame's storage directly
       result = w => w.last.df.select(col("id").as("doc_id"), col("lbl").as("component")))
   }
 
@@ -405,95 +405,6 @@ object Dedup {
           .union(edges.select(col("dst")).distinct()
             .select(col("dst").as("doc_id"), col("dst").as("component")))
       })
-  }
-
-  /** Incremental connected-components refresh — the operator behind the
-    * SCALE.md incremental-materialization story: a new crawl increment
-    * arrives with its (already-LSH'd) pair list, and the persisted
-    * cluster-label table must absorb it WITHOUT re-running shingling/LSH/CC
-    * over the old corpus.
-    *
-    * Correctness rests on a standard CC identity: a labeling is exactly a
-    * spanning star forest, so re-clustering (doc → component) label edges
-    * UNION the new pairs reproduces the labeling of the full edge union —
-    * old components are re-entered only through docs the new pairs touch,
-    * and merge transitively when an increment bridges them (spec-pinned:
-    * incremental == from-scratch on a split corpus, including
-    * across-the-split merges). Docs in neither table are unlabeled in both
-    * framings (consumers coalesce doc_id, as q47/q103/q106 already do).
-    *
-    * Cost: CC over |labels| + |newPairs| edges — label edges are one row
-    * per previously-clustered DOC (tiny vs corpus; singletons need no
-    * row), and the expensive upstream (shingle → minhash → band → verify)
-    * runs only on the increment. At 100 TB this is the difference between
-    * a nightly full rebuild and a minutes-long merge. */
-  def updateLabels(labels: DataFrame, newPairs: DataFrame,
-                   maxIters: Int = 25): DataFrame = {
-    val labelEdges = labels
-      .filter(col("doc_id") =!= col("component"))
-      .select(col("doc_id").as("i"), col("component").as("j"))
-    connectedComponents(
-      labelEdges.union(newPairs.select(col("i"), col("j"))), maxIters)
-  }
-
-  /** Banded signature projection — one row per (doc, band):
-    * (doc_id, sh, nd, b, k), with the EXACT banding arithmetic of
-    * [[lshPairsFromSigs]] at the trigram defaults (seedBase 0, null band
-    * keys dropped). This row format is the materialized signature INDEX of
-    * the incremental lineage path: a live pipeline appends each
-    * micro-batch's banded rows to it and never re-signs old docs —
-    * [[incrementPairs]] then produces exactly the full-corpus pair list's
-    * new edges. At 100 TB the index is the table you keep, corpus-sized
-    * but narrow (shingle hashes + 4 band keys per doc). */
-  def bandedSignatures(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
-    val numBands = NumHashes / BandSize
-    val sig = docsDf
-      .select(col("doc_id"), shingles(toks(col("text")), 3).as("sh"))
-      .withColumn("mhs", minhashSig(col("sh"), NumHashes, 0))
-      .select(col("doc_id") +: col("sh") +:
-        (0 until NumHashes).map(i => element_at(col("mhs"), i + 1).as(s"mh$i")): _*)
-    sig
-      .select(col("doc_id"), col("sh"),
-        size(array_distinct(col("sh"))).as("nd"),
-        explode(array((0 until numBands).map { j =>
-          struct(lit(j).as("b"),
-            bandKey((0 until BandSize).map(r => col(s"mh${j * BandSize + r}"))).as("k"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("sh"), col("nd"),
-        col("bk.b").as("b"), col("bk.k").as("k"))
-      .filter(col("k").isNotNull)
-  }
-
-  /** Verified near-dup pairs TOUCHING an increment: the increment's banded
-    * rows join the full index (store ∪ increment) on (band, key), then the
-    * size prefilter + exact-Jaccard verify of the batch pipeline runs on
-    * the candidates. Because pair membership is pairwise (band keys are
-    * per-doc), the union over micro-batches of these edge sets — each pair
-    * surfacing when its LATER endpoint arrives — IS the from-scratch
-    * full-corpus pair list, which is what makes [[updateLabels]] folding
-    * converge to the batch labels (StreamingLineageSpec pins it). Cost per
-    * batch: |inc banded| joined against the index — never index × index. */
-  def incrementPairs(index: DataFrame, inc: DataFrame): DataFrame = {
-    val full = index.unionByName(inc)
-    val cand = inc.as("x").join(full.as("y"),
-        col("x.b") === col("y.b") && col("x.k") === col("y.k") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("i"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("j"))
-      .distinct()
-    val sized = full.select(col("doc_id"), col("sh"), col("nd"))
-      .dropDuplicates("doc_id")
-    cand
-      .join(sized.select(col("doc_id").as("i"), col("sh").as("shi"),
-        col("nd").as("ndi")), "i")
-      .join(sized.select(col("doc_id").as("j"), col("sh").as("shj"),
-        col("nd").as("ndj")), "j")
-      .filter(least(col("ndi"), col("ndj")) * TrigramTDen >=
-        greatest(col("ndi"), col("ndj")) * TrigramTNum)
-      .select(col("i"), col("j"), jaccard(col("shi"), col("shj")).as("jac"))
-      .filter(col("jac") >= lit(TrigramTNum.toDouble / TrigramTDen))
-      .select(col("i"), col("j"))
   }
 
   /** Sparse TF-vector cosine pairs from a df-capped inverted index (the

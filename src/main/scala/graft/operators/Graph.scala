@@ -165,10 +165,9 @@ object Graph {
     sharedWeightedEdges.getOrCompute(s, d)(buildWeightedEdges(s, d))
 
   /** The q201 fixpoint over an arbitrary (src, dst) edge frame — factored
-    * out so the streaming twin ([[graft.streaming.GraphRankStream]]) can
-    * run the IDENTICAL plan against its incrementally-maintained edge
-    * table. Deterministic for any edge frame: integer arithmetic end to
-    * end, full tie-break on the top-N. */
+    * out so the skew and shuffle-bytes specs run the IDENTICAL plan against
+    * planted edge frames. Deterministic for any edge frame: integer
+    * arithmetic end to end, full tie-break on the top-N. */
   /** `hinted=false` drops the shuffle_hash pins so AQE plans the joins
     * (AqeGraphSkewSpec runs the planted-hub workload through both tiers
     * and proves identical bits — the integer fixpoint is plan-independent
@@ -201,16 +200,15 @@ object Graph {
 
 
   /** The q208 fixpoint over an arbitrary DIRECTED (src=hub, dst=authority)
-    * edge frame — factored out like [[pagerankOn]] so the streaming twin
-    * can answer HITS over its incrementally-maintained pair table. */
+    * edge frame — factored out like [[pagerankOn]], so specs run HITS over
+    * planted and degenerate edge frames. */
   private[graft] def hitsOn(e: DataFrame): DataFrame = {
     // Round discipline ([[graft.Fixpoint]], window 2): a generation is one
     // half-sweep's RAW aggregate — both its consumers read one materialized
     // node-sized frame instead of re-running the edge join — and the
     // window keeps the newest authority and hub sweeps alive (the final
-    // top-N reads both). Without the release, every hitsOn call (one per
-    // micro-batch in GraphRankStream.hits) pinned 2×HitsIters node-sized
-    // RDDs until session end.
+    // top-N reads both). Without the release, every hitsOn call pinned
+    // 2×HitsIters node-sized RDDs until session end.
     //
     // The normalization max is FOLDED into the pin materialization (r17):
     // the 1-row max aggregate is the action that materializes the lazy pin,

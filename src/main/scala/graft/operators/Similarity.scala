@@ -1363,10 +1363,9 @@ object Similarity {
 
   /** ADC scores for an ARBITRARY (query_id, qv: array<double>) frame
     * against the FROZEN residual IVF-PQ index of `d` — the serving-path
-    * core shared by the q137/q140 batch queries and the streaming serve
-    * twin ([[graft.streaming.AnnServeStream]]): the index (centroids,
-    * residual codebooks, corpus code frame) is built/memoized once; each
-    * call touches only the probed lists' 2-byte codes with the query side
+    * core of the q137/q140 batch queries: the index (centroids, residual
+    * codebooks, corpus code frame) is built/memoized once; each call
+    * touches only the probed lists' 2-byte codes with the query side
     * broadcast. */
   private[graft] def residualAdcScoredFor(s: SparkSession, d: String,
       q: DataFrame): DataFrame = {
@@ -1392,22 +1391,6 @@ object Similarity {
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"), col("cid").as("list_id"),
         adc.as("adc"))
-  }
-
-  /** Answers a (query_id, qv: array<double>) frame with top-[[LshTopK]]
-    * neighbors per query against the frozen residual IVF-PQ index of `d` —
-    * identical semantics (and identical rows, spec-pinned) to q137 when fed
-    * the corpus query vectors, including the self-exclusion
-    * `query_id =!= vec_id`. The production serve shape: static index, live
-    * queries. */
-  def serveIvfPq(s: SparkSession, d: String, queriesDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("vec_id"))
-    residualAdcScoredFor(s, d, queriesDf)
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= LshTopK)
-      .select(col("query_id"), col("nn_rank"), col("vec_id"),
-        col("list_id"), col("adc"))
   }
 
   // --------------- residual IVF-PQ (q137): PQ over v − c(list) ------------

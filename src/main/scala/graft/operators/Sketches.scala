@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -155,23 +155,6 @@ object Sketches {
     (0 until BloomHashes).forall { r =>
       val p = bloomPosOf(x, r)
       (words(p / 64) >> (p % 64) & 1L) == 1L
-    }
-
-  /** Mode-agnostic sketch build from RAW terms (column `term`): one typed
-    * aggregation over [[CmsAggregate]]. On a stream this is the
-    * streaming-safe CMS — per-term exact counts would be vocabulary-sized
-    * state, while this holds exactly Depth*Width cells per state-store key
-    * and merges across micro-batches (complete/update output). Emits a
-    * single row `cells: array<bigint>`; [[cellsToTable]] unflattens.
-    * StreamingFunnelCmsSpec pins batch==stream over the same terms. */
-  def cmsFromTerms(terms: DataFrame): DataFrame =
-    terms.agg(udaf(CmsAggregate, Encoders.STRING)(col("term")).as("cells"))
-
-  /** Flat cell array -> (r, bucket, bsum) rows (non-empty buckets only —
-    * the shape [[cmsTable]] emits). */
-  def cellsToTable(cells: Seq[Long]): Seq[(Int, Int, Long)] =
-    cells.zipWithIndex.collect {
-      case (n, i) if n != 0L => (i / Width, i % Width, n)
     }
 
   // ---------------------- histogram quantile sketch ----------------------
@@ -431,20 +414,6 @@ object Sketches {
     override def outputEncoder: org.apache.spark.sql.Encoder[Map[String, Long]] =
       ExpressionEncoder[Map[String, Long]]()
   }
-
-  /** Mode-agnostic Misra–Gries candidate build from raw keys (column
-    * `k`): one typed aggregation over [[MgAggregate]]. On a stream this
-    * is the bounded-state heavy-hitter monitor — per-key exact counts
-    * would be key-cardinality-sized state, while this holds ≤ [[MgK]]
-    * entries and merges across micro-batches (complete/update output).
-    * Emits a single row `summary: map<string,bigint>`. The MG guarantee
-    * — every key with true count > total/(MgK+1) is present — survives
-    * any reduce/merge interleaving, so an exact pass-2 census over the
-    * streamed candidates equals batch [[heavyHitters]] exactly
-    * (`StreamingFunnelCmsSpec` pins that batch==stream parity on the
-    * real events table, plus the undercount bound). */
-  def mgFromKeys(keys: DataFrame): DataFrame =
-    keys.agg(udaf(MgAggregate, Encoders.STRING)(col("k")).as("summary"))
 
   /** Exact heavy hitters — keys with count·(MgK+1) > total — via the
     * standard two-pass scheme: a Misra–Gries candidate pass with bounded

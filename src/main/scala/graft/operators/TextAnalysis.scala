@@ -1341,10 +1341,8 @@ object TextAnalysis {
         .agg(count(lit(1)).as("c"))))
   )
 
-  /** The q206 fixpoint over an arbitrary (source, lang, c) count frame —
-    * factored out (the [[graft.operators.Graph.pagerankOn]] discipline)
-    * so the streaming twin ([[graft.streaming.DriftStream]]) runs the
-    * IDENTICAL plan against its incrementally-maintained count table. */
+  /** The q206 pairwise TVD over an arbitrary (source, lang, c) count
+    * frame. */
   private[graft] def tvdOn(cnt: DataFrame): DataFrame = {
     val tot = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
     val pairs = tot.select(col("source").as("sa"), col("n").as("na"))

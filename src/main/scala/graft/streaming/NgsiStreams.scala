@@ -65,14 +65,6 @@ object NgsiStreams {
       parsed.withWatermark("recvTime", watermark), windowDur, slide)
   }
 
-  /** Stream-static enrichment: join the (unbounded) entity stream with a
-    * (bounded) dimension table. The dimension is broadcast per micro-batch,
-    * so the stream side never shuffles — the standard shape for attaching
-    * reference data (device registry, room metadata) to sensor streams. */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame,
-                    key: String): DataFrame =
-    stream.join(org.apache.spark.sql.functions.broadcast(dim), key)
-
   /** Stream-stream inner join of two sensor streams on entity id within a
     * time tolerance. Both sides carry watermarks so the state store can
     * evict rows once the other side can no longer match them — without the

@@ -74,4 +74,37 @@ class FixpointSpec extends SparkSpec {
     assert(hits.count() == 0)
     Seq(lp, st, cc, hits).foreach(FrameBlocks.release)
   }
+
+  test("hitsOn leaves no per-call node-sized checkpoints pinned") {
+    // Before the round-release discipline each hitsOn call pinned
+    // 2×HitsIters node-sized RDDs until session end. Now the only surviving
+    // registration is the (≤ 2·topN row) result frame itself, which is
+    // checkpoint-rooted so the caller can release it like any other. The CC
+    // loops share that discipline: the default entry point when label-prop
+    // converges and when it falls back to star, and the direct star call.
+    val e = Seq((0L, 1L), (0L, 3L), (2L, 1L)).toDF("src", "dst")
+      .localCheckpoint(true)
+    def path(n: Int) = spark.range(n - 1)
+      .select(col("id").as("i"), (col("id") + 1).as("j"))
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "hitsOn" -> (() => Graph.hitsOn(e)),
+      // diameter 3: label-prop converges well inside its maxIters/2 rounds
+      "connectedComponents (label-prop)" ->
+        (() => Dedup.connectedComponents(path(4))),
+      // diameter 39 > 25/2: label-prop hits its cap, star finishes
+      "connectedComponents (star fallback)" ->
+        (() => Dedup.connectedComponents(path(40))),
+      "ccAlternatingStars" -> (() => Dedup.ccAlternatingStars(path(40))._1))
+    calls.foreach { case (name, call) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = call()
+      assert(out.count() > 0, name)
+      val outId = rddId(out)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before - outId
+      assert(leaked.isEmpty, s"$name pinned extra checkpoint RDDs: $leaked")
+      FrameBlocks.release(out)
+      assert(!registered(outId), name)
+    }
+    FrameBlocks.release(e)
+  }
 }

@@ -98,7 +98,7 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
           .selectExpr("sum(id)").collect()(0).getLong(0)
         assert(probe == 499500L)
         val batch = runAll(cluster)
-        batch + ("streaming_retention" -> streamedRetention(cluster))
+        batch + ("streaming_min_temperature" -> streamedMinTemperature(cluster))
       } finally {
         cluster.stop()
         SparkSession.clearActiveSession()
@@ -108,8 +108,8 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // expected side: the rebuilt shared local[4] session
     val local = SparkSpec.session
     val expected = runAll(local) +
-      ("streaming_retention" -> streamedRetention(local))
-    (picks :+ "streaming_retention").foreach { name =>
+      ("streaming_min_temperature" -> streamedMinTemperature(local))
+    (picks :+ "streaming_min_temperature").foreach { name =>
       assert(clustered(name) == expected(name),
         s"$name diverged between local-cluster and local[4]")
       assert(clustered(name).nonEmpty, s"$name returned no rows")
@@ -209,19 +209,18 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** The STREAMING sibling of the kill-recovery test: batch q46's
-    * recovery rides on reliable-checkpoint pins, but the streaming twins'
-    * state (flatMapGroupsWithState) has its OWN recovery path — the state
-    * store's delta/snapshot files plus the offset WAL under
-    * `checkpointLocation`. Here one of two executor JVMs is kill -9'd
-    * while a micro-batch of the retention stream is in flight; the
+    * recovery rides on reliable-checkpoint pins, but Example1's windowed
+    * minimum keeps its per-(window, id) aggregation state in the state
+    * store, which has its OWN recovery path — the store's delta/snapshot
+    * files plus the offset WAL under `checkpointLocation`. Here one of two
+    * executor JVMs is kill -9'd while a micro-batch is in flight; the
     * retried tasks must reload their state-store partitions from
     * checkpoint files (the dead executor's in-memory store maps are
     * gone), finish the batch, and keep accepting batches — and the full
-    * append log must still match the same feed on local[4] bit for bit.
-    * flatMapGroupsWithState emits each (user, cohort, offset) row AT MOST
-    * ONCE per state transition, so a lost-then-replayed state update
-    * would surface as a duplicated or missing row — exactly what the
-    * equality below would catch. */
+    * update log must still match the same feed on local[4] bit for bit.
+    * Each row carries the minimum of its window after the batch, so a
+    * lost or replayed state update would surface as a wrong, missing or
+    * duplicated row — exactly what the equality below would catch. */
   test("streaming state store: executor kill mid-micro-batch still matches local[4]") {
     val sparkHome = sys.env.getOrElse("SPARK_HOME", "/opt/spark")
     assume(new File(sparkHome, "jars").isDirectory,
@@ -229,27 +228,14 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // deterministic three-chunk feed; chunk 2 is large enough that its
     // micro-batch is reliably in flight when the kill lands
-    val chunks: Seq[Seq[graft.streaming.StatefulOps.RetEvent]] = Seq(
-      (0 until 400).map(i => graft.streaming.StatefulOps.RetEvent(
-        (i % 40).toLong, 19000L + (i * 7) % 21)),
-      (0 until 60000).map(i => graft.streaming.StatefulOps.RetEvent(
-        (i % 300).toLong, 19000L + (i * 11) % 70)),
-      (0 until 400).map(i => graft.streaming.StatefulOps.RetEvent(
-        (i % 40).toLong, 19035L + (i * 13) % 21)))
+    val chunks: Seq[Seq[(String, Long)]] = Seq(
+      notifications(400, entities = 40, fromS = 0, spanS = 21, mul = 7),
+      notifications(60000, entities = 300, fromS = 0, spanS = 70, mul = 11),
+      notifications(400, entities = 40, fromS = 35, spanS = 21, mul = 13))
 
     def feed(s: SparkSession, sinkName: String,
              killBeforeChunk: Option[Int] = None): (Boolean, Seq[String]) = {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      import s.implicits._
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft-stream-kill-$sinkName")
-      val in = MemoryStream[graft.streaming.StatefulOps.RetEvent]
-      val q = graft.streaming.StatefulOps.retentionStream(in.toDS())
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
+      val (in, q) = minTemperatureQuery(s, sinkName)
       // written on the killer thread, read on the test thread after
       // join: AtomicBoolean for visibility, and the join is asserted
       // (a timed-out join would leave the killer alive to kill an
@@ -328,121 +314,6 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       "post-recovery streaming emissions diverged from local[4]")
   }
 
-  /** The near-dup lineage twin's OWN recovery path: unlike the
-    * retention stream (state store deltas + offset WAL), the
-    * [[graft.streaming.NearDupLineageStream]] accumulates its state as
-    * eagerly-pinned index + label DataFrames inside foreachBatch. In
-    * reliable pin mode those frames live as checkpoint FILES, so an
-    * executor lost mid-fold must be recoverable: the retried fold tasks
-    * re-read the prior batch's index/label partitions from storage
-    * instead of dying on vanished localCheckpoint blocks. One of two
-    * executor JVMs is kill -9'd while chunk 2's fold is in flight; the
-    * stream must finish all chunks and the folded labels must equal
-    * batch CC over the full corpus computed on local[4]. */
-  test("near-dup lineage stream: executor kill mid-fold still equals batch CC") {
-    val sparkHome = sys.env.getOrElse("SPARK_HOME", "/opt/spark")
-    assume(new File(sparkHome, "jars").isDirectory,
-      s"no Spark distribution at $sparkHome — local-cluster needs one")
-    assume(new File(sfDir).isDirectory, s"no testdata at $sfDir")
-
-    import graft.operators.{Dedup => D}
-    import org.apache.spark.sql.functions.col
-
-    SparkSpec.releaseContext()
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-lineage-kill")
-    val cluster = SparkSession.builder()
-      .master("local-cluster[2,1,1536]")
-      .appName("graft-lineage-kill-recovery")
-      .config("spark.executor.memory", "1280m")
-      .config("spark.executor.extraClassPath",
-        classesDirOf(graft.Tables.getClass))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.localFsConf)
-      .config(Pinned.ModeConf, "reliable")
-      .config(Pinned.DirConf, ckptDir.toString)
-      .getOrCreate()
-    val (killedMidFold, folded) =
-      try {
-        cluster.sparkContext.setLogLevel("ERROR")
-        graft.functions.GraftFunctions.register(cluster)
-        cluster.sparkContext.requestTotalExecutors(2, 0, Map.empty)
-        val probe = cluster.range(0, 1000, 1, 4)
-          .selectExpr("sum(id)").collect()(0).getLong(0)
-        assert(probe == 499500L)
-        val regDeadline = System.nanoTime() + 60L * 1000000000L
-        while (executorPids(cluster.sparkContext.applicationId).size < 2
-               && System.nanoTime() < regDeadline)
-          Thread.sleep(50)
-        val pids = executorPids(cluster.sparkContext.applicationId)
-        assert(pids.size >= 2, s"expected 2 executor JVMs, saw $pids")
-
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        implicit val sqlCtx = cluster.sqlContext
-        import cluster.implicits._
-        val docs = graft.Tables.load(cluster, sfDir, "documents")
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)].collect().sortBy(_._1)
-        val chunks = docs.grouped((docs.length + 2) / 3).toSeq
-
-        val mem = MemoryStream[(Long, String)]
-        val lineage = new graft.streaming.NearDupLineageStream(cluster)
-        val q = lineage.attach(mem.toDF().toDF("doc_id", "text"))
-        val killedMidBatch =
-          new java.util.concurrent.atomic.AtomicBoolean(false)
-        try {
-          chunks.zipWithIndex.foreach { case (c, i) =>
-            mem.addData(c.toSeq)
-            if (i == 1) {
-              // aim the kill at chunk 2's first live fold job — chunk 1's
-              // index/labels are already checkpointed, so the retried
-              // tasks genuinely re-read prior state from files
-              val st = cluster.sparkContext.statusTracker
-              val killer = new Thread(() => {
-                val deadline = System.nanoTime() + 60L * 1000000000L
-                while (st.getActiveJobIds().isEmpty
-                       && System.nanoTime() < deadline)
-                  Thread.sleep(1)
-                killedMidBatch.set(st.getActiveJobIds().nonEmpty)
-                import scala.sys.process._
-                Seq("kill", "-9", pids.head.toString).!
-                ()
-              })
-              killer.start()
-              q.processAllAvailable()
-              killer.join(60000)
-              assert(!killer.isAlive,
-                "killer thread still running after join timeout")
-            } else q.processAllAvailable()
-          }
-          (killedMidBatch.get(), lineage.labels.collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet)
-        } finally { q.stop(); lineage.close() }
-      } finally {
-        cluster.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-
-    // expected: batch CC over the full corpus on the rebuilt local[4]
-    val local = SparkSpec.session
-    graft.functions.GraftFunctions.register(local)
-    val all = graft.Tables.load(local, sfDir, "documents")
-      .select(col("doc_id"), col("text"))
-    val expected = D.connectedComponents(
-        D.lshNearDupPairs(all, n = 3, numHashes = D.NumHashes,
-          bandSize = D.BandSize, seedBase = 0,
-          tNum = D.TrigramTNum, tDen = D.TrigramTDen)
-          .select(col("i"), col("j")))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(killedMidFold,
-      "fold finished before the kill landed — no recovery exercised")
-    assert(folded.nonEmpty && folded == expected,
-      "post-kill folded labels diverged from batch CC on local[4]")
-  }
-
   /** Executor JVM pids of the given standalone app (local-cluster
     * executors are real forked processes, visible to ps). */
   private def executorPids(appId: String): Seq[Long] = {
@@ -453,28 +324,53 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.trim.split("\\s+")(0).toLong).toSeq
   }
 
-  /** The stateful-streaming leg of the axis: flatMapGroupsWithState's
-    * state stores live in EXECUTOR JVMs on a real cluster (HDFS-backed
-    * store per shuffle partition), so state rows here are created,
-    * snapshotted and read back across process boundaries — then the
-    * emitted append log must still match local[4] exactly. */
-  private def streamedRetention(s: SparkSession): Seq[String] = {
-    import s.implicits._
+  private val BaseMs = 1700000000000L
+
+  /** `n` Example1 notifications over `entities` rooms: notification i
+    * reports room i mod `entities` at recvTime `fromS + (i·mul mod spanS)`
+    * seconds past [[BaseMs]], with a temperature that varies with i. */
+  private def notifications(n: Int, entities: Int, fromS: Int, spanS: Int,
+                            mul: Int): Seq[(String, Long)] =
+    (0 until n).map(i => (
+      graft.ngsi.NgsiFixtures.flatSensorAt(s"Room${i % entities}",
+        10.0 + (i * 37) % 200 / 10.0),
+      BaseMs + (fromS + (i * mul) % spanS) * 1000L))
+
+  /** Example1's windowed minimum ([[graft.streaming.NgsiStreams.minTemperatureStream]])
+    * over a MemoryStream of (body, recvTime millis), written in update mode
+    * to the memory sink `sinkName`. The explicit recvTime makes every
+    * session cut identical windows and advance an identical watermark. */
+  private def minTemperatureQuery(s: SparkSession, sinkName: String) = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.{col, timestamp_millis}
     implicit val sqlCtx = s.sqlContext
-    val events = (0 until 40).flatMap(u =>
-      (0 until 6).map(k => graft.streaming.StatefulOps.RetEvent(
-        u.toLong, 19000L + (u * 5 + k * 9) % 45)))
-    val in = MemoryStream[graft.streaming.StatefulOps.RetEvent]
+    import s.implicits._
+    val in = MemoryStream[(String, Long)]
+    val raw = in.toDF().select(col("_1").as("value"),
+      timestamp_millis(col("_2")).as("recvTime"))
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-stream-$sinkName")
+    val q = graft.streaming.NgsiStreams.minTemperatureStream(raw)
+      .writeStream.format("memory").queryName(sinkName)
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.toString)
+      .start()
+    (in, q)
+  }
+
+  /** The stateful-streaming leg of the axis: the windowed minimum's state
+    * stores live in EXECUTOR JVMs on a real cluster (HDFS-backed store per
+    * shuffle partition), so state rows here are created, snapshotted and
+    * read back across process boundaries — then the emitted update log
+    * must still match local[4] exactly. */
+  private def streamedMinTemperature(s: SparkSession): Seq[String] = {
     // suffix must actually distinguish the legs: take(5).filter(_.isLetter)
     // yields "local" for BOTH local[4] and local-cluster[...]
     val sinkName = if (s.sparkContext.master.startsWith("local-cluster"))
-      "lc_retention_cluster" else "lc_retention_local"
-    val q = graft.streaming.StatefulOps.retentionStream(in.toDS())
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
+      "lc_min_temperature_cluster" else "lc_min_temperature_local"
+    val (in, q) = minTemperatureQuery(s, sinkName)
     try {
-      events.grouped(80).foreach { c => in.addData(c); q.processAllAvailable() }
+      notifications(240, entities = 40, fromS = 0, spanS = 45, mul = 9)
+        .grouped(80).foreach { c => in.addData(c); q.processAllAvailable() }
       s.table(sinkName).collect().map(_.toString).sorted.toSeq
     } finally q.stop()
   }

@@ -120,6 +120,11 @@ class OrionSinkSpec extends SparkSpec {
         assert(room1.exists(_.contains(""""value":21.5""")), room1)
         assert(room1.exists(_.contains(""""value":19.0""")),
           s"the valid update after the three bad ones never arrived: $room1")
+        // Room3's only reading is not a number: its window minimum is null,
+        // and an update would null the broker's stored attribute
+        val room3 = got.synchronized(got.toList)
+          .filter(_.path == "/v2/entities/Room3/attrs").map(_.body)
+        assert(room3.isEmpty, s"a null minimum was posted: $room3")
       } finally q.stop()
     }
   }

@@ -359,40 +359,6 @@ class DedupSpec extends SparkSpec {
     assert(frac == nd.toDouble / nw)
   }
 
-  test("updateLabels: bridging increment merges two existing clusters") {
-    import graft.operators.{Dedup => D}
-    val labels = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L))
-      .toDF("doc_id", "component")
-    val newPairs = Seq((2L, 3L)).toDF("i", "j")
-    val merged = D.updateLabels(labels, newPairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(merged == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-  }
-
-  test("updateLabels: incremental refresh == from-scratch CC on a split corpus") {
-    import graft.operators.{Dedup => D}
-    val all = graft.Tables.load(spark, sfDir, "documents")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      D.lshNearDupPairs(df, n = 3, numHashes = D.NumHashes,
-        bandSize = D.BandSize, seedBase = 0,
-        tNum = D.TrigramTNum, tDen = D.TrigramTDen).select(col("i"), col("j"))
-    val full = D.connectedComponents(pairs(all)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(full.nonEmpty, "testdata must contain near-dup pairs")
-    // split: docs below the midpoint are the "already-materialized" corpus,
-    // the rest arrive as an increment. LSH pair membership is pairwise
-    // (band keys are per-doc), so pairs(old standalone) == pairs(all)
-    // restricted to old docs, and the increment's pair list is everything
-    // touching a new doc — exactly what an incremental LSH over the
-    // band-key index produces.
-    val cut = all.agg(max(col("doc_id"))).head().getLong(0) / 2
-    val oldLabels = D.connectedComponents(pairs(all.filter(col("doc_id") <= cut)))
-    val incPairs = pairs(all).filter(col("i") > cut || col("j") > cut)
-    val incr = D.updateLabels(oldLabels, incPairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(incr == full, s"incremental diverged: ${incr.diff(full)} / ${full.diff(incr)}")
-  }
-
   test("q143: triangle census equals a JVM recompute from the pair list") {
     val edges = Dedup.queries("q42_dedup_lsh_pairs")(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -102,45 +102,4 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(m("numMatchedRows").value > 0 &&
       m("numMatchedRows").value <= nRows)
   }
-
-  test("streaming asofStream matches the batch as-of on a ts-ordered replay") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StatefulOps.{AsofRow, asofStream}
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    val batch = graft.operators.Relational.queries("q48_asof_join")(s, sfDir)
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2),
-        Option(r.getTimestamp(3)), if (r.isNullAt(4)) None
-        else Some(r.getDouble(4)))).toSet
-    assert(batch.exists(_._4.isDefined) && batch.exists(_._4.isEmpty))
-
-    // the same tagged log the batch plans merge: calibrations (tag 0,
-    // deduped max per (user, ts) happens inside the stream's latest-wins
-    // rule) + events (tag 1), replayed in (ts, tag) order
-    val ev = graft.Tables.load(s, sfDir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
-        r.getDouble(3)))
-    val log = (ev.filter(_._4 > 190).map { case (u, t, id, v) =>
-        AsofRow(u, t, id, 0, v) } ++
-      ev.map { case (u, t, id, v) => AsofRow(u, t, id, 1, v) })
-      .sortBy(r => (r.ts.getTime, r.tag, r.event_id))
-    val chunks = log.grouped((log.length + 2) / 3).toSeq
-
-    val mem = MemoryStream[AsofRow]
-    val q = asofStream(mem.toDS(), idleTimeout = None)
-      .writeStream.format("memory").queryName("asof_stream")
-      .outputMode("append").start()
-    val streamed =
-      try {
-        chunks.foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-        s.table("asof_stream").collect()
-      } finally q.stop()
-    val streamSet = streamed.map(r => (r.getLong(0), r.getTimestamp(1),
-      r.getDouble(2), Option(r.getTimestamp(3)),
-      if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toSet
-    assert(streamSet == batch)
-  }
 }

@@ -23,7 +23,7 @@ class StreamJoinSpec extends SparkSpec {
     val mem = MemoryStream[(String, Double, Long)]
     val dim = Seq(("R1", "lab", 2), ("R2", "office", 3))
       .toDF("id", "room_kind", "floor")
-    val out = NgsiStreams.enrichWithDim(sensorStream(mem, "temperature"), dim, "id")
+    val out = sensorStream(mem, "temperature").join(broadcast(dim), "id")
     val q = out.writeStream.format("memory").queryName("enriched")
       .outputMode(OutputMode.Append()).start()
     try {

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.{Curation, TextAnalysis}
-import StatefulOps._
 
 /** The streaming-ingest curation story, composed end to end: a document
-  * stream flows through exact dedup (stateful first-seen), the Gopher
-  * quality gate, and PII redaction — the same expressions the batch
-  * pipeline (q70's stages 1/3/5) uses, because every narrow stage is
-  * mode-agnostic by construction. Pins batch == stream on the real
+  * stream flows through exact dedup (Spark's streaming `dropDuplicates` on
+  * the content hash), the Gopher quality gate, and PII redaction — the
+  * same expressions the batch pipeline (q70's stages 1/3/5) uses, because
+  * every narrow stage is mode-agnostic by construction. Pins batch == stream on the real
   * documents table under doc_id-ordered replay.
   */
 class StreamingCurationSpec extends SparkSpec {
@@ -37,8 +36,8 @@ class StreamingCurationSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(batch.nonEmpty)
 
-    val mem = MemoryStream[Keyed]
-    val deduped = firstSeen(mem.toDS(), idleTimeout = None)
+    val mem = MemoryStream[(String, String)]
+    val deduped = mem.toDF().toDF("key", "payload").dropDuplicates("key")
     val curated = deduped
       .select(
         split(col("payload"), "\t").getItem(0).cast("long").as("doc_id"),
@@ -50,7 +49,7 @@ class StreamingCurationSpec extends SparkSpec {
     val streamed =
       try {
         docs.map { case (id, text) =>
-            Keyed(graft.operators.TextFns.md5hex(text), s"$id\t$text") }
+            (graft.operators.TextFns.md5hex(text), s"$id\t$text") }
           .grouped((docs.length + 2) / 3)
           .foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
         s.table("curation_stream").collect()
