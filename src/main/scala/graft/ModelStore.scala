@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Content-addressed persistence for trained model artifacts — IVF
-  * centroids, PQ/residual-PQ/OPQ codebooks, frozen Bloom filters.
+  * centroids, PQ/residual-PQ/OPQ codebooks, BPE merges.
   *
   * At 100 TB the index artifacts ARE the deliverable: a production
   * pipeline trains its coarse quantizer / codebooks once and serves them
@@ -38,8 +38,7 @@ object ModelStore {
 
   /** Generic artifact row: (part, i, j, vec) covers every model shape —
     * centroids (part="cent", i=cid), subspace codebooks (part="cb", i=m,
-    * j=code), rotation matrices (part="rot", i=row), Bloom bit words
-    * (part="bits", i=idx, j=word). */
+    * j=code), rotation matrices (part="rot", i=row). */
   type Rows = Seq[(String, Long, Long, Array[Double])]
 
   /** Store root; None disables persistence. Initialized from the env,
@@ -199,14 +198,4 @@ object ModelStore {
   def rowsToMatrix(rows: Rows, part: String = "rot"): Array[Array[Double]] =
     rows.filter(_._1 == part).sortBy(_._2).map(_._4).toArray
 
-  /** Long words (Bloom bit array) ⇄ rows — one row per word, the word in
-    * the exact INT64 `j` column. (NOT smuggled through double bits:
-    * Spark's UnsafeRow writer canonicalizes NaN payloads, and a random
-    * 64-bit filter word can look like a non-canonical NaN.) */
-  def longsToRows(words: Array[Long], part: String = "bits"): Rows =
-    words.toSeq.zipWithIndex.map { case (w, idx) =>
-      (part, idx.toLong, w, Array.empty[Double])
-    }
-  def rowsToLongs(rows: Rows, part: String = "bits"): Array[Long] =
-    rows.filter(_._1 == part).sortBy(_._2).map(_._3).toArray
 }

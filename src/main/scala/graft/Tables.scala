@@ -9,10 +9,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * directory as a parameter so the same code runs at any SF.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Physical-schema memo per (dir, table): schema inference on a bare
     * `spark.read.parquet(path)` re-reads parquet footers (and can launch a
     * footer-sampling job) on EVERY query construction — the catalog builds
@@ -104,8 +100,4 @@ object Tables {
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
-
-  /** Register every table as a temp view (for spark.sql surfaces). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

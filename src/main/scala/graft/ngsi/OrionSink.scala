@@ -8,16 +8,6 @@ import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** One outgoing HTTP update — content + per-record URL + method +
-  * content type, the same four fields as the reference's
-  * `OrionSinkObject(content, url, contentType, method)`
-  * (`Example2.scala:35-38`, `README.md:322-327`). */
-case class OrionSinkRecord(
-    content: String,
-    url: String,
-    contentType: String = "application/json",
-    method: String = "POST")
-
 /** HTTP write-back sink — the reference's `OrionSink.addSink`
   * (`Example2.scala:42`) re-expressed over Structured Streaming's unit of
   * work, the micro-batch: `foreachBatch` hands each batch of updates to
@@ -42,7 +32,8 @@ object OrionSink {
 
   /** POST every row of an update DataFrame from the executors, one
     * partition at a time. Rows must have columns (content, url,
-    * contentType, method) — the shape produced by
+    * contentType, method) — the four fields of the reference's
+    * `OrionSinkObject` (`Example2.scala:35-38`), as produced by
     * [[NgsiPipelines.toOrionUpdates]]; `headers` ride on every request. */
   def writeBatch(updates: DataFrame,
                  headers: Map[String, String] = Map.empty): Unit =

@@ -35,11 +35,10 @@ object Dedup {
     * per token = 60 usable bits; 4 bands × 15 bits give the Hamming<=3
     * pigeonhole guarantee). */
   val SimhashBits64 = 60
-  // q42 trigram verify threshold as an exact rational — the SINGLE source
-  // for both the call site (tNum/tDen) and the Double used by specs.
+  // q42 trigram verify threshold as an exact rational (tNum/tDen), the
+  // single source for the call site, the oracle SQL and the specs.
   val TrigramTNum = 7
   val TrigramTDen = 10
-  val JaccardThreshold: Double = TrigramTNum.toDouble / TrigramTDen
   // q44: bigram shingles, 6 minhashes in 2 bands of 3 (seeds 10..15).
   // 3-hash bands keep random-pair collisions ~J^3, so candidate volume stays
   // proportional to true near-dup clusters; recall at J=0.8 is 1-(1-J^3)^2

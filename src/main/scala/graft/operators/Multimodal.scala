@@ -6,27 +6,18 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Multimodal-column plumbing: media payloads are opaque `binary` columns
-  * with typed metadata alongside. Image and audio decode are REAL for the
-  * formats the JVM ships codecs for ([[decodeImage]], pure `javax.imageio`
-  * — PNG/JPEG/GIF/BMP; [[decodeAudio]], pure `javax.sound.sampled` —
-  * WAV/AIFF/AU PCM; no native libraries); video (codecs absent in this
-  * environment) goes through the clearly-marked deterministic STUB
-  * ([[decodeStub]]) at the same plug-point. Everything Spark-side —
-  * schema, batched per-partition iteration, partitioning, metadata
-  * extraction, frame sampling — is real and tested (MultimodalSpec).
+  * with typed metadata alongside. The catalog queries exercise the
+  * Spark-side plumbing only (schema, partitioning, metadata extraction,
+  * frame sampling, payload dedup); no media is decoded, because pixel and
+  * PCM decoding is not expressible in the DuckDB oracle.
   *
-  * The oracle-checked queries (q60/q61) use the text bytes of `documents` as
-  * the stand-in payload so DuckDB can verify the plumbing end-to-end.
+  * The oracle-checked queries (q60–q63) use the text bytes of `documents`
+  * as the stand-in payload so DuckDB can verify the plumbing end-to-end.
   */
 object Multimodal {
 
   /** One media object: opaque bytes + typed metadata. */
   case class MediaPayload(doc_id: Long, modality: String, payload: Array[Byte])
-
-  /** Decoded features (stub): dimensions + a small feature vector. */
-  case class MediaFeature(doc_id: Long, modality: String,
-                          width: Int, height: Int, n_bytes: Long,
-                          feature: Array[Float])
 
   val FrameSize = 32 // bytes per fake "frame" for sampling
   val FrameStride = 3
@@ -47,522 +38,6 @@ object Multimodal {
       .as[MediaPayload]
   }
 
-  /** STUB decoder — the plug-point where a real image/audio/video decode
-    * (JPEG decode, PCM resample, frame extraction, …) would run. Libraries
-    * are absent in this container, so it derives deterministic fake features
-    * from the bytes. Runs per-partition so a real implementation can amortize
-    * decoder/model initialization across the partition's rows (the Scala
-    * analog of a batched `mapInPandas` UDF).
-    */
-  def decodeStub(ds: Dataset[MediaPayload]): Dataset[MediaFeature] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      // real decoder init would happen once per partition, here:
-      it.map(stubFeature)
-    }
-  }
-
-  private def stubFeature(m: MediaPayload): MediaFeature = {
-    val n = m.payload.length.toLong
-    val feature = m.payload.take(8).map(b => (b & 0xff) / 255.0f)
-    MediaFeature(m.doc_id, m.modality,
-      width = (n % 640).toInt, height = (n % 480).toInt,
-      n_bytes = n, feature = feature)
-  }
-
-  /** REAL decoder for the formats the JVM ships codecs for (PNG/JPEG/GIF/BMP
-    * via `javax.imageio` — no native libraries needed): decodes the payload,
-    * emits true pixel dimensions and an up-to-8-pixel row-major luminance
-    * feature. Payloads ImageIO cannot decode (unknown format, audio/video,
-    * truncated bytes) fall back to [[stubFeature]] — the same
-    * degrade-don't-crash contract a production pipeline needs when a crawled
-    * corpus contains corrupt assets.
-    *
-    * Same `mapPartitions` shape as the stub: ImageIO's plugin registry scan
-    * happens once per JVM, and a heavier decoder (video codec, model
-    * weights) would init once per partition in the same place.
-    */
-  def decodeImage(ds: Dataset[MediaPayload]): Dataset[MediaFeature] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { m =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
-          catch { case _: Exception => null }
-        if (img == null) stubFeature(m)
-        else {
-          val w = img.getWidth
-          val h = img.getHeight
-          val k = math.min(8, w.toLong * h).toInt
-          val feature = Array.tabulate(k) { i =>
-            val rgb = img.getRGB(i % w, i / w)
-            val r = (rgb >> 16) & 0xff
-            val g = (rgb >> 8) & 0xff
-            val b = rgb & 0xff
-            ((r + g + b) / 3) / 255.0f // integer-mean luminance, exact in float
-          }
-          MediaFeature(m.doc_id, m.modality, w, h, m.payload.length.toLong, feature)
-        }
-      }
-    }
-  }
-
-  case class ImageHash(doc_id: Long, decoded: Boolean, ahash: Long)
-
-  /** Perceptual average-hash (aHash) over REAL decoded pixels — the
-    * image-side near-dup signal exact byte hashing (q63) cannot see: the
-    * same picture re-encoded (PNG vs BMP, different compressor settings)
-    * has different bytes but the same pixels, hence the same aHash.
-    * Classic recipe, integer-exact end to end: nearest-neighbor resample
-    * to an 8×8 grid, integer-mean luminance per cell, bit b set iff
-    * cell_b · 64 > Σcells (strict — avoids the all-equal pathological
-    * image setting every bit). Undecodable payloads degrade to
-    * `decoded = false, ahash = 0`, never a crash. Hash dedup downstream
-    * is the q40 shape: group by the 64-bit hash, only 8-byte keys
-    * shuffle; Hamming-near matches bucket by hash bands exactly like
-    * SimHash (q43). */
-  def imageAHash(ds: Dataset[MediaPayload]): Dataset[ImageHash] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { m =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
-          catch { case _: Exception => null }
-        if (img == null) ImageHash(m.doc_id, decoded = false, ahash = 0L)
-        else {
-          val w = img.getWidth
-          val h = img.getHeight
-          // nearest-neighbor 8x8 resample; integer-mean luminance per cell
-          val cells = Array.tabulate(64) { i =>
-            val cx = ((i % 8).toLong * w / 8).toInt
-            val cy = ((i / 8).toLong * h / 8).toInt
-            val rgb = img.getRGB(cx, cy)
-            (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
-          }
-          val total = cells.map(_.toLong).sum
-          var hash = 0L
-          var b = 0
-          while (b < 64) {
-            if (cells(b).toLong * 64 > total) hash |= (1L << b)
-            b += 1
-          }
-          ImageHash(m.doc_id, decoded = true, ahash = hash)
-        }
-      }
-    }
-  }
-
-  case class ImagePHash(doc_id: Long, decoded: Boolean, phash: Long)
-
-  /** DCT-based perceptual hash (pHash) — the next rung above [[imageAHash]]
-    * on the image-dedup ladder: aHash catches re-encodes (same pixels,
-    * different bytes); pHash ALSO catches resizes, because the signal lives
-    * in the lowest spatial frequencies, which survive rescaling. Classic
-    * recipe: box-filter the luminance onto a 32×32 grid (area averaging —
-    * an integer-upscaled copy reduces to the identical grid, which the spec
-    * pins), 2-D DCT-II by row-column decomposition, keep the top-left 8×8
-    * coefficient block minus the DC term (63 low-frequency coefficients —
-    * DC is overall brightness, deliberately dropped), set bit i iff
-    * coefficient i exceeds the median of the 63 (median-split makes the
-    * hash contrast-invariant; 63 odd → the median is a single exact sorted
-    * element, no averaging). Undecodable payloads degrade to
-    * `decoded = false, phash = 0`, never a crash.
-    *
-    * Spec-only, like aHash: pixel decoding is not oracle-expressible, so it
-    * stays off the query board. Downstream dedup is the q40/q43 shape:
-    * 8-byte keys group exactly, Hamming-near matches bucket by bit-bands.
-    * The DCT basis table is built once per PARTITION (the decoder-init
-    * amortization `mapPartitions` exists for). */
-  def imagePHash(ds: Dataset[MediaPayload]): Dataset[ImagePHash] = {
-    import ds.sparkSession.implicits._
-    val N = 32
-    ds.mapPartitions { it =>
-      // cos basis: basis(k)(n) = cos(pi/N * (n + 1/2) * k) — per partition
-      val basis = Array.tabulate(N, N) { (k, n) =>
-        math.cos(math.Pi / N * (n + 0.5) * k)
-      }
-      it.map { m =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
-          catch { case _: Exception => null }
-        if (img == null) ImagePHash(m.doc_id, decoded = false, phash = 0L)
-        else {
-          val w = img.getWidth
-          val h = img.getHeight
-          // area-average (box-filter) luminance onto the N×N grid: cell
-          // (gy, gx) averages the pixel block [gx·w/N, (gx+1)·w/N) ×
-          // [gy·h/N, (gy+1)·h/N) (≥1 px by construction of the bounds)
-          val lum = Array.ofDim[Double](N, N)
-          var gy = 0
-          while (gy < N) {
-            val y0 = (gy.toLong * h / N).toInt
-            val y1 = math.max(y0 + 1, ((gy + 1).toLong * h / N).toInt)
-            var gx = 0
-            while (gx < N) {
-              val x0 = (gx.toLong * w / N).toInt
-              val x1 = math.max(x0 + 1, ((gx + 1).toLong * w / N).toInt)
-              var s = 0L
-              var y = y0
-              while (y < math.min(y1, h)) {
-                var x = x0
-                while (x < math.min(x1, w)) {
-                  val rgb = img.getRGB(x, y)
-                  s += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
-                  x += 1
-                }
-                y += 1
-              }
-              val cnt = (math.min(y1, h) - y0).toLong * (math.min(x1, w) - x0)
-              lum(gy)(gx) = if (cnt > 0) s.toDouble / cnt else 0.0
-              gx += 1
-            }
-            gy += 1
-          }
-          // 2-D DCT-II, row-column: rows first, then columns; only the
-          // first 8 output rows/cols are ever read, so compute just those
-          val K = 8
-          val rows = Array.ofDim[Double](N, K)
-          var y = 0
-          while (y < N) {
-            var u = 0
-            while (u < K) {
-              var s = 0.0
-              var x = 0
-              while (x < N) { s += lum(y)(x) * basis(u)(x); x += 1 }
-              rows(y)(u) = s
-              u += 1
-            }
-            y += 1
-          }
-          val coefs = new Array[Double](K * K)
-          var v = 0
-          while (v < K) {
-            var u = 0
-            while (u < K) {
-              var s = 0.0
-              var yy = 0
-              while (yy < N) { s += rows(yy)(u) * basis(v)(yy); yy += 1 }
-              coefs(v * K + u) = s
-              u += 1
-            }
-            v += 1
-          }
-          // drop DC (index 0), median-split the remaining 63
-          val ac = coefs.drop(1)
-          val sorted = ac.clone()
-          java.util.Arrays.sort(sorted)
-          val med = sorted(ac.length / 2) // 63 values -> exact element 31
-          var hash = 0L
-          var i = 0
-          while (i < ac.length) {
-            if (ac(i) > med) hash |= (1L << i)
-            i += 1
-          }
-          ImagePHash(m.doc_id, decoded = true, phash = hash)
-        }
-      }
-    }
-  }
-
-  /** Decoded video container metadata. `us_per_frame`/`n_frames`/`width`/
-    * `height` come from a real RIFF-AVI header parse; a payload that is not
-    * a parseable AVI carries us_per_frame = 0 and the stub's byte-derived
-    * dimensions (structural degrade marker, same contract as audio). */
-  case class VideoFeature(doc_id: Long, modality: String,
-                          width: Int, height: Int, n_frames: Long,
-                          us_per_frame: Long, n_bytes: Long)
-
-  private def stubVideoFeature(m: MediaPayload): VideoFeature = {
-    val n = m.payload.length.toLong
-    VideoFeature(m.doc_id, m.modality, (n % 640).toInt, (n % 480).toInt,
-      n_frames = 0L, us_per_frame = 0L, n_bytes = n)
-  }
-
-  /** REAL video container parse at the metadata level: a pure byte-level
-    * RIFF-AVI walk (no codec, no native libraries — the JVM ships no video
-    * codec, so FRAME decode stays behind the stub plug-point, but the
-    * container header is plain bytes and parsing it is what a 100 TB
-    * ingest's metadata pass actually does first). Walks top-level RIFF
-    * chunks, descends into `LIST hdrl`, and reads the `avih` MainAVIHeader:
-    * dwMicroSecPerFrame, dwTotalFrames, dwWidth, dwHeight. Anything that is
-    * not a well-formed AVI — wrong magic, truncated chunk, missing avih —
-    * degrades to [[stubVideoFeature]], never crashes the partition.
-    */
-  def decodeVideo(ds: Dataset[MediaPayload]): Dataset[VideoFeature] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions(it => it.map { m =>
-      parseAviHeader(m.payload) match {
-        case Some((usPerFrame, nFrames, w, h)) =>
-          VideoFeature(m.doc_id, m.modality, w, h, nFrames, usPerFrame,
-            m.payload.length.toLong)
-        case None => stubVideoFeature(m)
-      }
-    })
-  }
-
-  /** (usPerFrame, totalFrames, width, height) from a RIFF-AVI byte array,
-    * or None if the bytes are not a well-formed AVI header. */
-  private[operators] def parseAviHeader(b: Array[Byte]): Option[(Long, Long, Int, Int)] = {
-    def u32(off: Int): Long =
-      if (off + 4 > b.length) -1L
-      else (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-        ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-    def fourcc(off: Int): String =
-      if (off + 4 > b.length) ""
-      else new String(b, off, 4, "US-ASCII")
-    if (b.length < 24 || fourcc(0) != "RIFF" || fourcc(8) != "AVI ") return None
-    // walk top-level chunks looking for LIST/hdrl, then avih inside it
-    var pos = 12
-    while (pos + 8 <= b.length) {
-      val id = fourcc(pos)
-      val size = u32(pos + 4)
-      if (size < 0) return None
-      if (id == "LIST" && fourcc(pos + 8) == "hdrl") {
-        var sub = pos + 12
-        val end = math.min(pos + 8 + size, b.length.toLong).toInt
-        while (sub + 8 <= end) {
-          val sid = fourcc(sub)
-          val ssize = u32(sub + 4)
-          if (ssize < 0) return None
-          if (sid == "avih" && ssize >= 40 && sub + 8 + 40 <= b.length) {
-            val base = sub + 8
-            return Some((u32(base), u32(base + 16),
-              u32(base + 32).toInt, u32(base + 36).toInt))
-          }
-          sub += 8 + ssize.toInt + (ssize.toInt & 1) // chunks are word-aligned
-        }
-        return None // hdrl without a usable avih
-      }
-      pos += 8 + size.toInt + (size.toInt & 1)
-    }
-    None
-  }
-
-  /** Decoded audio: true container metadata + a small amplitude feature.
-    * `sample_rate`/`channels`/`bits`/`n_frames` come from the real header;
-    * `feature` is the first up-to-8 channel-0 samples normalized to [-1, 1].
-    * A payload that did not decode carries sample_rate = 0 and the stub's
-    * byte-derived feature (the degrade marker is structural, not a crash). */
-  case class AudioFeature(doc_id: Long, modality: String,
-                          sample_rate: Int, channels: Int, bits: Int,
-                          n_frames: Long, n_bytes: Long, feature: Array[Float])
-
-  /** REAL audio decoder for the formats the JVM ships codecs for (WAV/AIFF/
-    * AU PCM via `javax.sound.sampled.AudioSystem` — no native libraries,
-    * the same argument that made [[decodeImage]] real): parses the
-    * container, emits true sample-rate/channel/bit-depth/frame-count
-    * metadata and the first up-to-8 channel-0 amplitudes normalized to
-    * [-1, 1]. Handles the two PCM layouts WAV actually uses (16-bit signed
-    * either endian, 8-bit unsigned); anything undecodable or exotic
-    * degrades to a stub-featured row with sample_rate = 0 — same
-    * degrade-don't-crash contract as the image path.
-    *
-    * Same `mapPartitions` shape as the other decoders: the audio SPI
-    * registry scan happens once per JVM and a heavier codec would init once
-    * per partition here.
-    */
-  def decodeAudio(ds: Dataset[MediaPayload]): Dataset[AudioFeature] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { m =>
-        try {
-          val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(m.payload))
-          try {
-            val fmt = in.getFormat
-            val enc = fmt.getEncoding
-            val bits = fmt.getSampleSizeInBits
-            val signed16 =
-              enc == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED && bits == 16
-            val unsigned8 =
-              enc == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED && bits == 8
-            if (!signed16 && !unsigned8) stubAudioFeature(m)
-            else {
-              val frameBytes = fmt.getFrameSize
-              val k = math.min(8L, in.getFrameLength).toInt
-              val buf = new Array[Byte](frameBytes * math.max(k, 0))
-              var read = 0
-              var r = 0
-              while (read < buf.length && r >= 0) {
-                r = in.read(buf, read, buf.length - read)
-                if (r > 0) read += r
-              }
-              val feature = Array.tabulate(math.min(k, read / math.max(frameBytes, 1))) { i =>
-                val off = i * frameBytes // channel 0 = first sample of the frame
-                if (unsigned8) ((buf(off) & 0xff) - 128) / 128.0f
-                else {
-                  val (lo, hi) = if (fmt.isBigEndian) (off + 1, off) else (off, off + 1)
-                  ((buf(hi) << 8) | (buf(lo) & 0xff)).toShort / 32768.0f
-                }
-              }
-              AudioFeature(m.doc_id, m.modality, fmt.getSampleRate.toInt,
-                fmt.getChannels, bits, in.getFrameLength,
-                m.payload.length.toLong, feature)
-            }
-          } finally in.close()
-        } catch { case _: Exception => stubAudioFeature(m) }
-      }
-    }
-  }
-
-  private def stubAudioFeature(m: MediaPayload): AudioFeature = {
-    val s = stubFeature(m)
-    AudioFeature(m.doc_id, m.modality, sample_rate = 0, channels = 0,
-      bits = 0, n_frames = 0L, n_bytes = s.n_bytes, feature = s.feature)
-  }
-
-  case class AudioFingerprint(doc_id: Long, decoded: Boolean,
-                              n_windows: Int, fp: Long)
-
-  /** Chromaprint-style spectral fingerprint over REAL decoded PCM — the
-    * audio rung of the perceptual ladder (images: aHash re-encodes, pHash
-    * resizes; audio previously had only byte-exact q63). The same clip in
-    * a different CONTAINER or endianness (WAV-LE vs AU-BE, identical
-    * samples) hashes identically, because the fingerprint reads decoded
-    * amplitudes, never container bytes.
-    *
-    * Classic recipe, simplified deterministically: channel-0 PCM → 256-
-    * sample windows at hop 128 → per-window spectral energy in `nBands`
-    * linear bins (direct DFT over the band bins — no FFT library, fixed
-    * fold order) → Chromaprint's bit rule, sign of the band-adjacent
-    * energy-difference DELTA across consecutive windows (robust to gain:
-    * doubling amplitude scales every energy 4×, preserving every
-    * comparison). First 64 bits pack into one Long — downstream dedup is
-    * the q40/q43 shape: exact groupBy on 8-byte keys, Hamming-near via
-    * bit-bands.
-    *
-    * Spec-only, like the image hashes: PCM decoding is not
-    * oracle-expressible. Degrade contract unchanged: undecodable or
-    * non-PCM payloads emit decoded = false, fp = 0 — never a crash. Same
-    * `mapPartitions` shape; the DFT basis tables build once per partition. */
-  def audioFingerprint(ds: Dataset[MediaPayload], nBands: Int = 8,
-                       win: Int = 256, hop: Int = 128,
-                       maxWindows: Int = 33): Dataset[AudioFingerprint] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val bins = win / 2 - 1 // DC excluded
-      val cosB = Array.tabulate(bins, win)((k, n) =>
-        math.cos(2.0 * math.Pi * (k + 1) * n / win))
-      val sinB = Array.tabulate(bins, win)((k, n) =>
-        math.sin(2.0 * math.Pi * (k + 1) * n / win))
-      it.map { m =>
-        try {
-          val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(m.payload))
-          try {
-            val fmt = in.getFormat
-            val enc = fmt.getEncoding
-            val bits = fmt.getSampleSizeInBits
-            val signed16 =
-              enc == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED && bits == 16
-            val unsigned8 =
-              enc == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED && bits == 8
-            if (!signed16 && !unsigned8)
-              AudioFingerprint(m.doc_id, decoded = false, n_windows = 0, fp = 0L)
-            else {
-              val frameBytes = fmt.getFrameSize
-              val need = win + (maxWindows - 1) * hop
-              val k = math.min(need.toLong, in.getFrameLength).toInt
-              val buf = new Array[Byte](frameBytes * math.max(k, 0))
-              var read = 0; var r = 0
-              while (read < buf.length && r >= 0) {
-                r = in.read(buf, read, buf.length - read)
-                if (r > 0) read += r
-              }
-              val n = read / math.max(frameBytes, 1)
-              val x = Array.tabulate(n) { i =>
-                val off = i * frameBytes
-                if (unsigned8) ((buf(off) & 0xff) - 128) / 128.0
-                else {
-                  val (lo, hi) = if (fmt.isBigEndian) (off + 1, off) else (off, off + 1)
-                  ((buf(hi) << 8) | (buf(lo) & 0xff)).toShort / 32768.0
-                }
-              }
-              val nw = math.min(maxWindows, if (n < win) 0 else (n - win) / hop + 1)
-              if (nw < 2)
-                AudioFingerprint(m.doc_id, decoded = true, n_windows = nw, fp = 0L)
-              else {
-                // per-window band energies: |X_k|² summed over the band's bins
-                val perBand = bins / nBands
-                val e = Array.tabulate(nw, nBands) { (t, b) =>
-                  var s = 0.0
-                  var kk = b * perBand
-                  while (kk < (b + 1) * perBand) {
-                    var re = 0.0; var im = 0.0; var i = 0
-                    while (i < win) {
-                      val v = x(t * hop + i)
-                      re += v * cosB(kk)(i); im += v * sinB(kk)(i)
-                      i += 1
-                    }
-                    s += re * re + im * im
-                    kk += 1
-                  }
-                  s
-                }
-                var fp = 0L
-                var bit = 0
-                var t = 1
-                while (t < nw && bit < 64) {
-                  var b = 0
-                  while (b < nBands - 1 && bit < 64) {
-                    if ((e(t)(b) - e(t)(b + 1)) > (e(t - 1)(b) - e(t - 1)(b + 1)))
-                      fp |= (1L << bit)
-                    bit += 1
-                    b += 1
-                  }
-                  t += 1
-                }
-                AudioFingerprint(m.doc_id, decoded = true, n_windows = nw, fp = fp)
-              }
-            }
-          } finally in.close()
-        } catch {
-          case _: Exception =>
-            AudioFingerprint(m.doc_id, decoded = false, n_windows = 0, fp = 0L)
-        }
-      }
-    }
-  }
-
-  /** Banded-Hamming near-dup pairs over ANY (id, 64-bit hash) frame — the
-    * perceptual-dedup JOIN that turns the fingerprint ladder (aHash /
-    * pHash / audio band-energy bits) into actual duplicate pairs, with the
-    * MinHash-LSH band discipline transplanted to Hamming space: split the
-    * 64 bits into nBands contiguous bands; by pigeonhole, two hashes
-    * within Hamming distance d < nBands agree EXACTLY on ≥1 band, so an
-    * equi self-join on (band, band-bits) generates a COMPLETE candidate
-    * set (zero false negatives, spec-proven against brute force) and the
-    * cheap popcount(xor) verify runs only on collisions — never all
-    * pairs. Scale shape: banding is a narrow projection (4 rows per
-    * hash), candidates are an equi join on the band key, and the verify
-    * is codegen bit math on pair-sized rows — the q42 economics at 64-bit
-    * width. Spec-only like its fingerprint inputs (pixel/PCM decoding is
-    * not oracle-expressible); the lexical twin q42 carries the hash gate
-    * for this join shape. */
-  def hammingPairs(hashes: DataFrame, idCol: String, hashCol: String,
-                   maxDist: Int = 3, nBands: Int = 4): DataFrame = {
-    require(maxDist < nBands,
-      s"pigeonhole completeness needs maxDist < nBands, got $maxDist/$nBands")
-    require(64 % nBands == 0, s"nBands must divide 64, got $nBands")
-    val width = 64 / nBands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val banded = hashes
-      .select(col(idCol).as("id"), col(hashCol).cast("long").as("h"))
-      .select(col("id"), col("h"),
-        explode(array((0 until nBands).map(b =>
-          struct(lit(b).as("b"),
-            shiftright(col("h"), b * width).bitwiseAND(lit(mask)).as("k"))): _*))
-          .as("bk"))
-      .select(col("id"), col("h"), col("bk.b").as("b"), col("bk.k").as("k"))
-    banded.as("x").join(banded.as("y"),
-        col("x.b") === col("y.b") && col("x.k") === col("y.k") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("i"), col("y.id").as("j"),
-        bit_count(col("x.h").bitwiseXOR(col("y.h"))).cast("long").as("dist"))
-      .distinct()
-      .filter(col("dist") <= maxDist)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // --- binary payload + typed metadata extraction ------------------------
@@ -580,9 +55,8 @@ object Multimodal {
 
     // --- "resize": deterministic 4:1 byte downsample of the payload --------
     // The stand-in for an image resize: keep every 4th byte, emit the
-    // thumbnail's size and content hash (the real resize would swap in a
-    // decoder inside decodeStub; the plumbing — per-row binary transform,
-    // metadata columns — is what this exercises).
+    // thumbnail's size and content hash (the plumbing — per-row binary
+    // transform, metadata columns — is what this exercises).
     "q62_multimodal_resize" -> ((s, d) =>
       docs(s, d)
         .select(col("doc_id"),

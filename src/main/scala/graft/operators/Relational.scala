@@ -3060,8 +3060,7 @@ object Relational {
 
     // --- grouping sets via SQL ------------------------------------------------------------------
     "q24_grouping_sets" -> ((s, d) => {
-      // register only what the SQL touches (registerAll would re-read all
-      // ten table schemas on every invocation)
+      // register only the table the SQL touches
       Tables.load(s, d, "lineitem").createOrReplaceTempView("lineitem")
       s.sql("""
         SELECT l_returnflag, l_linestatus,

@@ -1356,19 +1356,14 @@ object Similarity {
         .pin(false)
     }
 
-  private def residualAdcScored(s: SparkSession, d: String): DataFrame =
-    residualAdcScoredFor(s, d,
-      embs(s, d).filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv")))
-
-  /** ADC scores for an ARBITRARY (query_id, qv: array<double>) frame
-    * against the FROZEN residual IVF-PQ index of `d` — the serving-path
-    * core of the q137/q140 batch queries: the index (centroids, residual
-    * codebooks, corpus code frame) is built/memoized once; each call
-    * touches only the probed lists' 2-byte codes with the query side
-    * broadcast. */
-  private[graft] def residualAdcScoredFor(s: SparkSession, d: String,
-      q: DataFrame): DataFrame = {
+  /** ADC scores of the first NumQueries embeddings against the FROZEN
+    * residual IVF-PQ index of `d` — the core of the q137/q140 batch
+    * queries: the index (centroids, residual codebooks, corpus code frame)
+    * is built/memoized once; each call touches only the probed lists'
+    * 2-byte codes with the query side broadcast. */
+  private def residualAdcScored(s: SparkSession, d: String): DataFrame = {
+    val q = embs(s, d).filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val e = embs(s, d)
     val cb = trainResidualCodebooks(e, d)
     val cent = trainCentroids(e)

@@ -70,33 +70,6 @@ object Sketches {
   def bucketOf(term: String, r: Int): Int =
     Integer.parseInt(md5hex(s"$r|$term").substring(0, 4), 16) % Width
 
-  /** The CMS as a MERGEABLE FIXED-SIZE accumulator: one flat
-    * `Array[Long]` of Depth*Width cells. `reduce` increments one bucket
-    * per hash row; `merge` is a cell-wise add — which is what makes the
-    * sketch composable everywhere state composes: map-side partials,
-    * shuffle merges, streaming state across micro-batches, cross-shard /
-    * cross-day sketch unions. Per-task and per-stream state is Depth*Width
-    * cells regardless of vocabulary — the property the scaladoc above
-    * promises for the 100 TB variant, here as an operator. */
-  object CmsAggregate extends Aggregator[String, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = new Array[Long](Depth * Width)
-    override def reduce(b: Array[Long], term: String): Array[Long] = {
-      var r = 0
-      while (r < Depth) { b(r * Width + bucketOf(term, r)) += 1L; r += 1 }
-      b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-    override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
-  }
-
   // ------------------------- Bloom filter --------------------------------
 
   /** Bloom-filter sizing: BloomBits bits (BloomWords int64 words), K seeded
@@ -119,9 +92,10 @@ object Sketches {
   def bloomPosOf(x: String, r: Int): Int =
     Integer.parseInt(md5hex(s"$r|$x").substring(0, 4), 16) % BloomBits
 
-  /** The Bloom filter as a MERGEABLE FIXED-SIZE accumulator (same
-    * discipline as [[CmsAggregate]]): one flat `Array[Long]` of BloomWords
-    * words; `reduce` sets K bits, `merge` is a word-wise OR. No false
+  /** The Bloom filter as a MERGEABLE FIXED-SIZE accumulator: one flat
+    * `Array[Long]` of BloomWords words; `reduce` sets K bits, `merge` is a
+    * word-wise OR, so per-task state is BloomWords words regardless of
+    * input size. No false
     * negatives by construction; false positives at the dialed rate are part
     * of the operator's semantics (and of its oracle — DuckDB rebuilds the
     * identical bit set, so both engines agree exactly, FPs included).
@@ -186,7 +160,7 @@ object Sketches {
         (HistBuckets - 1).toDouble).toInt)
 
   /** The histogram as a MERGEABLE FIXED-SIZE accumulator (same discipline
-    * as [[CmsAggregate]]/[[BloomAggregate]]): HistBuckets int64 cells,
+    * as [[BloomAggregate]]): HistBuckets int64 cells,
     * `reduce` increments one, `merge` is cell-wise add. The streaming-safe
     * quantile state: per-key state-store entries hold HistBuckets cells
     * forever, independent of stream length. Batch==stream is pinned by
@@ -253,7 +227,7 @@ object Sketches {
   }
 
   /** The HLL as a MERGEABLE FIXED-SIZE accumulator (the discipline of
-    * [[CmsAggregate]]/[[BloomAggregate]]/[[HistogramAggregate]]): m int64
+    * [[BloomAggregate]]/[[HistogramAggregate]]): m int64
     * registers, `reduce` maxes one register, `merge` is element-wise max —
     * the union law that makes cross-shard / cross-day / streaming distinct
     * counting composable with bounded state. Registers (not a float
@@ -340,8 +314,9 @@ object Sketches {
     * built with the same seeds; nothing changes shape.
     *
     * Scale shape: per-key counts are a two-level hash agg (or feed raw
-    * increments into `CmsAggregate` and skip the exact stage entirely —
-    * fixed state per task); after that everything is Depth×Width cells.
+    * (key, 1) increments straight into the bucket agg and skip the exact
+    * stage entirely — fixed state per task); after that everything is
+    * Depth×Width cells.
     * Products are carried in DECIMAL(38,0) (≙ HUGEINT): bucket sums are
     * corpus-sized and square past int64 long before 100 TB.
     *
@@ -379,7 +354,7 @@ object Sketches {
   val MgK = 127
 
   /** The Misra–Gries frequency summary as a MERGEABLE BOUNDED accumulator
-    * (the deterministic-guarantee sibling of [[CmsAggregate]]): at most
+    * (the deterministic-guarantee sibling of the count–min sketch): at most
     * [[MgK]] (key → weight) entries regardless of key cardinality.
     * `reduce` increments a tracked key, admits an untracked one while
     * capacity remains, and otherwise decrements every counter by 1 and

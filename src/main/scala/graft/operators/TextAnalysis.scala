@@ -1336,30 +1336,26 @@ object TextAnalysis {
     // frame past the one corpus scan is histogram-sized (sources × langs),
     // so the whole audit is broadcast-joined dimension work at any corpus
     // size. 0 ≤ num/den ≤ 1, 0 = identical mix, 1 = disjoint.
-    "q206_tvd_drift" -> ((s, d) =>
-      tvdOn(t(s, d).groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("c"))))
+    "q206_tvd_drift" -> ((s, d) => {
+      val cnt = t(s, d).groupBy(col("source"), col("lang"))
+        .agg(count(lit(1)).as("c"))
+      val tot = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
+      val pairs = tot.select(col("source").as("sa"), col("n").as("na"))
+        .join(tot.select(col("source").as("sb"), col("n").as("nb")),
+          col("sa") < col("sb"))
+      val langs = cnt.select(col("lang")).distinct()
+      pairs.join(broadcast(langs))
+        .join(cnt.select(col("source").as("sa"), col("lang"),
+          col("c").as("ca")), Seq("sa", "lang"), "left")
+        .join(cnt.select(col("source").as("sb"), col("lang"),
+          col("c").as("cb")), Seq("sb", "lang"), "left")
+        .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
+        .agg(sum(abs(coalesce(col("ca"), lit(0L)) * col("nb") -
+          coalesce(col("cb"), lit(0L)) * col("na"))).as("tvd_num"))
+        .select(col("sa"), col("sb"), col("tvd_num"),
+          (col("na") * col("nb") * 2).as("tvd_den"))
+    })
   )
-
-  /** The q206 pairwise TVD over an arbitrary (source, lang, c) count
-    * frame. */
-  private[graft] def tvdOn(cnt: DataFrame): DataFrame = {
-    val tot = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
-    val pairs = tot.select(col("source").as("sa"), col("n").as("na"))
-      .join(tot.select(col("source").as("sb"), col("n").as("nb")),
-        col("sa") < col("sb"))
-    val langs = cnt.select(col("lang")).distinct()
-    pairs.join(broadcast(langs))
-      .join(cnt.select(col("source").as("sa"), col("lang"),
-        col("c").as("ca")), Seq("sa", "lang"), "left")
-      .join(cnt.select(col("source").as("sb"), col("lang"),
-        col("c").as("cb")), Seq("sb", "lang"), "left")
-      .groupBy(col("sa"), col("sb"), col("na"), col("nb"))
-      .agg(sum(abs(coalesce(col("ca"), lit(0L)) * col("nb") -
-        coalesce(col("cb"), lit(0L)) * col("na"))).as("tvd_num"))
-      .select(col("sa"), col("sb"), col("tvd_num"),
-        (col("na") * col("nb") * 2).as("tvd_den"))
-  }
 
   /** The standard pre-training filter chain (token count band, mean token
     * length band, symbol ratio, repeated-n-gram ratio) as one narrow

@@ -41,11 +41,11 @@ class OrionSinkSpec extends SparkSpec {
   test("writeBatch posts each record to its per-record URL, PATCH included") {
     withReceiver { (port, got) =>
       val updates = Seq(
-        OrionSinkRecord("""{"temperature_min":{"value":19.5,"type":"Float"}}""",
-          s"http://127.0.0.1:$port/v2/entities/R1/attrs"),
-        OrionSinkRecord("""{"temperature_min":{"value":7.0,"type":"Float"}}""",
-          s"http://127.0.0.1:$port/v2/entities/R2/attrs", method = "PATCH")
-      ).toDF()
+        ("""{"temperature_min":{"value":19.5,"type":"Float"}}""",
+          s"http://127.0.0.1:$port/v2/entities/R1/attrs", "application/json", "POST"),
+        ("""{"temperature_min":{"value":7.0,"type":"Float"}}""",
+          s"http://127.0.0.1:$port/v2/entities/R2/attrs", "application/json", "PATCH")
+      ).toDF("content", "url", "contentType", "method")
       OrionSink.writeBatch(updates)
       val seen = got.synchronized(got.toList)
       assert(seen.map(_.path).toSet ==

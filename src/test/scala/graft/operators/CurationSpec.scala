@@ -192,44 +192,6 @@ class CurationSpec extends SparkSpec {
     assert(batch.toSeq == streamed.toSeq)
   }
 
-  test("bloomScan: frozen filter equals q71 row for row, batch == stream") {
-    val s = spark
-    implicit val sqlCtx = s.sqlContext
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-    val bloom = Curation.trainBloom(docs, Curation.BenchSource, Curation.DecontamN)
-    // the narrow frozen-filter scan reproduces the q71 join+agg pipeline
-    // exactly (same hashes, same bits, false positives included)
-    val q71 = Curation.queries("q71_bloom_decontam")(spark, sfDir)
-      .orderBy("doc_id").collect()
-    val scanned = Curation.bloomScan(
-        docs.filter(col("source") =!= Curation.BenchSource),
-        bloom, Curation.DecontamN)
-      .orderBy("doc_id").collect()
-    assert(scanned.toSeq == q71.toSeq)
-    // and it is mode-agnostic: identical rows from a readStream micro-batch
-    val sample = docs.filter(col("source") =!= Curation.BenchSource)
-      .select("doc_id", "source", "text").limit(50).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val batch = Curation.bloomScan(
-        sample.toSeq.toDF("doc_id", "source", "text"),
-        bloom, Curation.DecontamN)
-      .orderBy("doc_id").collect()
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String)]
-    val q = Curation.bloomScan(
-        mem.toDF().select(col("_1").as("doc_id"), col("_2").as("source"),
-          col("_3").as("text")),
-        bloom, Curation.DecontamN)
-      .writeStream.format("memory").queryName("bloom_stream")
-      .outputMode("append").start()
-    val streamed =
-      try {
-        mem.addData(sample.toSeq: _*)
-        q.processAllAvailable()
-        s.table("bloom_stream").orderBy("doc_id").collect()
-      } finally q.stop()
-    assert(batch.toSeq == streamed.toSeq)
-  }
-
   // --- chunking -----------------------------------------------------------
 
   test("chunkDocs: stride coverage — every token chunked, interiors full-width") {

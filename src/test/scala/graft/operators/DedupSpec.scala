@@ -58,7 +58,7 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.queries("q42_dedup_lsh_pairs")(spark, sfDir)
     val rows = got.collect()
     assert(rows.nonEmpty, "sf0.001 documents contain near-duplicates; LSH must surface some")
-    assert(rows.forall(_.getDouble(2) >= Dedup.JaccardThreshold))
+    assert(rows.forall(_.getDouble(2) >= Dedup.TrigramTNum.toDouble / Dedup.TrigramTDen))
   }
 
   test("adversarial mega-bucket: 5k identical docs complete without a single-row bucket") {

@@ -16,303 +16,6 @@ class MultimodalSpec extends SparkSpec {
     assert(new String(row.payload, "UTF-8").nonEmpty)
   }
 
-  test("decodeStub: deterministic fake features with the real batch shape") {
-    val ds = payloads(spark, sfDir).repartition(4)
-    val feats = decodeStub(ds)
-    // schema is the decode contract a real decoder must honor
-    assert(feats.schema.fieldNames.toSeq ==
-      Seq("doc_id", "modality", "width", "height", "n_bytes", "feature"))
-    val a = feats.collect().sortBy(_.doc_id)
-    val b = decodeStub(payloads(spark, sfDir)).collect().sortBy(_.doc_id)
-    assert(a.map(_.n_bytes).sameElements(b.map(_.n_bytes)), "decode must be deterministic")
-    assert(a.forall(f => f.feature.length == math.min(8, f.n_bytes)))
-    assert(a.forall(f => f.feature.forall(x => x >= 0f && x <= 1f)))
-  }
-
-  test("decodeImage: real PNG decode via javax.imageio, exact pixels") {
-    import spark.implicits._
-    // 2x2 PNG with known pixels, written by the same JVM codec that will
-    // read it back (lossless format -> exact round-trip).
-    val img = new java.awt.image.BufferedImage(2, 2,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, 0xff0000) // red
-    img.setRGB(1, 0, 0x00ff00) // green
-    img.setRGB(0, 1, 0x0000ff) // blue
-    img.setRGB(1, 1, 0xffffff) // white
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", bos))
-    val png = bos.toByteArray
-    val notAnImage = "just text bytes".getBytes("UTF-8")
-    val ds = Seq(
-      MediaPayload(1L, "image", png),
-      MediaPayload(2L, "image", notAnImage)).toDS()
-    val out = decodeImage(ds).collect().sortBy(_.doc_id)
-
-    val decoded = out(0)
-    assert(decoded.width == 2 && decoded.height == 2)
-    assert(decoded.n_bytes == png.length.toLong)
-    // row-major integer-mean luminance: (r+g+b)/3 then /255
-    val expected = Array(255 / 3, 255 / 3, 255 / 3, 255).map(_ / 255.0f)
-    assert(decoded.feature.sameElements(expected),
-      s"got ${decoded.feature.mkString(",")}")
-
-    // undecodable payload degrades to the stub, never crashes the partition
-    val fallback = out(1)
-    assert(fallback.n_bytes == notAnImage.length.toLong)
-    assert(fallback.width == notAnImage.length % 640 &&
-      fallback.height == notAnImage.length % 480)
-  }
-
-  test("imageAHash: re-encoded pixels hash identically; different pixels differ") {
-    import spark.implicits._
-    // a 16x16 half-dark/half-light gradient — content with real structure
-    val img = new java.awt.image.BufferedImage(16, 16,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 16; x <- 0 until 16) {
-      val v = if (x < 8) 16 * y / 2 else 128 + x * 4
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    def enc(i: java.awt.image.BufferedImage, fmt: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(i, fmt, bos)); bos.toByteArray
-    }
-    val png = enc(img, "png")
-    val bmp = enc(img, "bmp")
-    assert(!png.sameElements(bmp), "the two encodings must differ as bytes")
-    // an inverted copy: same dimensions, different pixels
-    val inv = new java.awt.image.BufferedImage(16, 16,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 16; x <- 0 until 16)
-      inv.setRGB(x, y, ~img.getRGB(x, y) & 0xffffff)
-    val out = imageAHash(Seq(
-      MediaPayload(1L, "image", png),
-      MediaPayload(2L, "image", bmp),
-      MediaPayload(3L, "image", enc(inv, "png")),
-      MediaPayload(4L, "image", "not an image".getBytes("UTF-8"))).toDS())
-      .collect().map(h => h.doc_id -> h).toMap
-    // exact byte dedup (q63's md5) CANNOT pair 1 and 2; aHash does
-    assert(out(1L).decoded && out(2L).decoded)
-    assert(out(1L).ahash == out(2L).ahash, "re-encode must not change aHash")
-    assert(out(1L).ahash != 0L)
-    assert(out(3L).ahash != out(1L).ahash, "inverted image must differ")
-    assert(!out(4L).decoded && out(4L).ahash == 0L, "degrade, never crash")
-  }
-
-  test("imagePHash: survives re-encode AND integer upscale; unrelated differs") {
-    import spark.implicits._
-    // 32x32 with real 2-D structure (diagonal gradient + a bright block)
-    val img = new java.awt.image.BufferedImage(32, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 32) {
-      val v = math.min(255, 3 * x + 2 * y + (if (x >= 20 && y < 10) 90 else 0))
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    // 2x nearest-neighbor upscale: every source pixel becomes a 2x2 block,
-    // so the 32-cell box filter reduces it to the IDENTICAL luminance grid
-    // — the resize robustness aHash lacks, pinned exactly
-    val up = new java.awt.image.BufferedImage(64, 64,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 64; x <- 0 until 64) up.setRGB(x, y, img.getRGB(x / 2, y / 2))
-    val inv = new java.awt.image.BufferedImage(32, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 32)
-      inv.setRGB(x, y, ~img.getRGB(x, y) & 0xffffff)
-    def enc(i: java.awt.image.BufferedImage, fmt: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(i, fmt, bos)); bos.toByteArray
-    }
-    val out = imagePHash(Seq(
-      MediaPayload(1L, "image", enc(img, "png")),
-      MediaPayload(2L, "image", enc(img, "bmp")),
-      MediaPayload(3L, "image", enc(up, "png")),
-      MediaPayload(4L, "image", enc(inv, "png")),
-      MediaPayload(5L, "image", "not an image".getBytes("UTF-8"))).toDS())
-      .collect().map(h => h.doc_id -> h).toMap
-    assert(out(1L).decoded && out(1L).phash != 0L)
-    assert(out(1L).phash == out(2L).phash, "re-encode must not change pHash")
-    assert(out(1L).phash == out(3L).phash, "2x upscale must not change pHash")
-    // aHash CANNOT see through the resize when sampling points shift; pHash
-    // keying on low frequencies is the point of the DCT tier
-    assert(out(4L).phash != out(1L).phash, "inverted image must differ")
-    assert(!out(5L).decoded && out(5L).phash == 0L, "degrade, never crash")
-  }
-
-  test("hammingPairs: complete vs brute force at d<=3; misses nothing, verifies exactly") {
-    import spark.implicits._
-    // deterministic pseudo-random hashes + planted near-pairs at controlled
-    // distances (0, 1, 3 in = found; 4, 17 out = must be dropped by verify)
-    def h64(s: String): Long =
-      java.lang.Long.parseLong(TextFns.md5hex(s).take(15), 16)
-    val base = (0 until 24).map(i => (i.toLong, h64(s"hp$i")))
-    def flip(h: Long, bits: Seq[Int]) = bits.foldLeft(h)((a, b) => a ^ (1L << b))
-    val planted = Seq(
-      (100L, base(0)._2),                      // dist 0 to id 0
-      (101L, flip(base(1)._2, Seq(5))),        // dist 1 to id 1
-      (102L, flip(base(2)._2, Seq(3, 21, 60))),// dist 3 to id 2
-      (103L, flip(base(3)._2, Seq(1, 18, 35, 52))), // dist 4: candidate? maybe; pair NO
-      (104L, flip(base(4)._2, Seq(0, 7, 19, 24, 33, 38, 47, 50, 55, 56, 58, 59, 60, 61, 62, 63, 2))))
-    val all = base ++ planted
-    val out = Multimodal.hammingPairs(all.toDF("id", "h"), "id", "h")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // brute-force truth at the same threshold
-    val brute = (for {
-      (i, hi) <- all; (j, hj) <- all if i < j
-      d = java.lang.Long.bitCount(hi ^ hj) if d <= 3
-    } yield (i, j, d.toLong)).toSet
-    assert(out == brute, "banded candidates + verify must equal brute force")
-    assert(out.contains((0L, 100L, 0L)) && out.contains((1L, 101L, 1L)) &&
-      out.contains((2L, 102L, 3L)))
-    assert(!out.exists { case (i, j, _) => Set(i, j).contains(103L) },
-      "distance-4 pair must fail the verify")
-  }
-
-  test("hammingPairs closes the perceptual loop: re-encode twins pair, unrelated do not") {
-    import spark.implicits._
-    val img = new java.awt.image.BufferedImage(32, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 32) {
-      val v = math.min(255, 3 * x + 2 * y + (if (x >= 20 && y < 10) 90 else 0))
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val inv = new java.awt.image.BufferedImage(32, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 32)
-      inv.setRGB(x, y, ~img.getRGB(x, y) & 0xffffff)
-    def enc(i: java.awt.image.BufferedImage, fmt: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(i, fmt, bos)); bos.toByteArray
-    }
-    val hashes = imagePHash(Seq(
-      MediaPayload(1L, "image", enc(img, "png")),
-      MediaPayload(2L, "image", enc(img, "bmp")),
-      MediaPayload(3L, "image", enc(inv, "png"))).toDS())
-      .filter(_.decoded).toDF()
-    val pairs = Multimodal.hammingPairs(hashes, "doc_id", "phash")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)), "re-encoded twin must pair")
-    assert(!pairs.exists { case (i, j) => Set(i, j).contains(3L) },
-      "inverted image must not pair at d<=3")
-  }
-
-  test("decodeImage: real JPEG decode via javax.imageio") {
-    import spark.implicits._
-    // JPEG is lossy, so pin a uniform mid-gray 4x4 (DC-only content — the
-    // codec preserves it to within a quantization step) and assert exact
-    // dimensions + near-exact luminance.
-    val img = new java.awt.image.BufferedImage(4, 4,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 4; y <- 0 until 4) img.setRGB(x, y, 0x808080)
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "jpg", bos))
-    val jpg = bos.toByteArray
-    val out = decodeImage(Seq(MediaPayload(1L, "image", jpg)).toDS()).collect()
-    assert(out.length == 1)
-    assert(out.head.width == 4 && out.head.height == 4)
-    assert(out.head.n_bytes == jpg.length.toLong)
-    assert(out.head.feature.length == 8)
-    out.head.feature.foreach(f =>
-      assert(math.abs(f - 128 / 255.0f) < 0.02f, s"luminance drifted: $f"))
-  }
-
-  test("decodeImage: truncated PNG degrades to the stub, never crashes") {
-    import spark.implicits._
-    val img = new java.awt.image.BufferedImage(16, 16,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", bos))
-    val png = bos.toByteArray
-    // Valid signature + header, body cut off mid-stream: the decoder must
-    // degrade this row (and only this row) to the stub.
-    val truncated = png.take(png.length / 2)
-    val ds = Seq(
-      MediaPayload(1L, "image", png),
-      MediaPayload(2L, "image", truncated)).toDS()
-    val out = decodeImage(ds).collect().sortBy(_.doc_id)
-    assert(out(0).width == 16 && out(0).height == 16)
-    assert(out(1).n_bytes == truncated.length.toLong)
-    assert(out(1).width == truncated.length % 640 &&
-      out(1).height == truncated.length % 480,
-      "truncated payload must carry the stub's byte-derived dimensions")
-  }
-
-  test("decodeAudio: real WAV decode via javax.sound.sampled, exact samples") {
-    import spark.implicits._
-    // 16-bit signed mono WAV at 8 kHz with known samples, written by the
-    // same JVM codec that reads it back (PCM is lossless -> exact).
-    val samples = Array[Short](0, 16384, -16384, 32767, -32768, 1, -1, 12345, 777, -777)
-    val bytes = new Array[Byte](samples.length * 2)
-    samples.zipWithIndex.foreach { case (s, i) => // little-endian
-      bytes(2 * i) = (s & 0xff).toByte
-      bytes(2 * i + 1) = ((s >> 8) & 0xff).toByte
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(bytes), fmt, samples.length.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    val wav = bos.toByteArray
-    val notAudio = "just text bytes".getBytes("UTF-8")
-    val ds = Seq(
-      MediaPayload(1L, "audio", wav),
-      MediaPayload(2L, "audio", notAudio),
-      MediaPayload(3L, "audio", wav.take(wav.length / 2))).toDS().repartition(2)
-    val out = decodeAudio(ds).collect().sortBy(_.doc_id)
-
-    val decoded = out(0)
-    assert(decoded.sample_rate == 8000 && decoded.channels == 1 && decoded.bits == 16)
-    assert(decoded.n_frames == samples.length.toLong)
-    assert(decoded.n_bytes == wav.length.toLong)
-    val expected = samples.take(8).map(_ / 32768.0f)
-    assert(decoded.feature.sameElements(expected),
-      s"got ${decoded.feature.mkString(",")} want ${expected.mkString(",")}")
-
-    // non-audio bytes and a truncated container both degrade structurally
-    out.drop(1).foreach { f =>
-      assert(f.sample_rate == 0 && f.channels == 0 && f.n_frames == 0L,
-        s"doc ${f.doc_id} should carry the degrade marker")
-      assert(f.feature.length == math.min(8, f.n_bytes))
-    }
-  }
-
-  test("decodeAudio: stereo picks channel 0; 8-bit unsigned normalizes") {
-    import spark.implicits._
-    // stereo 16-bit: frames are [L, R]; channel 0 must be the L samples
-    val l = Array[Short](100, -200, 300, -400)
-    val r = Array[Short](9999, 9999, 9999, 9999)
-    val stereoBytes = new Array[Byte](l.length * 4)
-    for (i <- l.indices) {
-      stereoBytes(4 * i) = (l(i) & 0xff).toByte
-      stereoBytes(4 * i + 1) = ((l(i) >> 8) & 0xff).toByte
-      stereoBytes(4 * i + 2) = (r(i) & 0xff).toByte
-      stereoBytes(4 * i + 3) = ((r(i) >> 8) & 0xff).toByte
-    }
-    val stereoFmt = new javax.sound.sampled.AudioFormat(44100f, 16, 2, true, false)
-    val bos1 = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(
-      new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(stereoBytes), stereoFmt, l.length.toLong),
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos1)
-    // 8-bit unsigned mono: 0 -> -1.0, 128 -> 0.0, 255 -> 127/128
-    val u8 = Array[Int](0, 128, 255, 64).map(_.toByte)
-    val u8Fmt = new javax.sound.sampled.AudioFormat(
-      javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED, 11025f, 8, 1, 1, 11025f, false)
-    val bos2 = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(
-      new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(u8), u8Fmt, u8.length.toLong),
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos2)
-    val ds = Seq(
-      MediaPayload(1L, "audio", bos1.toByteArray),
-      MediaPayload(2L, "audio", bos2.toByteArray)).toDS()
-    val out = decodeAudio(ds).collect().sortBy(_.doc_id)
-    assert(out(0).channels == 2 && out(0).sample_rate == 44100)
-    assert(out(0).feature.sameElements(l.map(_ / 32768.0f)))
-    assert(out(1).channels == 1 && out(1).bits == 8)
-    assert(out(1).feature.sameElements(
-      Array(0, 128, 255, 64).map(v => (v - 128) / 128.0f)))
-  }
-
   test("frame sampling emits every 3rd 32-byte frame") {
     val out = queries("q61_multimodal_frames")(spark, sfDir).collect()
     assert(out.nonEmpty)
@@ -327,107 +30,5 @@ class MultimodalSpec extends SparkSpec {
       val nf = docs(d)
       assert(n == (nf + FrameStride - 1) / FrameStride)
     }
-  }
-
-  test("decodeVideo: real RIFF-AVI header parse, exact container metadata") {
-    import spark.implicits._
-    // hand-built minimal AVI: RIFF/'AVI ' + LIST/hdrl + avih(56 bytes)
-    def u32(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val avih = new java.io.ByteArrayOutputStream()
-    avih.write(u32(33367L))            // dwMicroSecPerFrame (~29.97 fps)
-    avih.write(u32(0)); avih.write(u32(0)); avih.write(u32(0))
-    avih.write(u32(2400L))             // dwTotalFrames
-    avih.write(u32(0)); avih.write(u32(1)); avih.write(u32(0))
-    avih.write(u32(1920L))             // dwWidth
-    avih.write(u32(1080L))             // dwHeight
-    (0 until 4).foreach(_ => avih.write(u32(0)))
-    val body = new java.io.ByteArrayOutputStream()
-    body.write("hdrl".getBytes("US-ASCII"))
-    body.write("avih".getBytes("US-ASCII")); body.write(u32(56L))
-    body.write(avih.toByteArray)
-    val riff = new java.io.ByteArrayOutputStream()
-    riff.write("AVI ".getBytes("US-ASCII"))
-    riff.write("LIST".getBytes("US-ASCII")); riff.write(u32(body.size().toLong))
-    riff.write(body.toByteArray)
-    val file = new java.io.ByteArrayOutputStream()
-    file.write("RIFF".getBytes("US-ASCII")); file.write(u32(riff.size().toLong))
-    file.write(riff.toByteArray)
-    val avi = file.toByteArray
-
-    val ds = Seq(
-      MediaPayload(1L, "video", avi),
-      MediaPayload(2L, "video", "not a container".getBytes("UTF-8")),
-      MediaPayload(3L, "video", avi.take(30))).toDS().repartition(2)
-    val out = decodeVideo(ds).collect().sortBy(_.doc_id)
-
-    assert(out(0).width == 1920 && out(0).height == 1080)
-    assert(out(0).n_frames == 2400L && out(0).us_per_frame == 33367L)
-    assert(out(0).n_bytes == avi.length.toLong)
-    // non-AVI bytes and a truncated header both degrade structurally
-    out.drop(1).foreach { f =>
-      assert(f.us_per_frame == 0L && f.n_frames == 0L,
-        s"doc ${f.doc_id} should carry the degrade marker")
-      assert(f.width == (f.n_bytes % 640).toInt)
-    }
-  }
-
-  test("audioFingerprint: container/endianness-invariant, clip-discriminating") {
-    import spark.implicits._
-    // two genuinely different clips: a 440 Hz and a 1700 Hz sine at 8 kHz,
-    // 16-bit mono, long enough for several analysis windows
-    def sine(hz: Double, n: Int): Array[Short] =
-      Array.tabulate(n)(i =>
-        (math.sin(2 * math.Pi * hz * i / 8000.0) * 20000).toShort)
-    def container(samples: Array[Short], bigEndian: Boolean,
-                  typ: javax.sound.sampled.AudioFileFormat.Type): Array[Byte] = {
-      val bytes = new Array[Byte](samples.length * 2)
-      samples.zipWithIndex.foreach { case (s, i) =>
-        val (lo, hi) = if (bigEndian) (2 * i + 1, 2 * i) else (2 * i, 2 * i + 1)
-        bytes(lo) = (s & 0xff).toByte
-        bytes(hi) = ((s >> 8) & 0xff).toByte
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, bigEndian)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(bytes), fmt, samples.length.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais, typ, bos)
-      bos.toByteArray
-    }
-    val a = sine(440.0, 5000)
-    val b = sine(1700.0, 5000)
-    val wavA = container(a, bigEndian = false,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE)
-    val auA = container(a, bigEndian = true,
-      javax.sound.sampled.AudioFileFormat.Type.AU)
-    val wavB = container(b, bigEndian = false,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE)
-    assert(!java.util.Arrays.equals(wavA, auA),
-      "fixture must be a REAL re-container: different bytes, same samples")
-    val out = audioFingerprint(Seq(
-        MediaPayload(1L, "audio", wavA),
-        MediaPayload(2L, "audio", auA),
-        MediaPayload(3L, "audio", wavB),
-        MediaPayload(4L, "audio", "not audio".getBytes("UTF-8"))).toDS()
-        .repartition(2))
-      .collect().sortBy(_.doc_id)
-    // same clip, different container/endianness -> identical fingerprint
-    assert(out(0).decoded && out(1).decoded && out(0).n_windows >= 2)
-    assert(out(0).fp == out(1).fp,
-      s"re-containered clip drifted: ${out(0).fp} vs ${out(1).fp}")
-    // a different clip -> a different fingerprint
-    assert(out(2).decoded && out(2).fp != out(0).fp,
-      "different clips must not collide")
-    // and gain invariance: half-amplitude same clip, same bits (every band
-    // energy scales by the same factor, preserving every comparison)
-    val halfA = container(a.map(s => (s / 2).toShort), bigEndian = false,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE)
-    val half = audioFingerprint(Seq(MediaPayload(5L, "audio", halfA)).toDS())
-      .collect()(0)
-    assert(half.decoded && half.fp == out(0).fp,
-      s"gain change drifted the fingerprint: ${half.fp} vs ${out(0).fp}")
-    // undecodable payload degrades structurally
-    assert(!out(3).decoded && out(3).fp == 0L)
   }
 }

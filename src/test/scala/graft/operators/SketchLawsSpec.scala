@@ -3,7 +3,7 @@ package graft.operators
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** Merge laws for the three fixed-size mergeable sketch accumulators
-  * (CMS, Bloom, histogram). Spark's partial+final aggregation — and the
+  * (Bloom, histogram, HLL). Spark's partial+final aggregation — and the
   * streaming state-store reuse of the same buffers — relies on merge being
   * associative/commutative with zero as identity, and on any partition
   * split folding to the same cells as the sequential pass. The buffers
@@ -15,27 +15,6 @@ object SketchLawsSpec extends Properties("SketchAggregates") {
   private val terms = Gen.listOf(Gen.oneOf(
     (0 until 40).map(i => s"term$i")))
   private val values = Gen.listOf(Gen.chooseNum(0.0, 100.0))
-
-  // --- CMS ----------------------------------------------------------------
-
-  private def cmsFold(xs: List[String]) =
-    xs.foldLeft(Sketches.CmsAggregate.zero)(Sketches.CmsAggregate.reduce)
-
-  property("cms: any partition split = sequential fold") =
-    Prop.forAll(terms, Gen.chooseNum(0, 100)) { (xs, cut) =>
-      val k = cut % (xs.size + 1)
-      val (l, r) = xs.splitAt(k)
-      Sketches.CmsAggregate.merge(cmsFold(l), cmsFold(r))
-        .sameElements(cmsFold(xs))
-    }
-
-  property("cms: merge is commutative and zero is identity") =
-    Prop.forAll(terms, terms) { (x, y) =>
-      Sketches.CmsAggregate.merge(cmsFold(x), cmsFold(y))
-        .sameElements(Sketches.CmsAggregate.merge(cmsFold(y), cmsFold(x))) &&
-      Sketches.CmsAggregate.merge(cmsFold(x), Sketches.CmsAggregate.zero)
-        .sameElements(cmsFold(x))
-    }
 
   // --- Bloom --------------------------------------------------------------
 
