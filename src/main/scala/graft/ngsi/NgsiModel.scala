@@ -2,10 +2,6 @@ package graft.ngsi
 
 import java.sql.Timestamp
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-
-import scala.jdk.CollectionConverters._
-
 /** NGSI v2 notification data model.
   *
   * Mirrors the event shape the reference consumes from the
@@ -20,12 +16,19 @@ import scala.jdk.CollectionConverters._
   * honest Spark encoding keeps `value` as a JSON string and late-binds at
   * extraction time with `cast` / `from_json` — the relational analog of the
   * reference's late `asInstanceOf`.
+  *
+  * No code builds these classes: they are the schema that
+  * [[NgsiPipelines.parseEvents]] produces with Spark's JSON functions. The
+  * dynamic attribute keys of an entity object need no fixed StructType:
+  * `from_json` reads each entity as a `MAP<STRING, STRING>` whose values
+  * are the attributes' raw JSON.
   */
 case class NgsiAttribute(
     attrType: String,
     /** JSON-encoded attribute value; scalars unwrapped (numbers/booleans as
-      * their literal text, strings without quotes) so `.cast(...)` works
-      * directly; objects/arrays as compact JSON for `from_json`. */
+      * JSON text, fractions as doubles; strings without quotes) so
+      * `.cast(...)` works directly; objects/arrays as compact JSON for
+      * `from_json`; JSON `null` as null. */
     value: String,
     /** JSON-encoded metadata object (`{}` when absent). */
     metadata: String)
@@ -46,58 +49,6 @@ case class NgsiEvent(
     servicePath: String,
     recvTime: Timestamp,
     entities: Seq[NgsiEntity])
-
-/** Parser: NGSI v2 notification JSON body -> [[NgsiEvent]].
-  *
-  * Dynamic attribute keys (each entity object has `id`, `type`, plus one
-  * key per attribute) rule out a fixed `from_json` StructType, so the
-  * parse is a typed `Dataset.map` over Jackson (shipped with Spark). This
-  * runs distributed — one executor task per input partition — and emits a
-  * fully encodable case class; everything downstream is Catalyst.
-  */
-object NgsiParser extends Serializable {
-
-  // Jackson's ObjectMapper is thread-safe after configuration; one per JVM.
-  @transient private lazy val mapper = new ObjectMapper()
-
-  /** Render a JSON subtree per the [[NgsiAttribute.value]] contract. */
-  private def renderValue(n: JsonNode): String =
-    if (n == null || n.isNull) null
-    else if (n.isTextual) n.asText()
-    else mapper.writeValueAsString(n)
-
-  def parse(body: String,
-            service: String = "",
-            servicePath: String = "",
-            recvTime: Timestamp = new Timestamp(0L)): NgsiEvent = {
-    val root = mapper.readTree(body)
-    val entities = Option(root.get("data")).toSeq.flatMap { data =>
-      data.elements().asScala.map { ent =>
-        val fields = ent.properties().iterator().asScala
-        val attrs = fields.collect {
-          case e if e.getKey != "id" && e.getKey != "type" =>
-            val a = e.getValue
-            e.getKey -> NgsiAttribute(
-              attrType = Option(a.get("type")).map(_.asText()).orNull,
-              value = renderValue(a.get("value")),
-              metadata =
-                Option(a.get("metadata")).map(mapper.writeValueAsString).getOrElse("{}"))
-        }.toMap
-        NgsiEntity(
-          id = Option(ent.get("id")).map(_.asText()).orNull,
-          entityType = Option(ent.get("type")).map(_.asText()).orNull,
-          attrs = attrs)
-      }
-    }
-    NgsiEvent(
-      subscriptionId =
-        Option(root.get("subscriptionId")).map(_.asText()).orNull,
-      service = service,
-      servicePath = servicePath,
-      recvTime = recvTime,
-      entities = entities)
-  }
-}
 
 /** The JSON string escaper behind both hand-written JSON shapes: the HTTP
   * source's capture lines and [[OrionSubscription.toJson]]. Quote,

@@ -19,25 +19,54 @@ import org.apache.spark.sql.functions._
   */
 object NgsiPipelines {
 
+  /** The notification body as `from_json` reads it: each entity is a map
+    * from key to raw JSON text, so the dynamic attribute keys need no
+    * fixed StructType. */
+  private val notificationSchema = "subscriptionId STRING, data ARRAY<MAP<STRING, STRING>>"
+
+  /** `m` without the earlier entries of a key given twice. `from_json`
+    * keeps every entry and a map lookup finds the first, but the typed
+    * `Map` a collect builds keeps the last; this makes both see the last. */
+  private def lastWins(m: Column): Column =
+    map_filter(m, (k, v) => v <=> element_at(filter(map_entries(m), _("key") === k), -1)("value"))
+
   /** Parse a Dataset/DataFrame of raw notification bodies (one JSON body
-    * per row, column `value`, optional `recvTime`) into NgsiEvent rows.
-    * Works on both batch and streaming inputs (socket/file/custom source
-    * deliver exactly this shape).
+    * per row, column `value`, optional `service`/`servicePath`/`recvTime`)
+    * into NgsiEvent rows. Works on both batch and streaming inputs
+    * (socket/file/custom source deliver exactly this shape).
+    *
+    * Spark functions only, so the whole parse stays in Catalyst. Each
+    * attribute's `value` is `get_json_object`'s rendering: strings
+    * unquoted, fractions and exponents as doubles (`1e3` reads `1000.0`,
+    * `23.50` reads `23.5`), objects and arrays as compact JSON, JSON `null`
+    * as SQL null. A body that is not JSON, whose `data` is not an array of
+    * objects, or that has no `data`, gives an event with no entities.
     */
   def parseEvents(raw: DataFrame): Dataset[NgsiEvent] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
+    import raw.sparkSession.implicits._
     def colOr(name: String, dflt: Column): Column =
       if (raw.columns.contains(name)) col(name) else dflt
-    val shaped = raw.select(
-      col("value").cast("string"),
-      colOr("service", lit("")).cast("string"),
-      colOr("servicePath", lit("")).cast("string"),
-      colOr("recvTime", current_timestamp()))
-    shaped.as[(String, String, String, java.sql.Timestamp)]
-      .map { case (body, svc, path, ts) =>
-        NgsiParser.parse(body, service = svc, servicePath = path, recvTime = ts)
-      }
+    val maps = transform(filter(col("body.data"), _.isNotNull), lastWins(_))
+    val entities = transform(maps, entity => struct(
+      entity("id").as("id"),
+      entity("type").as("entityType"),
+      transform_values(map_filter(entity, (k, _) => !k.isin("id", "type")), (_, a) => struct(
+        get_json_object(a, "$.type").as("attrType"),
+        get_json_object(a, "$.value").as("value"),
+        coalesce(get_json_object(a, "$.metadata"), lit("{}")).as("metadata"))).as("attrs")))
+    // The parse is its own projection, so a plan that keeps both of its
+    // fields parses each body once: reading them straight off `from_json`
+    // lets the optimizer split it into one pruned parse per field.
+    raw.select(
+      from_json(col("value").cast("string"), notificationSchema, Map.empty[String, String]).as("body"),
+      colOr("service", lit("")).cast("string").as("service"),
+      colOr("servicePath", lit("")).cast("string").as("servicePath"),
+      colOr("recvTime", current_timestamp()).as("recvTime"))
+      .select(
+        col("body.subscriptionId").as("subscriptionId"),
+        col("service"), col("servicePath"), col("recvTime"),
+        coalesce(entities, typedLit(Seq.empty[NgsiEntity])).as("entities"))
+      .as[NgsiEvent]
   }
 
   /** Batch replay of captured notifications: read a capture directory
@@ -72,11 +101,18 @@ object NgsiPipelines {
   }
 
   /** `flatMap(event => event.entities)` (`Example1.scala:21`) as a
-    * Catalyst Generator: one row per entity, recvTime carried along. */
+    * Catalyst Generator: one row per entity, recvTime carried along.
+    *
+    * `explode_outer` and a null filter, not `explode`: for an inner explode
+    * the optimizer infers `size(entities) > 0` and pushes it below the
+    * projection that computes `entities`, so every body would be parsed
+    * twice. An outer explode infers nothing; the filter drops the one null
+    * row it gives an event with no entities. */
   def flattenEntities(events: DataFrame): DataFrame =
     events
       .select(col("recvTime"), col("service"), col("subscriptionId"),
-              explode(col("entities")).as("entity"))
+              explode_outer(col("entities")).as("entity"))
+      .filter(col("entity").isNotNull)
       .select(col("recvTime"), col("service"), col("subscriptionId"),
               col("entity.id").as("id"),
               col("entity.entityType").as("entityType"),

@@ -55,13 +55,31 @@ object NgsiFixtures {
       |}""".stripMargin
 }
 
+/** `NgsiPipelines.parseEvents` on single bodies: the attribute-rendering
+  * contract of [[NgsiAttribute]] and the bodies that give no entities. */
 class NgsiParserSpec extends SparkSpec with Matchers {
 
+  private def parse(body: String): NgsiEvent = parseAll(body).head
+
+  private def parseAll(bodies: String*): Seq[NgsiEvent] = {
+    val s = spark
+    import s.implicits._
+    NgsiPipelines.parseEvents(bodies.toDF("value")).collect().toSeq
+  }
+
+  private def oneAttr(attr: String): String =
+    s"""{"data":[{"id":"E1","type":"T","a":$attr}],"subscriptionId":"s"}"""
+
   test("parses flat sensor notification (example1 wire format)") {
-    val ev = NgsiParser.parse(NgsiFixtures.flatSensor, service = "demo",
-      servicePath = "/test", recvTime = new Timestamp(1000L))
+    val s = spark
+    import s.implicits._
+    val raw = Seq((NgsiFixtures.flatSensor, "demo", "/test", new Timestamp(1000L)))
+      .toDF("value", "service", "servicePath", "recvTime")
+    val Array(ev) = NgsiPipelines.parseEvents(raw).collect()
     ev.subscriptionId shouldBe "57458eb60962ef754e7c0998"
     ev.service shouldBe "demo"
+    ev.servicePath shouldBe "/test"
+    ev.recvTime shouldBe new Timestamp(1000L)
     ev.entities should have size 1
     val e = ev.entities.head
     e.id shouldBe "R1"
@@ -75,7 +93,9 @@ class NgsiParserSpec extends SparkSpec with Matchers {
   }
 
   test("parses structured attribute notification (example5 wire format)") {
-    val ev = NgsiParser.parse(NgsiFixtures.structured)
+    val ev = parse(NgsiFixtures.structured)
+    ev.service shouldBe ""
+    ev.servicePath shouldBe ""
     val info = ev.entities.head.attrs("information")
     info.attrType shouldBe "object"
     // value is compact JSON, round-trippable by from_json
@@ -84,9 +104,54 @@ class NgsiParserSpec extends SparkSpec with Matchers {
   }
 
   test("string attribute values are unwrapped (no JSON quotes)") {
-    val ev = NgsiParser.parse(
+    val ev = parse(
       """{"data":[{"id":"E1","type":"T","name":{"type":"Text","value":"hello","metadata":{}}}],"subscriptionId":"s"}""")
     ev.entities.head.attrs("name").value shouldBe "hello"
+  }
+
+  test("a JSON null value reads as null; missing metadata reads as {}") {
+    val a = parse(oneAttr("""{"type":"Float","value":null}""")).entities.head.attrs("a")
+    a.attrType shouldBe "Float"
+    a.value shouldBe null
+    a.metadata shouldBe "{}"
+    parse(oneAttr("""{"type":"Float","value":1,"metadata":{"unit":{"type":"Text","value":"C"}}}"""))
+      .entities.head.attrs("a").metadata shouldBe """{"unit":{"type":"Text","value":"C"}}"""
+  }
+
+  test("numbers render as Jackson's double text, objects and arrays as compact JSON") {
+    def value(v: String) = parse(oneAttr(s"""{"type":"Float","value":$v}""")).entities.head.attrs("a").value
+    value("1e3") shouldBe "1000.0"
+    value("23.50") shouldBe "23.5"
+    value("-7") shouldBe "-7"
+    value("true") shouldBe "true"
+    value("""{ "x" : [1, 2] }""") shouldBe """{"x":[1,2]}"""
+    value("""[ "a", 1 ]""") shouldBe """["a",1]"""
+  }
+
+  test("a duplicated attribute key keeps the last value") {
+    val body =
+      """{"data":[{"id":"R1","type":"Node",
+        |"temperature":{"type":"Float","value":10,"metadata":{}},
+        |"temperature":{"type":"Float","value":30,"metadata":{}}}],
+        |"subscriptionId":"s"}""".stripMargin.replace("\n", "")
+    parse(body).entities.head.attrs("temperature").value shouldBe "30"
+    val s = spark
+    import s.implicits._
+    val events = NgsiPipelines.parseEvents(Seq(body).toDF("value"))
+    NgsiPipelines.flattenEntities(events.toDF())
+      .select(NgsiPipelines.attrValue("temperature")).as[String].collect() shouldBe Array("30")
+  }
+
+  test("data as an object, data:[5], a null entity and a non-JSON body give no entities") {
+    val evs = parseAll(
+      """{"data":{"id":"R1","type":"Node","temperature":{"type":"Float","value":1}},"subscriptionId":"s"}""",
+      """{"data":[5],"subscriptionId":"s"}""",
+      """not json at all""",
+      """{"data":[null],"subscriptionId":"s"}""",
+      """{"subscriptionId":"s"}""")
+    evs.map(_.entities) shouldBe Seq.fill(5)(Seq.empty)
+    evs.last.subscriptionId shouldBe "s"
+    evs(2).subscriptionId shouldBe null
   }
 }
 
