@@ -75,7 +75,7 @@ object ModelStore {
     s"$rootDir/$kind/v$FormatVersion/${digest}__$safeHyper"
   }
 
-  /** Observability for specs: how many artifacts this JVM trained vs
+  /** How many artifacts this JVM trained vs
     * served from parquet. */
   val trains = new java.util.concurrent.atomic.AtomicLong(0L)
   val loads = new java.util.concurrent.atomic.AtomicLong(0L)

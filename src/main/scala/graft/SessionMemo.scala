@@ -61,9 +61,6 @@ final class SessionMemo[V](framesOf: V => Seq[DataFrame]) {
     }
     ()
   }
-
-  /** Live entry count (spec observability). */
-  def size: Int = entries.size
 }
 
 object SessionMemo {

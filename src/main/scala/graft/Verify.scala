@@ -1,5 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
+
+import graft.ngsi.NgsiJson
+import graft.operators.Similarity
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -23,63 +28,36 @@ object Verify {
       }
     }
     // Aux exports the oracle SQL reads as tables (kept OUTSIDE outDir so
-    // result-dir globs see only real query outputs): the q52 IVF centroids,
-    // so DuckDB can recheck assignment+search under the exact centroids the
-    // Spark side trained (training is bit-deterministic per sf dir).
+    // result-dir globs see only real query outputs). Each is a trained
+    // model (training is bit-deterministic per sf dir), so DuckDB rechecks
+    // the query's deterministic stages under the exact model the Spark side
+    // used: the q52 IVF centroids, the q115/q116 PQ codebooks, the q137
+    // residual codebooks (PQ over v − centroid), the q144 SemDeDup
+    // centroids (64 lists, distinct from q52's 8), the q138 OPQ rotation +
+    // rotated-space codebooks and the q221 PCA model (mean row + component
+    // rows).
     val auxDir = s"${outDir}_aux"
-    try operators.Similarity.centroidsFor(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q52_centroids")
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] q52_centroids export failed: ${e.getMessage}")
+    Seq[(String, () => DataFrame)](
+      "q52_centroids" -> (() => Similarity.centroidsFor(spark, sfDir)),
+      "q115_codebook" -> (() => Similarity.pqCodebookFor(spark, sfDir)),
+      "q137_codebook" -> (() => Similarity.pqResidualCodebookFor(spark, sfDir)),
+      "q144_centroids" -> (() => Similarity.semDedupCentroidsFor(spark, sfDir)),
+      "q138_rotation" -> (() => Similarity.opqRotationTable(spark, sfDir)),
+      "q138_codebook" -> (() => Similarity.opqCodebookFor(spark, sfDir)),
+      "q221_pca" -> (() => Similarity.pcaModelTable(spark, sfDir))
+    ).foreach { case (name, frame) =>
+      try frame().coalesce(1).write.mode("overwrite").parquet(s"$auxDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name export failed: ${e.getMessage}")
+      }
     }
-    // ... and the q115/q116 PQ codebooks, same contract as the centroids.
-    try operators.Similarity.pqCodebookFor(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q115_codebook")
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] q115_codebook export failed: ${e.getMessage}")
-    }
-    // ... and the q137 residual codebooks (PQ over v − centroid).
-    try operators.Similarity.pqResidualCodebookFor(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q137_codebook")
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] q137_codebook export failed: ${e.getMessage}")
-    }
-    // ... and the q144 SemDeDup centroids (64 lists, distinct from q52's 8).
-    try operators.Similarity.semDedupCentroidsFor(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q144_centroids")
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] q144_centroids export failed: ${e.getMessage}")
-    }
-    // ... and the q138 OPQ rotation + rotated-space codebooks.
-    try {
-      operators.Similarity.opqRotationTable(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q138_rotation")
-      operators.Similarity.opqCodebookFor(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q138_codebook")
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] q138 export failed: ${e.getMessage}")
-    }
-    // ... and the q221 PCA model (mean row + component rows).
-    try operators.Similarity.pcaModelTable(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q221_pca")
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] q221_pca export failed: ${e.getMessage}")
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON string escape: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness.
+    def q(s: String): String = "\"" + NgsiJson.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(operators.Similarity.AuxDirToken, auxDir))}"
+        s"${q(k)}: ${q(v.replace(Similarity.AuxDirToken, auxDir))}"
       }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Full query manifest so the local gate can count a crashed no-oracle

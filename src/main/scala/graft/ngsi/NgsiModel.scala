@@ -50,8 +50,9 @@ case class NgsiEvent(
     recvTime: Timestamp,
     entities: Seq[NgsiEntity])
 
-/** The JSON string escaper behind both hand-written JSON shapes: the HTTP
-  * source's capture lines and [[OrionSubscription.toJson]]. Quote,
+/** The JSON string escaper behind the three hand-written JSON shapes: the
+  * HTTP source's capture lines, [[OrionSubscription.toJson]] and
+  * `graft.Verify`'s `oracle_sql.json`. Quote,
   * backslash and the three named controls get their short escapes, other
   * control characters four-hex-digit unicode escapes; everything else,
   * non-ASCII included, is written raw. */

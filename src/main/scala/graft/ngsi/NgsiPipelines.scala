@@ -175,17 +175,25 @@ object NgsiPipelines {
   /** Example5 (`Example5.scala:20-30`): navigate the structured attribute
     * (map -> list -> map, reference does it with asInstanceOf chains),
     * explode buses, keyed sliding window, MIN(price). The `from_json` +
-    * `explode` + `getField` chain is the declarative equivalent —
-    * Catalyst prunes unused fields (schedule) out of the parse. */
+    * explode + `getField` chain is the declarative equivalent; the parse
+    * keeps the whole `busInfoSchema`, `schedule` included.
+    *
+    * Each `information` value is parsed once, by the recipe of
+    * [[flattenEntities]]: the parse is its own projection, and the explode
+    * is an outer one, so the optimizer infers no `size(buses) > 0` or
+    * `isnotnull(buses)` filter to push below that projection with a copy
+    * of the parse in each. The filter on `pos` drops only the row the
+    * outer explode gives a null or empty `buses`; a null element of
+    * `buses` still yields its row, as an inner explode would. */
   def minBusPrice(events: Dataset[NgsiEvent],
                   windowDur: String = "5 seconds",
                   slide: String = "2 seconds"): DataFrame =
     flattenEntities(events.toDF())
       .select(col("recvTime"),
               from_json(attrValue("information"), busInfoSchema,
-                        Map.empty[String, String])
-                .getField("buses").as("buses"))
-      .select(col("recvTime"), explode(col("buses")).as("bus"))
+                        Map.empty[String, String]).as("info"))
+      .select(col("recvTime"), posexplode_outer(col("info.buses")).as(Seq("pos", "bus")))
+      .filter(col("pos").isNotNull)
       .select(col("recvTime"), col("bus.name").as("name"),
               col("bus.price").as("price"))
       .groupBy(window(col("recvTime"), windowDur, slide), col("name"))

@@ -570,16 +570,8 @@ object Dedup {
   def corpusTrigramPairs(s: SparkSession, d: String): DataFrame =
     trigramPairs(s, d)
 
-  /** q78's containment dedup over an ARBITRARY (doc_id, sh: array<string>
-    * raw shingles) frame — frame-parameterized for the planted-skew specs
-    * (a mega-doc swallowing hundreds of small docs; boilerplate shingles
-    * shared corpus-wide that the df cap must refuse as block keys). */
+  /** q78's [[containmentDigests]], memoized per (session, sf dir). */
   private val sharedContainmentDigests = graft.SessionMemo.ofFrames()
-
-  private[graft] def containmentFromShingles(shingled: DataFrame,
-      verifyShards: Int = 1): DataFrame =
-    containmentFromDigests(
-      containmentDigests(shingled.filter(size(col("sh")) > 0)), verifyShards)
 
   /** The digest projection (md5 per shingle, truncated to a 60-bit int64,
     * deduped + sorted per doc) — the CPU cost center, with FOUR consumers
@@ -700,7 +692,10 @@ object Dedup {
       .filter(col("containment") >= 0.8)
   }
 
-  private def containmentFromDigests(
+  /** q78's containment pairs over a [[containmentDigests]] frame: df-capped
+    * blocking on the rarest digests, then the exact sorted-intersect
+    * verify, in `verifyShards` passes. */
+  private[operators] def containmentFromDigests(
       base: DataFrame, verifyShards: Int): DataFrame = {
     // digests are ALREADY 60-bit longs (containmentDigests truncates at
     // the projection), so blocking keys explode straight out of the

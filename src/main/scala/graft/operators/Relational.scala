@@ -323,7 +323,7 @@ object Relational {
 
   /** (xa, xb) 10-bit binned layout dims of lineitem — shared by the
     * q125/q189/q195 layout family. */
-  private def layoutBinned(s: SparkSession, d: String): DataFrame = {
+  private[operators] def layoutBinned(s: SparkSession, d: String): DataFrame = {
     val dims = t(s, d, "lineitem")
       .select(col("l_orderkey").as("a"), col("l_partkey").as("b"))
     val bounds = dims.agg(
@@ -343,7 +343,7 @@ object Relational {
   }
 
   /** Per-row Morton/z code over [[layoutBinned]] — (xa, xb, code). */
-  private def zorderCoded(s: SparkSession, d: String): DataFrame = {
+  private[operators] def zorderCoded(s: SparkSession, d: String): DataFrame = {
     val z = (0 until 10).map(k =>
         shiftleft(shiftright(col("xa"), k).bitwiseAND(lit(1L)), 2 * k) +
           shiftleft(shiftright(col("xb"), k).bitwiseAND(lit(1L)), 2 * k + 1))
@@ -356,19 +356,11 @@ object Relational {
     * (one 10-iteration rotate/flip loop per row), bit-identical to the
     * unrolled Column-tree formulation it replaced (pinned by
     * `RelationalSpec`'s "native graft_hilbert == unrolled SQL" test). */
-  private def hilbertCoded(s: SparkSession, d: String): DataFrame = {
+  private[operators] def hilbertCoded(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     layoutBinned(s, d).select(col("xa"), col("xb"),
       call_function("graft_hilbert", col("xa"), col("xb"), lit(10)).as("code"))
   }
-
-  /** Spec access to [[hilbertCoded]] (private otherwise). */
-  private[operators] def hilbertCodedForSpec(s: SparkSession, d: String): DataFrame =
-    hilbertCoded(s, d)
-
-  /** Spec access to [[zorderCoded]] / [[layoutBinned]]. */
-  private[operators] def zorderCodedForSpec(s: SparkSession, d: String): DataFrame =
-    zorderCoded(s, d)
 
   /** Materializes a coded frame CLUSTERED by `code` — `files`
     * range-partitions, rows sorted by code within each — and returns the
@@ -420,25 +412,6 @@ object Relational {
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
     }
-
-  /** The pre-r8 unrolled Column-tree Hilbert walk, kept as the spec twin
-    * that pins [[hilbertCoded]]'s native Expression bit-for-bit. */
-  private[operators] def hilbertCodedUnrolled(s: SparkSession, d: String): DataFrame = {
-    var cur = layoutBinned(s, d).select(col("xa"), col("xb"),
-      col("xa").as("hx"), col("xb").as("hy"), lit(0L).as("hd"))
-    (9 to 0 by -1).foreach { k =>
-      val sv = 1L << k
-      val rx = shiftright(col("hx"), k).bitwiseAND(lit(1L))
-      val ry = shiftright(col("hy"), k).bitwiseAND(lit(1L))
-      cur = cur.select(col("xa"), col("xb"),
-        when(ry === 0, when(rx === 1, lit(1023L) - col("hy"))
-          .otherwise(col("hy"))).otherwise(col("hx")).as("hx"),
-        when(ry === 0, when(rx === 1, lit(1023L) - col("hx"))
-          .otherwise(col("hx"))).otherwise(col("hy")).as("hy"),
-        (col("hd") + lit(sv * sv) * (rx * 3).bitwiseXOR(ry)).as("hd"))
-    }
-    cur.select(col("xa"), col("xb"), col("hd").as("code"))
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

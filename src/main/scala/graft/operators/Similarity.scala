@@ -1809,42 +1809,27 @@ object Similarity {
         array_min(darr).as("d2")).as(s"s$m")
     }: _*)
 
-  /** IVF search: coarse quantization by Lloyd's k-means (learned, not the
-    * testdata's labels), then each query probes only its `nProbe` nearest
-    * centroids' inverted lists.
-    *
-    * Every stage is the shape that survives 100 TB:
-    *  - train: Lloyd's runs on a BOUNDED md5-ordered sample (nLists*256
-    *    vectors, ~1 MB) collected to the driver — model training, not a
-    *    data path; cost is independent of corpus size and of `iters`.
-    *    Fixed sample order makes every centroid bit-deterministic —
-    *    floating sums in shuffle order would make recall flap run to run.
-    *  - assign: the (tiny) centroid table rides the plan as a literal and
-    *    each vector maps to its argmax-cosine list in one pass
-    *    ([[TextFns.nearestCentroid]]) — the corpus is scanned once and
-    *    never shuffles for assignment.
-    *  - probe/search: broadcast centroids to rank lists per query, then ONE
-    *    equi-join on the probed list id; only ~nProbe/nLists of the corpus
-    *    is scored per query.
-    * Fixed `iters` Lloyd rounds: k-means converges geometrically; 5 rounds
-    * on a seeded init is the standard IVF build trade-off.
-    * Training has no SQL twin (learned doubles are not ANSI-expressible) —
-    * SimilaritySpec pins recall@k against the exact q50 baseline; the
-    * assignment+search stage IS oracle-checked via the exported centroids. */
-  def ivfTopK(e: DataFrame, numQueries: Int, k: Int, nLists: Int = 8,
-              iters: Int = 5, nProbe: Int = IvfNProbe): DataFrame =
-    ivfAssignTopK(e, trainCentroids(e, nLists, iters), numQueries, k, nProbe)
-
   /** Trained centroids for a sf dir — what Verify exports to parquet for
     * the q52 oracle (training is bit-deterministic, so re-training here
     * reproduces exactly the centroids the q52 query used). */
   def centroidsFor(s: SparkSession, d: String): DataFrame =
     trainCentroids(embs(s, d))
 
-  /** Stage 1 — centroid training (spec-verified, not SQL-expressible): the
-    * learned (cid, cv) coarse-quantizer table, bit-deterministic for a given
-    * corpus. Exported to parquet by Verify so the DuckDB oracle can check
-    * stage 2 (assignment + search) under the exact same centroids. */
+  /** IVF search, stage 1 — centroid training (spec-verified, not
+    * SQL-expressible): coarse quantization by Lloyd's k-means (learned, not
+    * the testdata's labels), the (cid, cv) coarse-quantizer table,
+    * bit-deterministic for a given corpus. Exported to parquet by Verify so
+    * the DuckDB oracle can check stage 2 ([[ivfAssignTopK]]) under the exact
+    * same centroids.
+    *
+    * Lloyd's runs on a BOUNDED md5-ordered sample (nLists*256 vectors,
+    * ~1 MB) collected to the driver — model training, not a data path; cost
+    * is independent of corpus size and of `iters`. Fixed sample order makes
+    * every centroid bit-deterministic — floating sums in shuffle order would
+    * make recall flap run to run. Fixed `iters` Lloyd rounds: k-means
+    * converges geometrically; 5 rounds on a seeded init is the standard IVF
+    * build trade-off. With no SQL twin, SimilaritySpec pins recall@k of
+    * `ivfAssignTopK` over these centroids against the exact q50 baseline. */
   def trainCentroids(e: DataFrame, nLists: Int = 8, iters: Int = 5): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
@@ -1926,10 +1911,19 @@ object Similarity {
   private def nearest(t: CentroidTable, v: Array[Double]): Long =
     NearestCentroid.compute(v, t, SQLConf.get.ansiEnabled).getLong(0)
 
-  /** Stage 2 — assignment + probe + search under FIXED centroids. Fully
-    * deterministic given `cent`, so (unlike training) it has an exact SQL
-    * twin: Verify exports the centroid table to parquet and the q52 oracle
-    * recomputes this whole stage in DuckDB over it. */
+  /** IVF search, stage 2 — assignment + probe + search under FIXED
+    * centroids ([[trainCentroids]]): each query probes only its `nProbe`
+    * nearest centroids' inverted lists.
+    *  - assign: the (tiny) centroid table rides the plan as a literal and
+    *    each vector maps to its argmax-cosine list in one pass
+    *    ([[TextFns.nearestCentroid]]) — the corpus is scanned once and
+    *    never shuffles for assignment.
+    *  - probe/search: broadcast centroids to rank lists per query, then ONE
+    *    equi-join on the probed list id; only ~nProbe/nLists of the corpus
+    *    is scored per query.
+    * Fully deterministic given `cent`, so (unlike training) it has an exact
+    * SQL twin: Verify exports the centroid table to parquet and the q52
+    * oracle recomputes this whole stage in DuckDB over it. */
   def ivfAssignTopK(e: DataFrame, cent: DataFrame, numQueries: Int, k: Int,
                     nProbe: Int = IvfNProbe,
                     listsOpt: Option[DataFrame] = None): DataFrame = {

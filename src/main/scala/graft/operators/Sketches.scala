@@ -66,10 +66,6 @@ object Sketches {
       .select(col("term"), col("n"), col("cms_est"),
         (col("cms_est") === col("n")).as("tight"))
 
-  /** JVM twin of [[cmsBucket]] — identical hash, identical bucket. */
-  def bucketOf(term: String, r: Int): Int =
-    Integer.parseInt(md5hex(s"$r|$term").substring(0, 4), 16) % Width
-
   // ------------------------- Bloom filter --------------------------------
 
   /** Bloom-filter sizing: BloomBits bits (BloomWords int64 words), K seeded
@@ -99,8 +95,8 @@ object Sketches {
     * negatives by construction; false positives at the dialed rate are part
     * of the operator's semantics (and of its oracle — DuckDB rebuilds the
     * identical bit set, so both engines agree exactly, FPs included).
-    * Composable wherever state composes: map-side partials, streaming
-    * state, cross-shard unions. */
+    * Composable wherever state composes: map-side partials, cross-shard
+    * unions. */
   object BloomAggregate extends Aggregator[String, Array[Long], Array[Long]] {
     override def zero: Array[Long] = new Array[Long](BloomWords)
     override def reduce(b: Array[Long], x: String): Array[Long] = {
@@ -124,65 +120,25 @@ object Sketches {
       ExpressionEncoder[Array[Long]]()
   }
 
-  /** JVM membership probe (for specs and driver-side checks). */
-  def bloomContains(words: Array[Long], x: String): Boolean =
-    (0 until BloomHashes).forall { r =>
-      val p = bloomPosOf(x, r)
-      (words(p / 64) >> (p % 64) & 1L) == 1L
-    }
-
   // ---------------------- histogram quantile sketch ----------------------
 
   /** Equi-width histogram resolution for [[q74]]: 256 buckets. At 100 TB
     * the histogram is THE mergeable quantile structure: per-task state is a
     * fixed Array[Long](HistBuckets) regardless of row count, partials merge
-    * by cell-wise add (map-side combine, streaming state, cross-shard
-    * unions), and the quantile answer is read off the cumulative counts
+    * by cell-wise add (map-side combine, cross-shard unions), and the quantile answer is read off the cumulative counts
     * with a guaranteed bucket-width error bound — unlike exact
     * percentile_disc, whose partial-agg state grows with distinct values. */
   val HistBuckets = 256
 
   /** Bucket of a double value within [lo, hi] — floor of the affine map,
     * clamped on BOTH ends: v = hi lands in the last bucket, and values
-    * outside a dialed [lo, hi) (the streaming deployment profiles the
-    * range up front; live data can exceed it) saturate into the edge
-    * buckets instead of crashing the accumulator. The expression shape
+    * outside a dialed [lo, hi) saturate into the edge buckets instead of
+    * crashing the accumulator. The expression shape
     * (((v - lo) / (hi - lo)) * B) is pinned left-to-right so Spark and
     * DuckDB run the identical IEEE-754 op sequence. */
   def histBucket(v: Column, lo: Column, hi: Column): Column =
     greatest(least(floor((v - lo) / (hi - lo) * HistBuckets),
       lit(HistBuckets - 1L)), lit(0L)).cast("long")
-
-  /** JVM twin of [[histBucket]] for the mergeable accumulator. */
-  def histBucketOf(v: Double, lo: Double, hi: Double): Int =
-    math.max(0,
-      math.min(math.floor((v - lo) / (hi - lo) * HistBuckets),
-        (HistBuckets - 1).toDouble).toInt)
-
-  /** The histogram as a MERGEABLE FIXED-SIZE accumulator (same discipline
-    * as [[BloomAggregate]]): HistBuckets int64 cells,
-    * `reduce` increments one, `merge` is cell-wise add. The streaming-safe
-    * quantile state: per-key state-store entries hold HistBuckets cells
-    * forever, independent of stream length. Batch==stream is pinned by
-    * `SketchesSpec`. Range [lo, hi) is fixed at construction — the
-    * streaming deployment dials it from a prior profiling pass. */
-  class HistogramAggregate(lo: Double, hi: Double)
-      extends Aggregator[Double, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = new Array[Long](HistBuckets)
-    override def reduce(b: Array[Long], v: Double): Array[Long] = {
-      b(histBucketOf(v, lo, hi)) += 1L; b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-    override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
-  }
 
   // ------------------------- HyperLogLog ---------------------------------
 
@@ -204,87 +160,14 @@ object Sketches {
   /** Standard HLL bias constant for m = 64 (Flajolet et al. 2007). */
   val HllAlpha64 = 0.709
 
-  /** Register index of an element: first 2 md5 hex chars mod m — uniform
-    * (256 is a multiple of 64) and reproducible digit-for-digit in DuckDB. */
-  def hllIdxOf(x: String): Int =
-    Integer.parseInt(md5hex(x).substring(0, 2), 16) % HllRegisters
-
-  /** rho = position of the first 1-bit in the 48-bit hash tail (1-based),
-    * HllMaxRho when the tail is all zeros. Computed by a HEX-STRING walk —
-    * count leading '0' nibbles, then the zero bits inside the first nonzero
-    * nibble — the same arithmetic both engines run (no float log2, whose
-    * libm rounding is not contractually identical across engines). */
-  def hllRhoOf(x: String): Int = {
-    val tail = md5hex(x).substring(2, 2 + HllTailNibbles)
-    var z = 0
-    while (z < HllTailNibbles && tail.charAt(z) == '0') z += 1
-    if (z == HllTailNibbles) HllMaxRho
-    else {
-      val d = Character.digit(tail.charAt(z), 16)
-      val nibz = if (d == 1) 3 else if (d <= 3) 2 else if (d <= 7) 1 else 0
-      4 * z + nibz + 1
-    }
-  }
-
-  /** The HLL as a MERGEABLE FIXED-SIZE accumulator (the discipline of
-    * [[BloomAggregate]]/[[HistogramAggregate]]): m int64
-    * registers, `reduce` maxes one register, `merge` is element-wise max —
-    * the union law that makes cross-shard / cross-day / streaming distinct
-    * counting composable with bounded state. Registers (not a float
-    * estimate) are the carried state AND the finish value: estimates are
-    * read off with [[hllSumPow]]/[[hllEstimate]], and two sketches union
-    * losslessly (max is idempotent, commutative, associative — the
-    * merge-law spec pins it). */
-  object HllAggregate extends Aggregator[String, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = new Array[Long](HllRegisters)
-    override def reduce(b: Array[Long], x: String): Array[Long] = {
-      val i = hllIdxOf(x)
-      val r = hllRhoOf(x).toLong
-      if (r > b(i)) b(i) = r
-      b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-      a
-    }
-    override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
-  }
-
-  /** Integer harmonic numerator Σ 2^(maxRho − M_j) over all m registers —
-    * exact, order-independent. */
-  def hllSumPow(regs: Seq[Long]): Long =
-    regs.map(m => 1L << (HllMaxRho - m.toInt)).sum
-
-  /** Raw HLL estimate α·m²·2^maxRho / sumPow — one float multiply chain
-    * with pinned order (the 2^49 factor is an exact power-of-two scale). */
-  def hllEstimate(sumPow: Long): Double =
-    HllAlpha64 * (HllRegisters.toDouble * HllRegisters) * HllPowScale / sumPow
-
-  /** Estimate with the standard small-range (linear-counting) correction:
-    * raw ≤ 2.5m with empty registers → m·ln(m/V). JVM-side READER, not a
-    * gated column: ln is not contractually bit-identical across engines,
-    * so the query emits raw_est + the regime inputs (v_zero, sum_pow) and
-    * consumers apply the correction — the same split as q52 (train
-    * spec-side, assign oracle-side). */
-  def hllCorrected(sumPow: Long, vZero: Long): Double = {
-    val raw = hllEstimate(sumPow)
-    if (raw <= 2.5 * HllRegisters && vZero > 0)
-      HllRegisters * math.log(HllRegisters.toDouble / vZero)
-    else raw
-  }
-
   /** Percentiles the q74 exhibit reads off the histogram. */
   val HistPercentiles: Seq[Int] = Seq(25, 50, 75, 90, 99)
 
   private def t(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
   /** (keys..., idx, m) HLL register table over a `term` column — the
-    * column-expression twin of [[HllAggregate]]'s reduce, shared by
+    * column-expression form of the JVM `HllAggregate` reduce SketchesSpec
+    * checks it against, shared by
     * q107/q109: md5 → first-2-hex register index, leading-zero nibble walk
     * → rho, max per (keys, idx). One hash agg with map-side partials. */
   private def hllRegs(tk: DataFrame, keyCols: Seq[String]): DataFrame =
@@ -482,8 +365,7 @@ object Sketches {
     // q74 profiles ONE distribution; real profiling is per key (per
     // event type / per source / per feature). Same structure, one extra
     // grouping column everywhere: per-group exact profile agg, per-group
-    // bucket agg (state per task = groups × 256 cells, the per-key
-    // mergeable shape `HistogramAggregate` carries into streaming), and
+    // bucket agg (state per task = groups × 256 cells), and
     // the read-off stays ≤ groups × 256 rows. Per-group ranges keep each
     // histogram's resolution matched to its own spread. Degenerate groups
     // (all values equal → lo == hi) are excluded up front: the affine
@@ -540,8 +422,8 @@ object Sketches {
     // --- HLL distinct-count sketch per source ------------------------------
     // Cross-shard distinct counting with bounded state: per-source vocabulary
     // cardinality via 64 HLL registers. This is the COLUMN-EXPRESSION twin of
-    // [[HllAggregate]] (SketchesSpec pins register-level agreement + the
-    // merge law): register index/rho come from the engine-portable md5 hex
+    // the spec-side JVM `HllAggregate` (SketchesSpec pins register-level
+    // agreement, SketchLawsSpec the merge law): register index/rho come from the engine-portable md5 hex
     // walk, the per-(source, register) max is one hash agg with map-side
     // partials, and everything downstream is sources×64 rows. The register
     // harmonic sum stays the exact int64 Σ 2^(49−M) — no float accumulation
@@ -571,7 +453,7 @@ object Sketches {
         .select(col("source"), col("n_exact"), col("v_zero"), col("sum_pow"),
           col("raw_est"),
           // raw HLL is known-biased below ~2.5m (that regime belongs to the
-          // linear-counting correction, applied reader-side — hllCorrected);
+          // linear-counting correction, applied reader-side);
           // the flag only judges the estimator inside its own regime
           (col("raw_est") <= lit(2.5 * HllRegisters) ||
             abs(col("raw_est") - col("n_exact").cast("double")) <=

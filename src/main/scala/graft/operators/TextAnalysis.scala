@@ -296,10 +296,6 @@ object TextAnalysis {
         .agg(count(lit(1)).as("cnt"))
         .pin(false))
 
-  /** Spec hook: drop the session's memoized ladder so a re-run exercises
-    * the store-replay path (simulating a new session on a warm store). */
-  private[graft] def evictBpeCache(s: SparkSession): Unit = bpeCache.evict(s)
-
   /** (top pair per round 1..R, seq frames for stages 0..R), memoized.
     *
     * Store-backed ([[graft.ModelStore]]): the merge table IS the trained

@@ -139,15 +139,13 @@ object TextFns {
   def seededMd5(seed: Int, c: Column): Column =
     md5(concat(lit(s"$seed|"), c))
 
-  /** MinHash signature element `seed` over a shingle array: the
-    * lexicographically smallest seeded md5 across shingles. */
-  def minhash(sh: Column, seed: Int): Column =
-    array_min(transform(sh, x => seededMd5(seed, x)))
-
   /** Full MinHash signature (seeds seedBase until seedBase+numHashes) in ONE
     * pass over the shingle array via the native
-    * [[graft.functions.MinHashSignature]] expression — value-identical to
-    * `numHashes` [[minhash]] columns, ~numHashes× less array traversal.
+    * [[graft.functions.MinHashSignature]] expression. Element i is the
+    * lexicographically smallest seeded md5 (`seededMd5(seedBase + i, _)`)
+    * across shingles, null for an empty array — value-identical to
+    * `numHashes` `array_min(transform(sh, …))` columns
+    * (MinHashSignatureSpec), ~numHashes× less array traversal.
     * Requires [[graft.functions.GraftFunctions]] registered on the session. */
   def minhashSig(sh: Column, numHashes: Int, seedBase: Int): Column =
     call_function("graft_minhash_sig", sh, lit(numHashes), lit(seedBase))

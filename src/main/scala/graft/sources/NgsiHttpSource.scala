@@ -73,7 +73,9 @@ import graft.ngsi.NgsiJson.esc
   *    commit it: the hard bound is the cap + two payloads, and an oversized
   *    notification can never be starved by smaller traffic); at or over
   *    the cap the source answers 429 + Retry-After instead of acking —
-  *    nothing is buffered or captured for a refused post. No ACKED event
+  *    nothing is buffered or captured for a refused post. One body is
+  *    read up to [[NgsiHttpSource.MaxBodyBytes]] (8 MiB); a longer one
+  *    gets 413, also unbuffered and uncaptured. No ACKED event
   *    is ever dropped (NgsiHttpSourceSpec pins the ceiling, the 429s,
   *    the drain-then-recover cycle, and exactly-once delivery of every
   *    acked post), but whether a REFUSED post comes back depends on the
@@ -148,6 +150,14 @@ object NgsiHttpSource {
     * minutes of a stalled consumer at full ingest rate, far beyond any
     * micro-batch hiccup. */
   val MaxBufferBytes: Long = 512L << 20
+
+  /** Largest request body the accept path reads: 8 MiB, at least Orion's
+    * default `-outReqMsgMaxSize` (8 MB), so no notification a
+    * default-configured broker sends is refused. A longer body gets 413
+    * after this many bytes + 1 are read, and is neither buffered nor
+    * captured: one huge or endless POST cannot fill driver heap before
+    * the ring's [[MaxBufferBytes]] admission check runs. */
+  val MaxBodyBytes: Int = 8 << 20
 
   /** Per-partition byte budget when planning the LIVE ring slice: a
     * drain-the-ring batch (recovery after a stall) can hold up to
@@ -382,9 +392,11 @@ private[sources] class NgsiHttpMicroBatchStream(
   private def handle(exchange: HttpExchange): Unit = {
     try {
       if (exchange.getRequestMethod.equalsIgnoreCase("POST")) {
-        val body = new String(exchange.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
-        if (!isJson(body)) {
+        val bytes = exchange.getRequestBody.readNBytes(NgsiHttpSource.MaxBodyBytes + 1)
+        lazy val body = new String(bytes, StandardCharsets.UTF_8)
+        if (bytes.length > NgsiHttpSource.MaxBodyBytes) {
+          exchange.sendResponseHeaders(413, -1)
+        } else if (!isJson(body)) {
           exchange.sendResponseHeaders(400, -1)
         } else {
           val h = exchange.getRequestHeaders

@@ -123,19 +123,19 @@ class ModelStoreSpec extends SparkSpec {
 
   test("BPE ladder: store replay equals discovery training, and skips it") {
     withStore { tmp =>
+      // the ladder memo is per session, so each new session misses it and
+      // leaves the shared session's memo as it was
       val q = operators.TextAnalysis.queries("q178_bpe_merges")
-      val first = q(spark, sfDir).collect().map(_.toString).sorted
+      val first = q(spark.newSession(), sfDir).collect().map(_.toString).sorted
       assert(new java.io.File(s"$tmp/bpe_merges").listFiles().nonEmpty,
         "merge table not persisted")
-      // simulate a fresh session on a warm store: drop the JVM memo, rerun
-      operators.TextAnalysis.evictBpeCache(spark)
+      // a fresh session on a warm store replays the ladder from the store
       val loadsBefore = ModelStore.loads.get()
       val trainsBefore = ModelStore.trains.get()
-      val second = q(spark, sfDir).collect().map(_.toString).sorted
+      val second = q(spark.newSession(), sfDir).collect().map(_.toString).sorted
       assert(ModelStore.loads.get() > loadsBefore, "expected a store hit")
       assert(ModelStore.trains.get() == trainsBefore, "must not re-discover merges")
       assert(first.toSeq == second.toSeq)
-      operators.TextAnalysis.evictBpeCache(spark)
     }
   }
 

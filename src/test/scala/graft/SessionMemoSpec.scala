@@ -15,26 +15,33 @@ class SessionMemoSpec extends SparkSpec {
     val a = frame()
     val b = frame()
     assert(computes == 1 && (a eq b))
-    memo.getOrCompute(spark, "dirB")(Seq(9L).toDF("v").localCheckpoint(false))
-    assert(memo.size == 2)
+    var computesB = 0
+    def frameB() = memo.getOrCompute(spark, "dirB") {
+      computesB += 1
+      Seq(9L).toDF("v").localCheckpoint(false)
+    }
+    frameB()
+    assert(computes == 1 && computesB == 1, "one entry per dir")
 
     memo.evict(spark)
-    assert(memo.size == 0)
     frame()
-    assert(computes == 2, "post-evict access must recompute")
+    frameB()
+    assert(computes == 2 && computesB == 2, "post-evict access must recompute every dir")
     // the recomputed frame still answers correctly
     assert(frame().agg(sum(col("v"))).head().getLong(0) == 6L)
   }
 
   test("multi-frame values unpersist through framesOf") {
     import spark.implicits._
-    val memo = new SessionMemo[Seq[org.apache.spark.sql.DataFrame]](identity)
+    var released = Seq.empty[org.apache.spark.sql.DataFrame]
+    val memo = new SessionMemo[Seq[org.apache.spark.sql.DataFrame]](v => { released = v; v })
     val v = memo.getOrCompute(spark, "x") {
       Seq(Seq(1L).toDF("v").localCheckpoint(false),
         Seq(2L).toDF("v").localCheckpoint(false))
     }
-    assert(v.length == 2 && memo.size == 1)
+    assert(v.length == 2 && released.isEmpty)
     memo.evict(spark)
-    assert(memo.size == 0)
+    assert(released.length == 2 && released.zip(v).forall { case (r, f) => r eq f },
+      "evict must release every frame of the value")
   }
 }

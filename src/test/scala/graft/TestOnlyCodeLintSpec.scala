@@ -35,21 +35,7 @@ class TestOnlyCodeLintSpec extends AnyFunSuite {
     "joinSensorStreams" -> "NgsiStreams' watermarked stream-stream join (SURVEY §2B)",
     "OrionSubscriptionClient" ->
       "the reference's curl_SubscribeToEntityNotifications.sh step",
-    "GraftExtensions" -> "loaded by name through spark.sql.extensions",
-    "hilbertCodedForSpec" -> "Relational: spec accessor to the private Hilbert coding",
-    "zorderCodedForSpec" -> "Relational: spec accessor to the private Z-order coding",
-    "hilbertCodedUnrolled" ->
-      "Relational: reference implementation the native graft_hilbert is compared against",
-    "bucketOf" -> "Sketches: JVM CMS bucket twin SketchesSpec checks the CMS cells against",
-    "HllAggregate" -> "Sketches: JVM HLL twin SketchesSpec checks q107 against",
-    "HistogramAggregate" -> "Sketches: JVM histogram twin SketchesSpec checks q74 against",
-    "bloomContains" -> "Sketches: documented JVM membership probe for specs",
-    "hllSumPow" -> "Sketches: JVM reader of the HLL registers, checked by SketchesSpec",
-    "hllCorrected" -> "Sketches: documented JVM-side small-range correction reader",
-    "ivfTopK" -> "Similarity: documented IVF build whose recall SimilaritySpec pins",
-    "containmentFromShingles" -> "Dedup: documented frame-parameterized q78 for the skew specs",
-    "evictBpeCache" -> "TextAnalysis: documented spec hook for the store-replay path",
-    "minhash" -> "TextFns: Column MinHash the native signature specs compare against")
+    "GraftExtensions" -> "loaded by name through spark.sql.extensions")
 
   private def scalaFiles(root: Path): Seq[Path] = {
     assert(Files.isDirectory(root), s"run from the project root: no $root")

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,8 +17,11 @@ class MinHashSignatureSpec extends SparkSpec {
     ).toDF("sh")
     val native = df.select(TextFns.minhashSig(col("sh"), 8, 0).as("sig"))
       .as[Seq[String]].collect()
+    // element `seed`: the lexicographically smallest seeded md5 across shingles
+    def minhash(sh: Column, seed: Int): Column =
+      array_min(transform(sh, x => TextFns.seededMd5(seed, x)))
     val columnar = df.select(
-      array((0 until 8).map(i => TextFns.minhash(col("sh"), i)): _*).as("sig"))
+      array((0 until 8).map(i => minhash(col("sh"), i)): _*).as("sig"))
       .as[Seq[String]].collect()
     assert(native.toSeq == columnar.toSeq)
     // empty shingle array -> all-null elements, same as array_min

@@ -48,9 +48,9 @@ class ClusteredLayoutSpec extends SparkSpec {
   test("curve-clustered parquet skips files under 2-D range predicates; lex layout cannot") {
     val root = java.nio.file.Files.createTempDirectory("graft-clustered").toString
     try {
-      val binned = Relational.hilbertCodedForSpec(spark, sfDir)
+      val binned = Relational.hilbertCoded(spark, sfDir)
         .withColumnRenamed("code", "hcode")
-        .join(Relational.zorderCodedForSpec(spark, sfDir)
+        .join(Relational.zorderCoded(spark, sfDir)
             .groupBy("xa", "xb").agg(first("code").as("zcode")),
           Seq("xa", "xb"))
         .select("xa", "xb", "hcode", "zcode")

@@ -29,11 +29,11 @@ class DedupSpec extends SparkSpec {
 
   test("minhash-LSH candidates include the near-dup pair, exclude unrelated") {
     val sh = docsDf.select(col("doc_id"), shingles(toks(col("text")), 3).as("sh"))
-    val sig = sh.select(col("doc_id") +:
-      (0 until 8).map(i => minhash(col("sh"), i).as(s"mh$i")): _*)
+    val sig = sh.select(col("doc_id"), minhashSig(col("sh"), 8, 0).as("mh"))
     val banded = sig.select(col("doc_id"),
       explode(array((0 until 4).map(j =>
-        md5(concat(col(s"mh${2 * j}"), col(s"mh${2 * j + 1}")))): _*)).as("k"))
+        md5(concat(element_at(col("mh"), 2 * j + 1), element_at(col("mh"), 2 * j + 2)))): _*))
+        .as("k"))
     val cand = banded.as("x").join(banded.as("y"),
         col("x.k") === col("y.k") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j")).distinct()
@@ -614,7 +614,12 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty, "testdata should contain simhash near-dups")
   }
 
-  test("q133: estimator audit matches a JVM minhash+jaccard recompute") {
+  /** Independent JVM recompute of the pre-verify LSH candidates the
+    * minhash audits (q133, q220) read: trigram shingles, 8-seed minhash
+    * (lexicographic min of md5("<seed>|<shingle>")) and banded candidate
+    * pairs — (shingles, signatures, candidates). */
+  private def jvmMinhashCandidates()
+      : (Map[Long, Vector[String]], Map[Long, Vector[String]], Set[(Long, Long)]) = {
     import graft.operators.{Dedup => D}
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
@@ -622,9 +627,6 @@ class DedupSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1))
-    // Independent recompute of the whole audit: trigram shingles, 8-seed
-    // minhash (lexicographic min of md5("<seed>|<shingle>")), banded
-    // candidates, positional agreement, exact Jaccard.
     val sh = docs.map { case (id, t) =>
       val tk = t.split(" ", -1)
       id -> (if (tk.length >= 3) tk.sliding(3).map(_.mkString(" ")).toVector
@@ -642,6 +644,14 @@ class DedupSpec extends SparkSpec {
       .groupBy(_._1).values.map(_.map(_._2).sorted)
     val cand = byBand.flatMap(ids =>
       for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+    (sh, sig, cand)
+  }
+
+  test("q133: estimator audit matches a JVM minhash+jaccard recompute") {
+    import graft.operators.{Dedup => D}
+    // Independent recompute of the whole audit: the candidates, then
+    // positional agreement and exact Jaccard.
+    val (sh, sig, cand) = jvmMinhashCandidates()
     val expected = cand.map { case (i, j) =>
       val nAgree = (0 until D.NumHashes).count(p => sig(i)(p) == sig(j)(p))
       val (a, b) = (sh(i).toSet, sh(j).toSet)
@@ -669,31 +679,9 @@ class DedupSpec extends SparkSpec {
 
   test("q220: 1-bit minhash audit matches a JVM parity recompute") {
     import graft.operators.{Dedup => D}
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1))
-    val sh = docs.map { case (id, t) =>
-      val tk = t.split(" ", -1)
-      id -> (if (tk.length >= 3) tk.sliding(3).map(_.mkString(" ")).toVector
-             else Vector.empty[String])
-    }.toMap
-    val sig = sh.collect { case (id, ss) if ss.nonEmpty =>
-      id -> (0 until D.NumHashes).map(seed =>
-        ss.iterator.map(x => md5hex(s"$seed|$x")).min).toVector
-    }
+    val (sh, sig, cand) = jvmMinhashCandidates()
     def bits(sg: Vector[String]): Vector[Int] =
       sg.map(m => Integer.parseInt(m.substring(31), 16) % 2)
-    val byBand = sig.toSeq
-      .flatMap { case (id, sg) =>
-        (0 until D.NumBands).map(j =>
-          (j, sg(j * D.BandSize) + sg(j * D.BandSize + 1)) -> id)
-      }
-      .groupBy(_._1).values.map(_.map(_._2).sorted)
-    val cand = byBand.flatMap(ids =>
-      for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
     val expected = cand.map { case (i, j) =>
       val a = (0 until D.NumHashes)
         .count(p => bits(sig(i))(p) == bits(sig(j))(p))

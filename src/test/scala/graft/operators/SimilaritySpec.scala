@@ -5,6 +5,24 @@ import graft.SparkSpec
 
 class SimilaritySpec extends SparkSpec {
 
+  // JVM recompute kernels, summed in index order like the Spark side.
+  private def cos(a: Array[Double], b: Array[Double], dim: Int): Double = {
+    var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < dim) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    d / (math.sqrt(na) * math.sqrt(nb))
+  }
+  private def cos(a: Array[Double], b: Array[Double]): Double = cos(a, b, a.length)
+  private def l2(a: Array[Double], b: Array[Double]): Double =
+    (0 until a.length).map { i => val x = a(i) - b(i); x * x }.sum
+  /** Squared L2 distance of subvector `m` of `v` to codebook row `c`. */
+  private def subD2(v: Array[Double], m: Int, c: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < c.length) {
+      val d = v(m * Similarity.PqSubDim + i) - c(i); s += d * d; i += 1
+    }
+    s
+  }
+
   test("q221: PCA model is orthonormal with descending eigenvalues; " +
       "projections exact; component variance equals the eigenvalue") {
     val e = Similarity.embs(spark, sfDir)
@@ -166,13 +184,6 @@ class SimilaritySpec extends SparkSpec {
     assert(enc.forall(e => e._3 >= 0 && e._3 < Similarity.PqK))
 
     // JVM twin of the fixed-order subspace fold
-    def subD2(v: Array[Double], m: Int, c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) {
-        val d = v(m * Similarity.PqSubDim + i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
     def codeOf(v: Array[Double], m: Int): Int =
       (0 until Similarity.PqK).minBy(j => (subD2(v, m, cb(m)(j)), j))
     // q115 codes and distances equal the JVM argmin recompute exactly
@@ -215,18 +226,6 @@ class SimilaritySpec extends SparkSpec {
     val cent = Similarity.trainCentroids(
         embFrame.select(col("vec_id"), col("v"))).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def subD2(v: Array[Double], m: Int, c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) {
-        val d = v(m * Similarity.PqSubDim + i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
     def codeOf(v: Array[Double], m: Int): Int =
       (0 until Similarity.PqK).minBy(j => (subD2(v, m, cb(m)(j)), j))
     def listOf(v: Array[Double]): Long =
@@ -267,18 +266,6 @@ class SimilaritySpec extends SparkSpec {
         embFrame.select(col("vec_id"), col("v"))).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val centById = cent.toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def subD2(v: Array[Double], m: Int, c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) {
-        val d = v(m * Similarity.PqSubDim + i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
     def listOf(v: Array[Double]): Long =
       cent.map { case (cid, cv) => (cos(v, cv), cid) }
         .reduceLeft((x, y) => if (y._1 > x._1 || (y._1 == x._1 && y._2 < x._2)) y else x)._2
@@ -334,11 +321,6 @@ class SimilaritySpec extends SparkSpec {
   test("q142: matryoshka recall equals a JVM prefix-truncation recompute") {
     val vecs = embFrame.collect()
       .map(r => (r.getLong(0), r.getSeq[Double](2).toArray))
-    def cos(a: Array[Double], b: Array[Double], dim: Int): Double = {
-      var s = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < dim) { s += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      s / (math.sqrt(na) * math.sqrt(nb))
-    }
     def topk(qid: Long, qv: Array[Double], dim: Int): Set[Long] =
       vecs.filter(_._1 != qid)
         .map { case (id, v) => (id, cos(qv, v, dim)) }
@@ -403,20 +385,6 @@ class SimilaritySpec extends SparkSpec {
         embFrame.select(col("vec_id"), col("v"))).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val centById = cent.toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      s / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def l2(a: Array[Double], b: Array[Double]): Double =
-      (0 until a.length).map { i => val x = a(i) - b(i); x * x }.sum
-    def subD2(v: Array[Double], m: Int, c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) {
-        val d = v(m * Similarity.PqSubDim + i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
     def listOf(v: Array[Double]): Long =
       cent.map { case (cid, cv) => (cos(v, cv), cid) }
         .reduceLeft((x, y) => if (y._1 > x._1 || (y._1 == x._1 && y._2 < x._2)) y else x)._2
@@ -471,13 +439,6 @@ class SimilaritySpec extends SparkSpec {
     val vById = vecs.toMap
     val cent = Similarity.trainCentroids(emb01).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      s / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def l2(a: Array[Double], b: Array[Double]): Double =
-      (0 until a.length).map { i => val x = a(i) - b(i); x * x }.sum
     def listOf(v: Array[Double]): Long =
       cent.map { case (cid, cv) => (cos(v, cv), cid) }
         .reduceLeft((x, y) => if (y._1 > x._1 || (y._1 == x._1 && y._2 < x._2)) y else x)._2
@@ -553,13 +514,6 @@ class SimilaritySpec extends SparkSpec {
         while (i < n) { s += rot(o)(i) * v(i); i += 1 }
         s
       }
-    def subD2(v: Array[Double], m: Int, c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) {
-        val d = v(m * Similarity.PqSubDim + i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
     val out = Similarity.queries("q138_opq_encode")(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     out.foreach { case (id, m, code, d2) =>
@@ -589,11 +543,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out.nonEmpty && out.forall { case (_, ql, _, _, nl, _) => ql != nl })
     val vecs = embFrame.collect()
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue, r.getSeq[Double](2).toArray))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
     val byQuery = out.groupBy(_._1)
     vecs.filter(_._1 < Similarity.NumQueries).foreach { case (qid, qlabel, qv) =>
       val expected = vecs.filter(_._2 != qlabel)
@@ -609,7 +558,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfTopK at nProbe=1 probes one list and returns ranked neighbors from it") {
-    val out = Similarity.ivfTopK(embFrame, numQueries = 5, k = 3, nProbe = 1).collect()
+    val out = Similarity.ivfAssignTopK(embFrame, Similarity.trainCentroids(embFrame),
+      numQueries = 5, k = 3, nProbe = 1).collect()
     val byQuery = out.groupBy(_.getLong(0))
     assert(byQuery.nonEmpty)
     byQuery.foreach { case (q, rows) =>
@@ -647,8 +597,9 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     def recallAt(nProbe: Int): Double = {
-      val ivf = Similarity.ivfTopK(embFrame, Similarity.NumQueries, Similarity.TopK,
-          nLists = 8, iters = 5, nProbe = nProbe)
+      val ivf = Similarity.ivfAssignTopK(embFrame,
+          Similarity.trainCentroids(embFrame, nLists = 8, iters = 5),
+          Similarity.NumQueries, Similarity.TopK, nProbe = nProbe)
         .collect().map(r => (r.getLong(0), r.getLong(2)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       val per = brute.keys.toSeq.map { q =>
@@ -669,17 +620,11 @@ class SimilaritySpec extends SparkSpec {
     // the property JL actually guarantees (and all a projection CAN
     // guarantee on near-isotropic data — see the q82 scaladoc): projected
     // cosines track exact cosines within a distortion that falls ~1/sqrt(d)
-    import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
     val vecs = graft.Tables.load(spark, sfDir, "embeddings")
       .select(col("embedding").cast("array<double>")).as[Array[Double]]
       .collect()
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
     def proj(v: Array[Double], dim: Int): Array[Double] =
       Array.tabulate(dim)(o => Similarity.jlPlanes(o).zip(v).map(p => p._1 * p._2).sum)
     val pairs = (0 until 500 by 7).flatMap(i => (3 until 500 by 31).map(j => (i, j)))
@@ -713,11 +658,6 @@ class SimilaritySpec extends SparkSpec {
         }
         if (d >= 0) 1 << b else 0
       }.sum
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      def dot(x: Array[Double], y: Array[Double]) =
-        x.zip(y).foldLeft(0.0) { case (acc, (p, q)) => acc + p * q }
-      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
-    }
     val bench = vecs.filter(_._2 == 0)
     val expected = vecs.filter(_._2 != 0).map { case (id, _, v) =>
       id -> bench.exists { case (_, _, bv) =>

@@ -38,23 +38,23 @@ object SketchLawsSpec extends Properties("SketchAggregates") {
   // --- HLL ----------------------------------------------------------------
 
   private def hllFold(xs: List[String]) =
-    xs.foldLeft(Sketches.HllAggregate.zero)(Sketches.HllAggregate.reduce)
+    xs.foldLeft(SketchTwins.HllAggregate.zero)(SketchTwins.HllAggregate.reduce)
 
   property("hll: any partition split = sequential fold") =
     Prop.forAll(terms, Gen.chooseNum(0, 100)) { (xs, cut) =>
       val k = cut % (xs.size + 1)
       val (l, r) = xs.splitAt(k)
-      Sketches.HllAggregate.merge(hllFold(l), hllFold(r))
+      SketchTwins.HllAggregate.merge(hllFold(l), hllFold(r))
         .sameElements(hllFold(xs))
     }
 
   property("hll: merge is idempotent, commutative, zero is identity") =
     Prop.forAll(terms, terms) { (x, y) =>
-      Sketches.HllAggregate.merge(hllFold(x), hllFold(x))
+      SketchTwins.HllAggregate.merge(hllFold(x), hllFold(x))
         .sameElements(hllFold(x)) &&
-      Sketches.HllAggregate.merge(hllFold(x), hllFold(y))
-        .sameElements(Sketches.HllAggregate.merge(hllFold(y), hllFold(x))) &&
-      Sketches.HllAggregate.merge(hllFold(x), Sketches.HllAggregate.zero)
+      SketchTwins.HllAggregate.merge(hllFold(x), hllFold(y))
+        .sameElements(SketchTwins.HllAggregate.merge(hllFold(y), hllFold(x))) &&
+      SketchTwins.HllAggregate.merge(hllFold(x), SketchTwins.HllAggregate.zero)
         .sameElements(hllFold(x))
     }
 
@@ -66,7 +66,7 @@ object SketchLawsSpec extends Properties("SketchAggregates") {
 
   // --- Histogram ----------------------------------------------------------
 
-  private val hist = new Sketches.HistogramAggregate(0.0, 100.0)
+  private val hist = new SketchTwins.HistogramAggregate(0.0, 100.0)
 
   private def histFold(xs: List[Double]) =
     xs.foldLeft(hist.zero)(hist.reduce)

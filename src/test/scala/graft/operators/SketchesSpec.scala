@@ -74,7 +74,7 @@ class SketchesSpec extends SparkSpec {
       .groupBy(identity).map { case (k, v) => (k, v.length.toLong) }
     val bsum = Array.ofDim[Long](Sketches.Depth, Sketches.Width)
     counts.foreach { case (k, n) =>
-      (0 until Sketches.Depth).foreach(r => bsum(r)(Sketches.bucketOf(k, r)) += n)
+      (0 until Sketches.Depth).foreach(r => bsum(r)(SketchTwins.bucketOf(k, r)) += n)
     }
     val rowEst = (0 until Sketches.Depth)
       .map(r => bsum(r).map(b => b * b).sum)
@@ -132,7 +132,7 @@ class SketchesSpec extends SparkSpec {
       Sketches.BloomAggregate.reduce)
     assert(onePass.length == Sketches.BloomWords)
     // THE bloom property: every inserted element tests positive
-    inserted.foreach(x => assert(Sketches.bloomContains(onePass, x)))
+    inserted.foreach(x => assert(SketchTwins.bloomContains(onePass, x)))
     // chunked reduce + word-wise OR merge == one-pass (partial-agg law)
     val merged = inserted.grouped(97)
       .map(c => c.foldLeft(Sketches.BloomAggregate.zero)(Sketches.BloomAggregate.reduce))
@@ -141,13 +141,13 @@ class SketchesSpec extends SparkSpec {
     // at 500 elements x 4 hashes in 4096 bits, absent keys mostly miss —
     // and any that hit are exactly the dialed FP behavior, not corruption
     val absentHits = (0 until 500)
-      .count(i => Sketches.bloomContains(onePass, s"unseen $i"))
+      .count(i => SketchTwins.bloomContains(onePass, s"unseen $i"))
     assert(absentHits < 250, s"FP rate implausible: $absentHits/500")
   }
 
   test("histogram aggregate: merge law, fixed size, matches the q74 bucket agg") {
     val lo = 0.0; val hi = 100.0
-    val agg = new Sketches.HistogramAggregate(lo, hi)
+    val agg = new SketchTwins.HistogramAggregate(lo, hi)
     val values = (0 until 5000).map(i => (i * 37 % 9973) / 99.73)
     val onePass = values.foldLeft(agg.zero)(agg.reduce)
     assert(onePass.length == Sketches.HistBuckets)
@@ -170,7 +170,7 @@ class SketchesSpec extends SparkSpec {
   test("histogram saturates out-of-range values into edge buckets") {
     // the streaming deployment dials [lo, hi) from a profiling pass; live
     // data outside the dialed range must degrade, never crash
-    val agg = new Sketches.HistogramAggregate(0.0, 10.0)
+    val agg = new SketchTwins.HistogramAggregate(0.0, 10.0)
     val cells = List(-5.0, -0.001, 0.0, 9.99, 10.0, 1e9)
       .foldLeft(agg.zero)(agg.reduce)
     assert(cells(0) == 3L, "below-range + exact-lo land in bucket 0")
@@ -222,7 +222,7 @@ class SketchesSpec extends SparkSpec {
     val values = graft.Tables.load(s, sfDir, "events")
       .select(col("value")).as[Double].collect()
     val lo = values.min; val hi = values.max
-    val agg = new Sketches.HistogramAggregate(lo, hi)
+    val agg = new SketchTwins.HistogramAggregate(lo, hi)
     val batchCells = values.foldLeft(agg.zero)(agg.reduce)
 
     val mem = MemoryStream[Double]
@@ -251,7 +251,7 @@ class SketchesSpec extends SparkSpec {
       .select(col("event_type"), col("value"))
       .as[(String, Double)].collect()
     // fixed dialed range (the streaming deployment's profiling-pass output)
-    val agg = new Sketches.HistogramAggregate(0.0, 500.0)
+    val agg = new SketchTwins.HistogramAggregate(0.0, 500.0)
     val batchCells: Map[String, Array[Long]] = rows.groupBy(_._1)
       .map { case (k, vs) => k -> vs.map(_._2).foldLeft(agg.zero)(agg.reduce) }
 
@@ -284,7 +284,7 @@ class SketchesSpec extends SparkSpec {
       .select(col("source"), explode(split(col("text"), " ")).as("term"))
       .distinct()
     val typed: Map[String, Array[Long]] = tk.groupBy(col("source"))
-      .agg(udaf(Sketches.HllAggregate, org.apache.spark.sql.Encoders.STRING)(
+      .agg(udaf(SketchTwins.HllAggregate, org.apache.spark.sql.Encoders.STRING)(
         col("term")).as("regs"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
     val fromQuery = Sketches.queries("q107_hll_distinct")(spark, sfDir)
@@ -295,15 +295,15 @@ class SketchesSpec extends SparkSpec {
     typed.foreach { case (src, regs) =>
       val (nExact, vZero, sumPow, rawEst, estOk) = fromQuery(src)
       assert(regs.count(_ == 0L) == vZero, s"$src zero-register mismatch")
-      assert(Sketches.hllSumPow(regs.toIndexedSeq) == sumPow,
+      assert(SketchTwins.hllSumPow(regs.toIndexedSeq) == sumPow,
         s"$src harmonic-sum mismatch")
-      assert(Sketches.hllEstimate(sumPow) == rawEst, s"$src estimate mismatch")
+      assert(SketchTwins.hllEstimate(sumPow) == rawEst, s"$src estimate mismatch")
       // gated flag agrees with a JVM recompute of the same expression
       assert(estOk == (rawEst <= 2.5 * Sketches.HllRegisters ||
         math.abs(rawEst - nExact) <= 0.4 * nExact))
       // estimate quality: the CORRECTED estimate (linear counting in the
       // small range — the reader-side rule) is within 40% on every source
-      val corrected = Sketches.hllCorrected(sumPow, vZero)
+      val corrected = SketchTwins.hllCorrected(sumPow, vZero)
       assert(math.abs(corrected - nExact) <= 0.4 * nExact,
         s"$src corrected estimate $corrected too far from exact $nExact")
     }
@@ -335,14 +335,14 @@ class SketchesSpec extends SparkSpec {
       assert(nExact == union.size.toLong, s"day $day exact-audit mismatch")
       // direct sketch of the union set == the query's rolled registers
       val regs = union.toSeq.sorted
-        .foldLeft(Sketches.HllAggregate.zero)(Sketches.HllAggregate.reduce)
+        .foldLeft(SketchTwins.HllAggregate.zero)(SketchTwins.HllAggregate.reduce)
       assert(regs.count(_ == 0L).toLong == vZero, s"day $day v_zero")
-      assert(Sketches.hllSumPow(regs.toIndexedSeq) == sumPow, s"day $day sum_pow")
-      assert(Sketches.hllEstimate(sumPow) == rawEst, s"day $day raw_est")
+      assert(SketchTwins.hllSumPow(regs.toIndexedSeq) == sumPow, s"day $day sum_pow")
+      assert(SketchTwins.hllEstimate(sumPow) == rawEst, s"day $day raw_est")
       assert(estOk == (rawEst <= 2.5 * Sketches.HllRegisters ||
         math.abs(rawEst - nExact) <= 0.4 * nExact))
       // reader-side corrected estimate stays inside the 40% audit band
-      val corrected = Sketches.hllCorrected(sumPow, vZero)
+      val corrected = SketchTwins.hllCorrected(sumPow, vZero)
       assert(math.abs(corrected - nExact) <= 0.4 * nExact,
         s"day $day corrected $corrected vs exact $nExact")
     }
@@ -356,13 +356,13 @@ class SketchesSpec extends SparkSpec {
     val rows = (0 until 300).map(i => (s"src${i % 3}", s"tok${i % 87}"))
     val batch: Map[String, Array[Long]] = rows.groupBy(_._1)
       .map { case (k, vs) =>
-        k -> vs.map(_._2).foldLeft(Sketches.HllAggregate.zero)(
-          Sketches.HllAggregate.reduce)
+        k -> vs.map(_._2).foldLeft(SketchTwins.HllAggregate.zero)(
+          SketchTwins.HllAggregate.reduce)
       }
     val mem = MemoryStream[(String, String)]
     val q = mem.toDS().toDF("source", "term")
       .groupBy(col("source"))
-      .agg(udaf(Sketches.HllAggregate, org.apache.spark.sql.Encoders.STRING)(
+      .agg(udaf(SketchTwins.HllAggregate, org.apache.spark.sql.Encoders.STRING)(
         col("term")).as("regs"))
       .writeStream.format("memory").queryName("hll_stream")
       .outputMode("complete").start()

@@ -34,8 +34,8 @@ class TextFnsSpec extends SparkSpec {
       (2L, Seq("b c d", "a b c")), // same set, different order
       (3L, Seq("x y z", "y z w"))
     ).toDF("id", "sh")
-      .select(col("id"), minhash(col("sh"), 0).as("m0"), minhash(col("sh"), 1).as("m1"))
-    val rows = df.collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+      .select(col("id"), minhashSig(col("sh"), 2, 0).as("m"))
+    val rows = df.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(rows(1L) == rows(2L))
     assert(rows(1L) != rows(3L))
   }

@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -44,6 +45,15 @@ class NgsiHttpSourceSpec extends SparkSpec {
     }
     assert(up, s"listener on $port never came up")
   }
+
+  /** The bodies `s` serves from `parts`, in partition order. */
+  private def readAll(s: NgsiHttpMicroBatchStream, parts: Array[InputPartition]): Seq[String] =
+    parts.toSeq.flatMap { p =>
+      val r = s.createReaderFactory().createReader(p)
+      val out = scala.collection.mutable.ArrayBuffer[String]()
+      while (r.next()) out += r.get().getUTF8String(0).toString
+      out
+    }
 
   private def post(port: Int, body: String, headers: Map[String, String]): Int = {
     val b = HttpRequest.newBuilder(new URI(s"http://127.0.0.1:$port/notify"))
@@ -347,6 +357,30 @@ class NgsiHttpSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a body over 8 MiB gets 413 and is neither buffered nor captured; the next post lands") {
+    val port = freePort()
+    val dir = java.nio.file.Files.createTempDirectory("ngsi-http-413").toFile
+    dir.deleteOnExit()
+    val stream = new NgsiHttpMicroBatchStream(port, Some(dir.toString))
+    try {
+      waitListening(port)
+      def ringRecords = stream.metrics(java.util.Optional.empty()).get("ringRecords")
+      def captured = dir.listFiles().toSeq.sortBy(_.getName)
+        .map(f => f.getName -> java.nio.file.Files.readString(f.toPath))
+      assert(post(port, notification, Map.empty) == 200)
+      val (ringBefore, capturedBefore) = (ringRecords, captured)
+      // valid JSON, one byte over the cap: the refusal is the size check's
+      val huge = "{\"pad\":\"" + "x" * (NgsiHttpSource.MaxBodyBytes + 1 - 10) + "\"}"
+      assert(huge.length == NgsiHttpSource.MaxBodyBytes + 1)
+      assert(post(port, huge, Map.empty) == 413)
+      assert(ringRecords == ringBefore, "a refused body must not be buffered")
+      assert(captured == capturedBefore, "a refused body must not be captured")
+      assert(post(port, notification, Map.empty) == 200)
+      assert(ringRecords == "2")
+      assert(captured.map(_._2.linesIterator.size).sum == 2)
+    } finally stream.stop()
+  }
+
   test("restart over a torn capture tail recovers every acked event and drops the torn one") {
     // a driver crash between write and fsync can tear the FINAL line of
     // the capture file that was open; that event was never acked (sync
@@ -508,12 +542,7 @@ class NgsiHttpSourceSpec extends SparkSpec {
       assert(s.latestOffset().asInstanceOf[SeqOffset].n == 12L,
         "restarted source must number the full capture history")
       def serve(lo: Long, hi: Long): Seq[String] =
-        s.planInputPartitions(SeqOffset(lo), SeqOffset(hi)).flatMap { p =>
-          val r = s.createReaderFactory().createReader(p)
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          while (r.next()) out += r.get().getUTF8String(0).toString
-          out
-        }.toSeq
+        readAll(s, s.planInputPartitions(SeqOffset(lo), SeqOffset(hi)))
       // mid-file-1 -> mid-file-2 (straddles one boundary)
       assert(serve(3, 7) == (3 until 7).map(body))
       // mid-file-1 -> mid-file-3 (spans the whole middle file)
@@ -601,7 +630,6 @@ class NgsiHttpSourceSpec extends SparkSpec {
 
   test("live-slice chunking: a drained ring plans multiple bounded partitions, " +
     "chunk boundaries invisible in the stream") {
-    import org.apache.spark.sql.connector.read.InputPartition
     val port = freePort()
     // per-record heap estimate is 88 bytes (12-char body, headerless);
     // a 200-byte chunk budget admits 3 records per chunk (88 < 200,
@@ -621,12 +649,7 @@ class NgsiHttpSourceSpec extends SparkSpec {
         case _ => false
       }, "every live partition must respect the chunk budget")
       // chunk boundaries must not reorder, drop, or duplicate records
-      val replayed = parts.flatMap { p: InputPartition =>
-        val r = stream.createReaderFactory().createReader(p)
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        while (r.next()) out += r.get().getUTF8String(0).toString
-        out
-      }.toSeq
+      val replayed = readAll(stream, parts)
       assert(replayed == (0 until 10).map(body),
         "chunk boundaries leaked into the live stream")
       // steady state: a small batch still plans exactly one partition
@@ -645,7 +668,6 @@ class NgsiHttpSourceSpec extends SparkSpec {
     // is numbered below the checkpoint; the regression batch
     // [checkpoint, staleLatest) then commits and must NOT trim the acked
     // record (the first-call-wins rebase lost it here, timing-dependent).
-    import org.apache.spark.sql.connector.read.InputPartition
     val port = freePort()
     val s = new NgsiHttpMicroBatchStream(port, None)
     try {
@@ -660,12 +682,7 @@ class NgsiHttpSourceSpec extends SparkSpec {
       // the acked post renumbered past the checkpoint, delivered exactly once
       val latest = s.latestOffset().asInstanceOf[SeqOffset]
       assert(latest.n == 5L, s"rebase must slide the ring past the checkpoint, tail=${latest.n}")
-      val rows = s.planInputPartitions(SeqOffset(4), latest).flatMap { p: InputPartition =>
-        val r = s.createReaderFactory().createReader(p)
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        while (r.next()) out += r.get().getUTF8String(0).toString
-        out
-      }.toSeq
+      val rows = readAll(s, s.planInputPartitions(SeqOffset(4), latest))
       assert(rows == Seq("""{"ev":"X"}"""), s"acked pre-restore post lost: $rows")
       s.commit(latest)
       assert(s.latestOffset().asInstanceOf[SeqOffset].n == 5L)
@@ -683,7 +700,6 @@ class NgsiHttpSourceSpec extends SparkSpec {
     // rebase exact: a foreign-stamped (or legacy bare-long) offset IS a
     // restored position, whatever was minted meanwhile; a self-minted
     // offset never rebases.
-    import org.apache.spark.sql.connector.read.InputPartition
     val port = freePort()
     val s = new NgsiHttpMicroBatchStream(port, None)
     try {
@@ -699,13 +715,7 @@ class NgsiHttpSourceSpec extends SparkSpec {
       val latest = s.latestOffset().asInstanceOf[SeqOffset]
       assert(latest.n == 5L,
         s"rebase defeated by pre-restore mints, tail=${latest.n}")
-      val rows = s.planInputPartitions(SeqOffset(2), latest)
-        .flatMap { p: InputPartition =>
-          val r = s.createReaderFactory().createReader(p)
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          while (r.next()) out += r.get().getUTF8String(0).toString
-          out
-        }.toSeq
+      val rows = readAll(s, s.planInputPartitions(SeqOffset(2), latest))
       assert(rows == (0 until 3).map(body),
         s"acked pre-restore posts lost: $rows")
       s.commit(latest)
@@ -771,7 +781,6 @@ class NgsiHttpSourceSpec extends SparkSpec {
 
   test("slow consumer: ingest ring is byte-bounded, 429s past the cap, " +
     "drains and recovers with every ACKED post delivered exactly once") {
-    import org.apache.spark.sql.connector.read.InputPartition
     val port = freePort()
     // per-record cost = 2 × (body.length + service + servicePath) + 64
     // (heap estimate: UTF-16 chars are 2 bytes wide); bodies are 12
@@ -798,15 +807,8 @@ class NgsiHttpSourceSpec extends SparkSpec {
       assert(stream.refusedCount == 14L,
         s"expected 14 counted refusals, got ${stream.refusedCount}")
 
-      def readAll(parts: Array[InputPartition]): Seq[String] =
-        parts.flatMap { p =>
-          val r = stream.createReaderFactory().createReader(p)
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          while (r.next()) out += r.get().getUTF8String(0).toString
-          out
-        }.toSeq
       // the consumer catches up: one micro-batch drains the ring
-      val first = readAll(stream.planInputPartitions(SeqOffset(0), SeqOffset(6)))
+      val first = readAll(stream, stream.planInputPartitions(SeqOffset(0), SeqOffset(6)))
       assert(first == (0 until 6).map(body),
         "drained batch must be the acked posts, in order")
       stream.commit(SeqOffset(6))
@@ -823,7 +825,7 @@ class NgsiHttpSourceSpec extends SparkSpec {
         while (code == 429 && drains < 10) {
           val upto = stream.latestOffset().asInstanceOf[SeqOffset]
           assert(upto.n - next <= 6L, "ring grew past its byte cap")
-          delivered ++= readAll(
+          delivered ++= readAll(stream,
             stream.planInputPartitions(SeqOffset(next), upto))
           stream.commit(upto); next = upto.n
           drains += 1
@@ -832,7 +834,7 @@ class NgsiHttpSourceSpec extends SparkSpec {
         assert(code == 200, s"retry of ${body(i)} never acked")
       }
       val fin = stream.latestOffset().asInstanceOf[SeqOffset]
-      delivered ++= readAll(stream.planInputPartitions(SeqOffset(next), fin))
+      delivered ++= readAll(stream, stream.planInputPartitions(SeqOffset(next), fin))
       stream.commit(fin)
       assert(delivered.toSeq == (6 until 20).map(body),
         "retried posts must each appear exactly once, in ack order")
